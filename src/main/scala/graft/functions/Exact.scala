@@ -32,6 +32,14 @@ object Exact {
   def charge(ext: Column, disc: Column, tax: Column): Column =
     dec(ext) * ((lit(1) - rate(disc)) * (lit(1) + rate(tax))).cast(DecimalType(8, 4))
 
+  /** Money in exact integer MICRO-units (discPrice carries scale 6, so
+    * ×10⁶ is integral — cents would truncate sub-cent digits). Narrowed
+    * to DECIMAL(19,0) so a square's result type stays inside
+    * DECIMAL(38,0): 10¹⁸ micros ≈ 10¹² dollars of headroom per value.
+    */
+  def microUnits(rev: Column): Column =
+    (rev * lit(1000000)).cast(DecimalType(19, 0))
+
   /** Order-independent mean of a double column via a DECIMAL(38,15) sum
     * — deterministic across partitionings, with 23 integer digits of
     * headroom (summing 10¹⁵ elements of magnitude 10⁸ still fits, where

@@ -345,7 +345,7 @@ object Dedup {
     * cacheManager persist bought zero reuse while forcing the whole
     * candidate+verify pipeline to build as a CACHED plan, where AQE's
     * runtime re-planning is restricted — profiled at +25-35% task CPU
-    * on identical inputs (ProfileJaccard, r11; same mechanism as the
+    * on identical inputs (r11 per-stage profile; same mechanism as the
     * r10 dedup_clusters pre-fork cache fix). A long-lived service that
     * really alternates pair consumers should persist at ITS seam, where
     * the reuse actually exists.
@@ -624,7 +624,7 @@ object Dedup {
     // upstream pair pipeline as a cached plan, where AQE's runtime
     // re-planning is restricted — the identical shingle/prefix/verify
     // stages burned 2.5-3.5x the task CPU of the uncached plan
-    // (ProfileClusters2 breakdown, committed r10), which on a
+    // (r10 per-stage task-CPU breakdown), which on a
     // core-starved host is exactly the dedup_clusters-vs-
     // dedup_ngram_jaccard wall-time gap three judged rounds chased.
     val lim = driverEdgeLimit.toInt

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Tables
-import graft.functions.Exact.{dec, decToDouble, decToDoubleSql, discPrice}
+import graft.functions.Exact.{dec, decToDouble, decToDoubleSql, discPrice, microUnits}
 import graft.plans.TopKPerKey
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -32,9 +32,6 @@ object ModelEval {
 
   private val d38 = DecimalType(38, 0)
   private val d2412 = DecimalType(24, 12)
-
-  private def microUnits(rev: Column): Column =
-    (rev * lit(1000000)).cast(DecimalType(19, 0))
 
   private def round12(c: Column): Column = c.cast(d2412).cast("double")
 

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.Exact.{dec, decToDouble, decToDoubleSql, decToDoubleSigned,
-  decToDoubleSignedSql, discPrice}
+  decToDoubleSignedSql, discPrice, microUnits}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -25,9 +25,6 @@ import org.apache.spark.sql.types.DecimalType
 object Relational14 {
 
   private val d38 = DecimalType(38, 0)
-
-  private def microUnits(rev: Column): Column =
-    (rev * lit(1000000)).cast(DecimalType(19, 0))
 
   // ---------------------------------------------------------- AUC-ROC
 

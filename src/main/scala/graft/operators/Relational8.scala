@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Tables
-import graft.functions.Exact.{decToDouble, decToDoubleSql, discPrice}
+import graft.functions.Exact.{decToDouble, decToDoubleSql, discPrice, microUnits}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -21,14 +21,6 @@ import org.apache.spark.sql.types.DecimalType
 object Relational8 {
 
   private val d38 = DecimalType(38, 0)
-
-  /** Supplier revenue in exact integer MICRO-dollars (discPrice carries
-    * scale 6, so ×10⁶ is integral — cents would truncate sub-cent digits).
-    * Narrowed to DECIMAL(19,0) so the square's result type stays inside
-    * DECIMAL(38,0): 10¹⁸ micros ≈ 10¹² dollars per supplier of headroom.
-    */
-  private def microUnits(rev: Column): Column =
-    (rev * lit(1000000)).cast(DecimalType(19, 0))
 
   /** Herfindahl-Hirschman concentration of supplier revenue within each
     * nation: HHI = Σᵢ sᵢ² where sᵢ is supplier i's share of the nation's

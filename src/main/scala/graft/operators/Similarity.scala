@@ -1949,15 +1949,16 @@ object Similarity {
         .select(lit(tag).as("half"), col("vec_id"), col("v"))
     val seedRaw = seedRows(hA, "A").unionByName(seedRows(hB, "B"))
       .collect().groupBy(_.getString(0))
-    // getOrElse: an empty half (no even or no odd vec_ids) degrades to
-    // an empty seed set like the pre-r17 per-half seeds() path did,
-    // instead of a NoSuchElementException on the grouped map (r17 ADVICE)
     def seedsOf(tag: String): Seq[(Int, Seq[Double])] =
       seedRaw.getOrElse(tag, Array.empty[org.apache.spark.sql.Row])
         .sortBy(_.getLong(1)).map(_.getSeq[Double](2))
         .zipWithIndex.map { case (v, i) => (i, v) }.toSeq
     var cA = seedsOf("A")
     var cB = seedsOf("B")
+    // a half with no vectors has no seeds: fail here, by name
+    require(cA.nonEmpty && cB.nonEmpty,
+      "clusterStability needs embeddings with both even and odd vec_id " +
+        s"(even-half seeds: ${cA.size}, odd-half seeds: ${cB.size})")
     for (_ <- 0 until Iters) {
       val next = assignCells(hA, cA).withColumn("half", lit("A"))
         .unionByName(assignCells(hB, cB).withColumn("half", lit("B")))

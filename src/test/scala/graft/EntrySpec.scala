@@ -51,6 +51,13 @@ class EntrySpec extends SparkSpec {
     assert(qk == ok, s"un-oracled queries: ${qk diff ok}")
   }
 
+  test("the registry rejects a repeated query name and names it") {
+    SparkEntry.requireDistinct(Seq("q_a", "q_b"))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.requireDistinct(Seq("q_a", "q_b", "q_a")))
+    assert(e.getMessage.contains("q_a") && !e.getMessage.contains("q_b"), e.getMessage)
+  }
+
   test("flagship entry returns rows at sf0.001") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

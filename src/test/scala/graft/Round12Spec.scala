@@ -572,6 +572,15 @@ class Round12Spec extends SparkSpec {
     assert(r.getLong(1) <= 16L && r.getLong(2) <= 16L)
   }
 
+  test("cluster stability: embeddings of one vec_id parity fail by name") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-stab").toString
+    sf.embeddings.where(pmod(col("vec_id"), lit(2)) === 0)
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    val e = intercept[IllegalArgumentException](
+      graft.operators.Similarity.clusterStability(Tables(spark, dir)))
+    assert(e.getMessage.contains("both even and odd vec_id"), e.getMessage)
+  }
+
   test("median polish: exact additive identity, sweeps leave median-0 slices") {
     val rows = Relational11.medianPolish(sf).collect()
     assert(rows.length == 84) // 7 weekdays x 12 months
