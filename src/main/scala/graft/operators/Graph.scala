@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Tables
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Iterative graph algorithms over DataFrames — the Pregel-shaped
@@ -186,24 +186,25 @@ object Graph {
     val tele = cparts.join(broadcast(pick), col("o_custkey") === col("pc"))
       .select(col("l_partkey").as("tnode"))
     val sRow = tele.agg(count(lit(1)).as("s"))
-    // per-node teleport mass: Mass div |S| on teleport nodes, else 0
+    // per-node teleport mass: Mass div |S| on teleport nodes, else 0.
+    // Pinned once: the edge attach below AND the rank seed read it, so
+    // the orders⋈lineitem teleport pick runs in this one action instead
+    // of again inside the final query's lazy seed
     val tm = deg.join(tele, col("u") === col("tnode"), "left")
       .crossJoin(broadcast(sRow))
       .select(col("u").as("node"), col("d"),
         when(col("tnode").isNotNull, expr(s"${Mass}L div s"))
           .otherwise(lit(0L)).as("tm"))
-    // receiver degree AND receiver teleport mass ride the edges;
-    // pre-partitioned by the superstep join key so every round's join is
-    // exchange-free. Pre-partitioning pays off HERE because this loop's
-    // rank side is not broadcastable (full node set every round) — the
-    // co-purchase pageRank keeps its edges unpartitioned for the
-    // opposite reason (its superstep joins broadcast the rank side, so
-    // a repartition there measured as a pure regression)
+      .localCheckpoint(true)
+    // receiver degree AND receiver teleport mass ride the edges. Not
+    // pre-partitioned by the superstep key: AQE's final plan re-shuffles
+    // the checkpointed edges by u and broadcasts them into every
+    // superstep join anyway, so a repartition only adds a shuffle to this
+    // pin (the finding behind [[pageRank]]'s unpartitioned edges too)
     val edgesD = edges
       .join(tm.select(col("node").as("dv"), col("d").as("vd"),
         col("tm").as("vtm")), col("v") === col("dv"))
       .select(col("u"), col("v"), col("vd"), col("vtm"))
-      .repartition(col("u"))
       .localCheckpoint(true)
     var ranks = tm.select(col("node"), col("d"), col("tm").as("r"))
     for (i <- 1 to Iters) {
@@ -1119,18 +1120,30 @@ object Graph {
     * trees, the standard "who sits on the shortest paths" ranking for
     * bridge detection. Forward phase: ONE level-synchronous BFS carries
     * all sources at once (state keyed (source, node) — k× rows, same
-    * round count), per level one edge join + one sigma sum-fold
-    * (σ(w) = Σ σ(pred)) with an anti-join against the visited set, to
-    * the fixed [[BcDepth]] horizon. Backward phase: Brandes'
-    * accumulation δ(v) = Σ_{w∈succ} σ(v)/σ(w)·(1+δ(w)) evaluated in
-    * EXACT INTEGER MICROS — each term is `(σ_v·(10⁶+δ_w)) div σ_w`, so
-    * per-node sums are order-free integer adds and the score is
-    * engine-portable bit-for-bit (the graph_hits femto convention; a
-    * double Σ here would be partitioning-dependent). Every level pins
-    * via localCheckpoint (the fixpoint convention — two consumers per
-    * level: the next round and the final union).
+    * round count), per level one edge join + one aggregation to the
+    * fixed [[BcDepth]] horizon. Backward phase: Brandes' accumulation
+    * δ(v) = Σ_{w∈succ} σ(v)/σ(w)·(1+δ(w)) evaluated in EXACT INTEGER
+    * MICROS — each term is `(σ_v·(10⁶+δ_w)) div σ_w`, so per-node sums
+    * are order-free integer adds and the score is engine-portable
+    * bit-for-bit (the graph_hits femto convention; a double Σ here
+    * would be partitioning-dependent).
     *
-    * Scale: 2·[[BcDepth]] edge-linear shuffles, state ≤ sources ×
+    * The per-level aggregation does three jobs at once. The edge set is
+    * symmetric, so a neighbour of a depth r−1 node sits at depth r−2,
+    * r−1 or r: levels r−1 and r−2 join the `groupBy(s, node)` as marker
+    * rows (`max(seen)`) and drop their keys, which is exactly the
+    * anti-join against every visited node without a visited set. The
+    * same fold sums σ and records each fresh node's shortest-path
+    * predecessors `(p, σ_p)` with `collect_list`, so a backward level
+    * explodes the deeper level's predecessor lists into Brandes terms
+    * and folds them with its own rows in one more `groupBy(s, node)` —
+    * no edge join and no join back to the level. Every level pins via
+    * one eager localCheckpoint (the fixpoint convention) whose row
+    * count, read by `observe` on that same action, drives the early
+    * exit.
+    *
+    * Scale: [[BcDepth]] edge-linear shuffles forward and one
+    * predecessor-linear shuffle per level backward, state ≤ sources ×
     * nodes, no pair space; the sampled-sources design is exactly how
     * betweenness is run on big graphs (exact all-pairs is O(nm)).
     */
@@ -1143,10 +1156,14 @@ object Graph {
     if (srcs.isEmpty)
       return Seq.empty[(Long, Long, Double)]
         .toDF("p_partkey", "bc_micros", "bc")
-    val f0 = srcs.map(s => (s, s, 1L)).toDF("s", "node", "sigma")
-      .withColumn("dist", lit(0)).localCheckpoint(true)
+    val pred = "struct<p:bigint,sp:bigint>"
+    // level 0: the sources themselves (no predecessors — they never score)
+    val f0 = srcs.map(s => (s, s, 1L)).toDF("s", "node", "sigma").localCheckpoint(true)
     var levels = Vector(f0)
-    var visited = f0.select("s", "node").localCheckpoint(true)
+    // a level's marker rows: seen = 1, no σ, no predecessor
+    def seen(level: DataFrame): DataFrame =
+      level.select(col("s"), col("node"), lit(1).as("seen"),
+        lit(null).cast("long").as("sigma"), lit(null).cast(pred).as("pred"))
     // early exit once every source's frontier drains — an empty level
     // contributes nothing to either phase, so the result is identical
     // to running the oracle's full fixed unroll, but a small-diameter
@@ -1156,48 +1173,51 @@ object Graph {
     while (r <= BcDepth && !drained) {
       val expanded = levels.last
         .join(edges, col("node") === col("u"))
-        .select(col("s"), col("v").as("nnode"), col("sigma"))
-      val fresh = expanded
-        .join(visited.withColumnRenamed("node", "nnode"),
-          Seq("s", "nnode"), "left_anti")
-        .groupBy(col("s"), col("nnode"))
-        .agg(sum(col("sigma")).as("sigma"))
-        .select(col("s"), col("nnode").as("node"), col("sigma"))
-        .withColumn("dist", lit(r))
+        .select(col("s"), col("v").as("node"), lit(0).as("seen"),
+          col("sigma"), struct(col("node").as("p"), col("sigma").as("sp")).as("pred"))
+      val markers = levels.takeRight(2).map(seen).reduce(_ unionByName _)
+      val rows = new Observation(s"bc_level_$r")
+      val fresh = expanded.unionByName(markers)
+        .groupBy(col("s"), col("node"))
+        .agg(max(col("seen")).as("seen"), sum(col("sigma")).as("sigma"),
+          collect_list(col("pred")).as("preds"))
+        .where(col("seen") === 0)
+        .select(col("s"), col("node"), col("sigma"), col("preds"))
+        .observe(rows, count(lit(1)).as("n"))
         .localCheckpoint(true)
-      if (fresh.isEmpty) drained = true
-      else {
-        levels :+= fresh
-        visited = visited.union(fresh.select("s", "node")).localCheckpoint(true)
-      }
+      if (rows.get("n") == 0L) drained = true
+      else levels :+= fresh
       r += 1
     }
+    // backward: level l's deltas fold the Brandes terms of ONLY the
+    // immediately deeper level (successors of a dist-l node on a
+    // shortest path sit at dist l+1 by construction) — each deeper row
+    // sends one term to each of its recorded predecessors
     val maxL = levels.size - 1
-    // backward: each iteration consumes ONLY the immediately deeper
-    // level's deltas (successors of a dist-l node on a shortest path
-    // sit at dist l+1 by construction)
     var deltas = levels(maxL)
-      .select(col("s"), col("node"), col("sigma"), col("dist"),
-        lit(0L).as("delta"))
+      .select(col("s"), col("node"), col("sigma"), col("preds"), lit(0L).as("delta"))
     val acc = scala.collection.mutable.ArrayBuffer(deltas)
-    for (l <- maxL - 1 to 0 by -1) {
-      val succTerms = levels(l)
-        .join(edges, col("node") === col("u"))
-        .select(col("s"), col("node"), col("sigma"), col("v"))
-        .join(deltas.select(col("s"), col("node").as("v"),
-          col("sigma").as("wsig"), col("delta").as("wdelta")), Seq("s", "v"))
-        .select(col("s"), col("node"),
-          expr(s"(sigma * ($BcScale + wdelta)) div wsig").as("term"))
-        .groupBy("s", "node").agg(sum(col("term")).as("accTerm"))
+    for (l <- maxL - 1 to 1 by -1) {
+      val terms = deltas
+        .select(col("s"), col("sigma").as("wsig"), col("delta").as("wdelta"),
+          explode(col("preds")).as("pr"))
+        .select(col("s"), col("pr.p").as("node"),
+          lit(null).cast("long").as("sigma"),
+          lit(null).cast(s"array<$pred>").as("preds"),
+          expr(s"(pr.sp * ($BcScale + wdelta)) div wsig").as("term"))
       deltas = levels(l)
-        .join(succTerms, Seq("s", "node"), "left")
-        .select(col("s"), col("node"), col("sigma"), col("dist"),
-          coalesce(col("accTerm"), lit(0L)).as("delta"))
+        .select(col("s"), col("node"), col("sigma"), col("preds"), lit(0L).as("term"))
+        .unionByName(terms)
+        .groupBy(col("s"), col("node"))
+        .agg(max(col("sigma")).as("sigma"),
+          flatten(collect_list(col("preds"))).as("preds"),
+          sum(col("term")).as("delta"))
         .localCheckpoint(true)
       acc += deltas
     }
-    acc.reduce(_ unionByName _)
-      .where(col("dist") > 0)
+    // level 0 (the sources) never scores, so its deltas are not built;
+    // level 1 always exists (every source is an edge endpoint)
+    acc.map(_.select(col("node"), col("delta"))).reduce(_ union _)
       .groupBy("node")
       .agg(sum(col("delta")).cast("long").as("bc_micros"))
       .select(col("node").as("p_partkey"), col("bc_micros"),

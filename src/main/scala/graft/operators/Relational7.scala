@@ -20,10 +20,18 @@ object Relational7 {
     * heavy work is the one revenue aggregation. The share division is
     * the only floating step and is performed identically in the oracle.
     */
-  def abcAnalysis(t: Tables): DataFrame = {
-    val rev = t.lineitem
+  def abcAnalysis(t: Tables): DataFrame =
+    abcRanked(t.lineitem
       .groupBy("l_partkey")
-      .agg(sum(discPrice(col("l_extendedprice"), col("l_discount"))).as("rev"))
+      .agg(sum(discPrice(col("l_extendedprice"), col("l_discount"))).as("rev")))
+      .select(col("l_partkey"), col("revenue"), col("cum_share"), col("abc_class"))
+      .orderBy(col("revenue").desc, col("l_partkey"))
+
+  /** The ABC ranking of a per-part frame (`l_partkey`, exact decimal
+    * `rev`, any further per-part columns): adds `revenue` (double),
+    * `cum_share` and `abc_class` and keeps every input column, unordered.
+    */
+  private def abcRanked(rev: DataFrame): DataFrame = {
     // DISTRIBUTED cumulative sum (two-level prefix, no single-partition
     // window): range-partition on the report order, prefix within each
     // range, add the broadcast running offset of the preceding ranges.
@@ -72,9 +80,8 @@ object Relational7 {
         when(col("cum_share") <= 0.60, "A")
           .when(col("cum_share") <= 0.85, "B")
           .otherwise("C"))
-      .select(col("l_partkey"), col("rev").cast("double").as("revenue"),
-        col("cum_share"), col("abc_class"))
-      .orderBy(col("revenue").desc, col("l_partkey"))
+      .withColumn("revenue", col("rev").cast("double"))
+      .drop("bucket", "local_cum", "bucket_offset", "cum_rev", "total_rev")
   }
 
   val abcAnalysisSql: String =
@@ -633,10 +640,10 @@ object Relational7 {
   }
 
   /** ABC/XYZ matrix — the two-axis inventory segmentation every demand
-    * planner runs: ABC = revenue concentration class (reusing
-    * [[abcAnalysis]] unchanged), XYZ = demand VARIABILITY class from the
-    * squared coefficient of variation of each part's monthly quantity
-    * (X steady, Y variable, Z erratic). cv² is the exact integer
+    * planner runs: ABC = revenue concentration class (the
+    * [[abcAnalysis]] ranking, shared via `abcRanked`), XYZ = demand
+    * VARIABILITY class from the squared coefficient of variation of each
+    * part's monthly quantity (X steady, Y variable, Z erratic). cv² is the exact integer
     * `((n·Σq² − (Σq)²) · 10⁶) div (Σq)²` over per-month quantity sums
     * (population variance over mean², no sqrt, no floats), so the class
     * cut is bit-portable. Months without demand do not exist as rows —
@@ -644,20 +651,25 @@ object Relational7 {
     * boundary-degenerate) matrix with part counts and revenue mass.
     */
   def abcXyz(t: Tables): DataFrame = {
-    val abc = abcAnalysis(t).select(col("l_partkey"), col("abc_class"), col("revenue"))
+    // ONE lineitem aggregation carries both axes: per (part, month)
+    // revenue and quantity, rolled up per part into the ABC revenue and
+    // the cv² moments — no second fact scan, no join of the two axes
     val monthly = t.lineitem
       .groupBy(col("l_partkey"), date_format(col("l_shipdate"), "yyyy-MM").as("ym"))
-      .agg(sum(col("l_quantity").cast("long")).as("q"))
-    val cv2 = monthly.groupBy("l_partkey")
-      .agg(count(lit(1)).as("n"), sum(col("q")).as("s1"),
+      .agg(sum(discPrice(col("l_extendedprice"), col("l_discount"))).as("mrev"),
+        sum(col("l_quantity").cast("long")).as("q"))
+    // the re-summed exact revenue is cast back to DECIMAL(31,6), the type
+    // of abcAnalysis's single-pass sum, so the share division is unchanged
+    val perPart = monthly.groupBy("l_partkey")
+      .agg(sum(col("mrev")).cast(org.apache.spark.sql.types.DecimalType(31, 6)).as("rev"),
+        count(lit(1)).as("n"), sum(col("q")).as("s1"),
         sum(col("q") * col("q")).as("s2"))
-      .select(col("l_partkey"),
-        expr("((n * s2 - s1 * s1) * 1000000L) div (s1 * s1)").as("cv2_ppm"))
+    abcRanked(perPart)
+      .withColumn("cv2_ppm", expr("((n * s2 - s1 * s1) * 1000000L) div (s1 * s1)"))
       .withColumn("xyz_class",
         when(col("cv2_ppm") < 250000L, "X")
           .when(col("cv2_ppm") < 1000000L, "Y")
           .otherwise("Z"))
-    abc.join(cv2, Seq("l_partkey"))
       .groupBy("abc_class", "xyz_class")
       // the per-part revenue double is an exactly-representable SCALE-6
       // decimal (< 2^53 micros); casting back to DECIMAL(24,6) before

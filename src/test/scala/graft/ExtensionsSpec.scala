@@ -7,12 +7,8 @@ class ExtensionsSpec extends AnyFunSuite {
 
   private lazy val spark: SparkSession = {
     // dedicated session: extensions must be installed at build time
-    val s = SparkSession.builder()
-      .master("local[2]")
+    val s = GraftSession.builder(master = "local[2]", shufflePartitions = 2)
       .appName("graft-ext")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .withExtensions(new graft.plans.GraftExtensions)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")

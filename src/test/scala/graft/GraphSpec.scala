@@ -210,6 +210,32 @@ class GraphSpec extends SparkSpec {
     assert(got.maxBy(_._2)._1 == 3L, s"center must rank first: $got")
   }
 
+  test("betweenness: triangle + 4-cycle + second component match the replay, with an early drain") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-bc-mixed").toString
+    // sources are the 4 smallest ids {1,2,3,4}. Component one: triangle
+    // 1-2-5 (a neighbour at the same level and one at level r-2 must both
+    // be excluded) hung on the 4-cycle 5-6-8-7 (node 8 has two shortest-
+    // path predecessors, so σ = 2 from sources 1, 2). Component two: the
+    // path 3-4-9 holds the other two sources and drains after 2 levels;
+    // every BFS drains by level 4, well inside the depth-6 horizon.
+    val edgeList = Seq(1L -> 2L, 1L -> 5L, 2L -> 5L, 5L -> 6L, 6L -> 8L, 8L -> 7L,
+      7L -> 5L, 3L -> 4L, 4L -> 9L)
+    edgeList.zipWithIndex
+      .flatMap { case ((a, b), i) => Seq(2L * i, 2L * i + 1).flatMap(o => Seq((o, a), (o, b))) }
+      .toDF("l_orderkey", "l_partkey")
+      .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+    val got = Graph.betweenness(Tables(spark, dir)).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val adj = (edgeList ++ edgeList.map(_.swap)).groupBy(_._1)
+      .view.mapValues(_.map(_._2)).toMap
+    val exp = bcReplay(adj)
+    assert(got == exp, s"got $got expected $exp")
+    // 5 bridges the triangle to the cycle; 4 is the middle of the path;
+    // 8 is scored (zero) although it is only ever a leaf of the BFS trees
+    assert(got(5L) > got(6L) && got(4L) > 0L && got(8L) == 0L, s"$got")
+  }
+
   test("betweenness on the sf graph matches the in-memory Brandes replay") {
     val items = sf.lineitem.select("l_orderkey", "l_partkey").collect()
       .map(r => (r.getLong(0), r.getLong(1))).distinct

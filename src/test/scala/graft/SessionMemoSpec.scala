@@ -8,9 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 class SessionMemoSpec extends AnyFunSuite {
 
   private def sparkFor(tag: String) =
-    org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").appName(s"memo-$tag")
-      .config("spark.ui.enabled", "false")
+    GraftSession.builder(master = "local[2]", shufflePartitions = 2)
+      .appName(s"memo-$tag")
       .getOrCreate()
 
   test("same (session, dir) computes once; distinct dirs compute separately") {

@@ -9,12 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 class TopKPerKeySpec extends AnyFunSuite {
 
   private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftSession.builder(master = "local[4]", shufflePartitions = 4)
       .appName("graft-topk")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .withExtensions(new graft.plans.GraftExtensions)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
