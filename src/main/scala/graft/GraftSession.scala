@@ -11,6 +11,9 @@ import org.apache.spark.sql.SparkSession
   *    on a 1000-executor cluster you would raise it or rely on AQE).
   *  - `files.maxPartitionBytes` sizes scan tasks so a 100 TB input splits
   *    into bounded units of work.
+  *  - Small loads pay per path and per file, not per byte: path sets up
+  *    to [[DriverListingMaxPaths]] are listed on the driver, and `file:`
+  *    paths go through [[graft.sources.NoForkLocalFileSystem]].
   */
 object GraftSession {
 
@@ -40,6 +43,9 @@ object GraftSession {
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         sys.env.getOrElse("SPARK_GRAFT_OBJ_AGG_FALLBACK", "65536"))
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+        DriverListingMaxPaths.toString)
+      .config("spark.hadoop.fs.file.impl", classOf[graft.sources.NoForkLocalFileSystem].getName)
       .config("spark.ui.enabled", "false")
 
   /** Size of Spark's JVM-wide generated-class cache
@@ -55,6 +61,17 @@ object GraftSession {
     * for a session built here before the first query compiles.
     */
   val CodegenCacheEntries = 1000
+
+  /** Path sets up to this size are listed on the driver
+    * (`spark.sql.sources.parallelPartitionDiscovery.threshold`, default
+    * 32); larger ones get a distributed listing job. The benchmark's
+    * inventory glob expands to 182 CSV files, and its listing job took
+    * 0.77–1.15 s on a 4-core host for 28–98 ms of task time; reading
+    * back 83 month partitions took another 0.36–0.55 s. The trade: on an
+    * object store the driver lists these paths one by one, so a prefix
+    * of a few hundred objects costs that many sequential list calls.
+    */
+  val DriverListingMaxPaths = 1024
 
   /** Shared session for tests / local runs. */
   def get(): SparkSession = {

@@ -19,9 +19,21 @@ object Sinks {
   /** Month-partitioned, time-ordered fact write (fact_sales twin). */
   def writeMonthPartitioned(df: DataFrame, tsCol: String, path: String,
       orderCols: Seq[String]): Unit =
-    df.withColumn("ym", date_format(col(tsCol), "yyyyMM"))
-      .repartition(col("ym"))
-      .sortWithinPartitions(orderCols.map(col): _*)
+    writeMonths(df.withColumn("ym", date_format(col(tsCol), "yyyyMM")), path, orderCols)
+
+  /** Overwrites `path` with `df` partitioned by its `ym` column, each
+    * month file in `orderCols` order.
+    *  - The shuffle names its partition count (the one `repartition(col)`
+    *    would use), so AQE keeps one writer per shuffle partition instead
+    *    of coalescing a small load into a single task that writes every
+    *    month file in turn.
+    *  - The sort leads with `ym`, the ordering the partitioned write
+    *    requires. Without it the planner adds its own `Sort [ym]` and
+    *    drops this one, leaving month files in shuffle order.
+    */
+  private def writeMonths(df: DataFrame, path: String, orderCols: Seq[String]): Unit =
+    df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions, col("ym"))
+      .sortWithinPartitions(("ym" +: orderCols).map(col): _*)
       .write
       .mode("overwrite")
       .partitionBy("ym")
@@ -120,8 +132,10 @@ object Sinks {
   /** Upsert (merge) into a month-partitioned parquet fact table:
     * union the update batch with the existing rows of ONLY the touched
     * partitions, compact to the latest version per key, and rewrite just
-    * those partitions (dynamic partition overwrite). At 100 TB the cost
-    * scales with the touched months, not the table.
+    * those partitions (dynamic partition overwrite), each month file in
+    * `(tsCol, keyCol)` order through the same writer as
+    * [[writeMonthPartitioned]]. At 100 TB the cost scales with the
+    * touched months, not the table.
     */
   def upsertByKey(spark: org.apache.spark.sql.SparkSession, path: String,
       updates: DataFrame, keyCol: String, tsCol: String): Unit = {
@@ -150,7 +164,7 @@ object Sinks {
       .drop("_rn")
     val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try merged.write.mode("overwrite").partitionBy("ym").parquet(path)
+    try writeMonths(merged, path, Seq(tsCol, keyCol))
     finally prev.foreach(spark.conf.set("spark.sql.sources.partitionOverwriteMode", _))
   }
 

@@ -20,7 +20,9 @@ object Sources {
     *
     * `path` may be a glob (e.g. `s3://bucket/inventory/ ** / *.csv`): Spark's
     * file index does the prefix listing that the reference does with
-    * paginated ListObjectsV2 calls — distributed and parallel.
+    * paginated ListObjectsV2 calls — on the driver for up to
+    * [[graft.GraftSession.DriverListingMaxPaths]] paths, as a distributed
+    * job above that.
     * If the data carries no `date` column, it is inferred from the file
     * name (supports YYYY-MM-DD, YYYY_MM_DD, YYYYMMDD).
     */

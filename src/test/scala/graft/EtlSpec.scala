@@ -83,6 +83,29 @@ class EtlSpec extends SparkSpec {
     assert(salesDirs.nonEmpty && salesDirs.forall(_.startsWith("ym=")))
   }
 
+  test("month-partitioned loads keep every month file in the table's order") {
+    val out = java.nio.file.Files.createTempDirectory("graft-etl-order").toString
+    Etl.pipeline(sf, out)
+    def monthFiles(table: String): Seq[String] =
+      new java.io.File(s"$out/$table").listFiles().filter(_.isDirectory).toSeq
+        .flatMap(_.listFiles().filter(_.getName.endsWith(".parquet")).map(_.getPath))
+    val inventory = monthFiles("fact_inventory")
+    assert(inventory.size > 1)
+    inventory.foreach { f =>
+      val rows = spark.read.parquet(f)
+        .select(col("date").cast("string"), col("product_id"), col("warehouse_id"))
+        .as[(String, Long, String)].collect().toSeq
+      assert(rows == rows.sorted, f)
+    }
+    val sales = monthFiles("fact_sales")
+    assert(sales.nonEmpty)
+    sales.foreach { f =>
+      val rows = spark.read.parquet(f).select(unix_micros(col("ts")), col("event_id"))
+        .as[(Long, Long)].collect().toSeq
+      assert(rows == rows.sorted, f)
+    }
+  }
+
   test("sketch aggregates stay within the configured error of exact counts") {
     val df = graft.operators.Relational3.sketchAggs(sf)
     val rows = df.collect()

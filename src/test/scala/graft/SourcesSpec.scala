@@ -23,6 +23,25 @@ class SourcesSpec extends SparkSpec {
     assert(df.count() == 3)
   }
 
+  test("a csv glob of 40 files is listed on the driver, without a listing job") {
+    val dir = Files.createTempDirectory("graft-csv-list")
+    for (m <- 1 to 4; d <- 1 to 10) {
+      val sub = Files.createDirectories(Paths.get(dir.toString, "inventory", "2025", f"$m%02d"))
+      Files.writeString(sub.resolve(f"stock_wh-01_2025$m%02d$d%02d.csv"),
+        "product_id,warehouse_id,stock_units\n1,wh-01,10\n")
+    }
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+      "product_id BIGINT, warehouse_id STRING, stock_units INT")
+    val jobs = new JobCounter(spark)
+    try {
+      val (df, n) = jobs.count("csv-list") {
+        Sources.csvWithDateFromKey(spark, s"$dir/inventory/*/*/*.csv", Some(schema))
+      }
+      assert(n == 0, s"$n jobs")
+      assert(df.inputFiles.length == 40)
+    } finally jobs.close()
+  }
+
   test("csv source keeps an existing date column untouched") {
     val dir = Files.createTempDirectory("graft-csv2")
     Files.writeString(dir.resolve("stock_wh-01_20250101.csv"),
@@ -240,21 +259,37 @@ class SourcesSpec extends SparkSpec {
     import java.sql.Timestamp
     val out = Files.createTempDirectory("graft-upsert").toString + "/state"
     def row(id: Long, ts: String, v: Double) = (id, Timestamp.valueOf(ts), v)
+    // january's ids run against its timestamps, so key order is not ts order
     val base = Seq(
       row(1, "2024-01-10 00:00:00", 1.0),
       row(2, "2024-01-15 00:00:00", 2.0),
-      row(3, "2024-02-10 00:00:00", 3.0)).toDF("id", "ts", "v")
+      row(3, "2024-02-10 00:00:00", 3.0),
+      row(5, "2024-01-09 00:00:00", 5.0),
+      row(6, "2024-01-08 00:00:00", 6.0),
+      row(7, "2024-01-07 00:00:00", 7.0)).toDF("id", "ts", "v")
     Sinks.upsertByKey(spark, out, base, "id", "ts")
-    // update key 1 (jan partition), insert key 4 (mar partition)
+    // update keys 1 and 7 (jan partition), insert key 4 (mar partition)
     val batch = Seq(
       row(1, "2024-01-20 00:00:00", 10.0),
+      row(7, "2024-01-25 00:00:00", 70.0),
       row(4, "2024-03-01 00:00:00", 4.0)).toDF("id", "ts", "v")
     Sinks.upsertByKey(spark, out, batch, "id", "ts")
     val state = spark.read.parquet(out)
       .select("id", "v").as[(Long, Double)].collect().toMap
-    assert(state == Map(1L -> 10.0, 2L -> 2.0, 3L -> 3.0, 4L -> 4.0))
+    assert(state == Map(1L -> 10.0, 2L -> 2.0, 3L -> 3.0, 4L -> 4.0, 5L -> 5.0, 6L -> 6.0,
+      7L -> 70.0))
     val partitions = new java.io.File(out).listFiles().filter(_.isDirectory).map(_.getName).sorted
     assert(partitions.sameElements(Array("ym=202401", "ym=202402", "ym=202403")))
+    // every rewritten month file is in (ts, id) order
+    Seq("ym=202401", "ym=202403").foreach { ym =>
+      val files = new java.io.File(s"$out/$ym").listFiles().filter(_.getName.endsWith(".parquet"))
+      assert(files.nonEmpty)
+      files.foreach { f =>
+        val rows = spark.read.parquet(f.getPath)
+          .select(unix_micros(col("ts")), col("id")).as[(Long, Long)].collect().toSeq
+        assert(rows == rows.sorted, s"$f")
+      }
+    }
   }
 
   test("incremental extract pushes the watermark filter to the scan") {
