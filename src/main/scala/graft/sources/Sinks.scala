@@ -249,11 +249,17 @@ object Sinks {
         spark.read.parquet(path).unionByName(batchAgg)
           .groupBy(keyCols.map(col): _*).agg(merge.head, merge.tail: _*)
       } else batchAgg
-    // materialize the merge into cache BEFORE overwriting the path it
-    // reads from. Caveat for long-running clusters: if an executor dies
-    // mid-write, recompute would re-read the path being overwritten —
-    // production deployments should stage to a temp dir and swap; state
-    // is derived data either way, so the worst case is a re-merge.
+    overwriteStaged(merged, path)
+  }
+
+  /** Overwrite `path` with `merged`, a frame that may read `path` itself:
+    * the merge is materialized into cache BEFORE the overwrite deletes
+    * its input. Caveat for long-running clusters: if an executor dies
+    * mid-write, recompute would re-read the path being overwritten —
+    * production deployments should stage to a temp dir and swap; state
+    * is derived data either way, so the worst case is a re-merge.
+    */
+  private def overwriteStaged(merged: DataFrame, path: String): Unit = {
     val staged = merged.cache()
     staged.count()
     staged.write.mode("overwrite").parquet(path)
@@ -278,20 +284,14 @@ object Sinks {
     * served p50/p90 are identical to a from-scratch rebuild. State per
     * key is ≤ cap (cents, hash) pairs regardless of history size.
     *
-    * Same staging caveat as [[mergeAggState]]: the merge materializes
-    * into cache before overwriting the path it read from.
+    * Same staging caveat as [[mergeAggState]] ([[overwriteStaged]]).
     */
   def mergeKllState(spark: org.apache.spark.sql.SparkSession, path: String,
       batch: DataFrame, keyCols: Seq[String], hashCol: String,
-      valueCol: String, cap: Int): Unit = {
-    val merged = foldKllState(
+      valueCol: String, cap: Int): Unit =
+    overwriteStaged(foldKllState(
       if (fileExists(spark, path)) Some(spark.read.parquet(path)) else None,
-      batch, keyCols, hashCol, valueCol, cap)
-    val staged = merged.cache()
-    staged.count()
-    staged.write.mode("overwrite").parquet(path)
-    staged.unpersist(false)
-  }
+      batch, keyCols, hashCol, valueCol, cap), path)
 
   /** The fold itself, shared by the batch path above and the streaming
     * twin ([[graft.streaming.Streams.quantileStateStream]]): batch rows →

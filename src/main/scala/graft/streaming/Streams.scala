@@ -357,15 +357,25 @@ object Streams {
   def quantileStateStream(rows: DataFrame, keyCols: Seq[String],
       hashCol: String, valueCol: String, statePath: String, cap: Int)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    versionedStateStream(rows, statePath)(
+      graft.sources.Sinks.foldKllState(_, _, keyCols, hashCol, valueCol, cap))
+
+  /** The versioned-snapshot protocol behind the three sketch-state
+    * streams: each micro-batch is folded into the latest committed
+    * version below its own id and written as `v<batchId>`, then all but
+    * the latest two versions are pruned. `fold` takes (previous state,
+    * batch rows) and returns the new state.
+    */
+  private def versionedStateStream(rows: DataFrame, statePath: String)(
+      fold: (Option[DataFrame], DataFrame) => DataFrame)
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     rows.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        val prev = latestKllVersion(spark, statePath, below = Some(batchId))
+        val prev = latestStateVersion(spark, statePath, below = Some(batchId))
           .map(v => spark.read.parquet(s"$statePath/v$v"))
-        graft.sources.Sinks
-          .foldKllState(prev, batch, keyCols, hashCol, valueCol, cap)
-          .write.mode("overwrite").parquet(s"$statePath/v$batchId")
+        fold(prev, batch).write.mode("overwrite").parquet(s"$statePath/v$batchId")
         pruneStateVersions(spark, statePath, batchId)
         ()
       }
@@ -382,18 +392,8 @@ object Streams {
   def cmStateStream(rows: DataFrame, keyCols: Seq[String], itemCol: String,
       statePath: String, depth: Int = 4, width: Int = 256)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    rows.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val prev = latestKllVersion(spark, statePath, below = Some(batchId))
-          .map(v => spark.read.parquet(s"$statePath/v$v"))
-        graft.sources.Sinks
-          .foldCmState(prev, batch, keyCols, itemCol, depth, width)
-          .write.mode("overwrite").parquet(s"$statePath/v$batchId")
-        pruneStateVersions(spark, statePath, batchId)
-        ()
-      }
+    versionedStateStream(rows, statePath)(
+      graft.sources.Sinks.foldCmState(_, _, keyCols, itemCol, depth, width))
 
   /** Streaming KMV distinct-count maintenance — completes the live
     * mergeable-sketch trio (quantiles [[quantileStateStream]] /
@@ -410,18 +410,8 @@ object Streams {
   def kmvStateStream(rows: DataFrame, keyCols: Seq[String], itemCol: String,
       statePath: String, k: Int = 64)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    rows.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val prev = latestKllVersion(spark, statePath, below = Some(batchId))
-          .map(v => spark.read.parquet(s"$statePath/v$v"))
-        graft.sources.Sinks
-          .foldKmvState(prev, batch, keyCols, itemCol, k)
-          .write.mode("overwrite").parquet(s"$statePath/v$batchId")
-        pruneStateVersions(spark, statePath, batchId)
-        ()
-      }
+    versionedStateStream(rows, statePath)(
+      graft.sources.Sinks.foldKmvState(_, _, keyCols, itemCol, k))
 
   /** Retention for versioned state snapshots: keep the current version
     * and its predecessor, drop everything older.
@@ -442,7 +432,7 @@ object Streams {
     * `below` — a replayed batch must fold from its predecessor, never
     * from its own partial output.
     */
-  def latestKllVersion(spark: org.apache.spark.sql.SparkSession,
+  def latestStateVersion(spark: org.apache.spark.sql.SparkSession,
       statePath: String, below: Option[Long] = None): Option[Long] = {
     val p = new org.apache.hadoop.fs.Path(statePath)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
@@ -492,7 +482,7 @@ object Streams {
       .dropDuplicatesWithinWatermark(Seq("simhash"))
 
   /** Streaming multimodal decode: the SAME batched codec seam the batch
-    * queries use ([[graft.operators.Multimodal.decodeAudioRows]], here
+    * queries use ([[graft.operators.Multimodal.decodeRows]], here
     * with the real RIFF/WAVE parser by default) applied to an unbounded
     * (doc_id, payload-binary) stream. Row-local — no watermark, no state
     * store — so a live media feed and a batch backfill emit
@@ -501,9 +491,9 @@ object Streams {
     */
   def decodeAudioStream(
       media: DataFrame,
-      codec: graft.operators.Multimodal.AudioDecoder =
+      codec: graft.operators.Multimodal.Codec[graft.operators.Multimodal.AudioMeta] =
         graft.operators.Multimodal.wavDecoder): DataFrame =
-    graft.operators.Multimodal.decodeAudioRows(media, codec)
+    graft.operators.Multimodal.decodeRows(media, codec)
 
   /** Stream-stream interval join: purchases enriched with a view by the
     * same user in the preceding hour. Both sides are watermarked and the

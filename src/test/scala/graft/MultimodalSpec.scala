@@ -50,7 +50,7 @@ class MultimodalSpec extends SparkSpec {
       .toDF("doc_id", "payload")
     // the SAME seam the registered stub query runs through, but with the
     // real JDK codec: actual raster dims and channel counts come back
-    val got = Multimodal.decodeImagesFrom(media, Multimodal.imageIoDecoder)
+    val got = Multimodal.decodeRows(media, Multimodal.imageIoDecoder)
       .collect()
       .map(r => r.getLong(0) -> ((r.getInt(1), r.getInt(2), r.getInt(3))))
       .toMap
@@ -96,7 +96,7 @@ class MultimodalSpec extends SparkSpec {
       (1L, wav(8000, 1, mono)),
       (2L, wav(44100, 2, stereo)))
       .toDF("doc_id", "payload")
-    val got = Multimodal.decodeAudioFrom(media, Multimodal.wavDecoder)
+    val got = Multimodal.decodeRows(media, Multimodal.wavDecoder)
       .collect()
       .map(r => r.getLong(0) ->
         ((r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4),
@@ -112,6 +112,71 @@ class MultimodalSpec extends SparkSpec {
     // half the interleaved samples are ±0.5 full scale, half silent:
     // RMS over all channel samples = 0.5/√2 as well
     assert(math.abs(rms2 - 16384.0 / 32768.0 / math.sqrt(2)) < 1e-6)
+  }
+
+  /** A RIFF/WAVE container from (chunk id, declared size, body) triples;
+    * the declared size may disagree with the body on purpose.
+    */
+  private def riff(chunks: (String, Int, Array[Byte])*): Array[Byte] = {
+    val body = chunks.map(_._3.length + 8).sum
+    val bb = java.nio.ByteBuffer.allocate(12 + body)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    bb.put("RIFF".getBytes("US-ASCII")).putInt(4 + body)
+      .put("WAVE".getBytes("US-ASCII"))
+    chunks.foreach { case (id, size, data) =>
+      bb.put(id.getBytes("US-ASCII")).putInt(size).put(data)
+    }
+    bb.array()
+  }
+
+  /** A 16-byte PCM `fmt ` chunk body, 16 bits per sample. */
+  private def fmt(channels: Int, rate: Int): Array[Byte] =
+    java.nio.ByteBuffer.allocate(16).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      .putShort(1).putShort(channels.toShort).putInt(rate)
+      .putInt(rate * channels * 2).putShort((channels * 2).toShort)
+      .putShort(16).array()
+
+  test("wav parser fails by name on a negative chunk size instead of looping") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    // size field 0xFFFFFFF8 reads as -8: the next chunk would start at
+    // this chunk's own header again
+    val payload = riff(("JUNK", 0xFFFFFFF8, new Array[Byte](24)))
+    assert(payload.length == 44)
+    val parsed = Future(scala.util.Try(
+      Multimodal.wavPcm(Multimodal.MediaRecord(1L, payload))))
+    val err = Await.result(parsed, 10.seconds).failed.get
+    assert(err.isInstanceOf[IllegalArgumentException])
+    assert(err.getMessage.contains("doc 1: chunk 'JUNK' size -8"), err.getMessage)
+  }
+
+  test("wav parser fails by name on a truncated data chunk and on zero channels") {
+    val truncated = riff(("fmt ", 16, fmt(1, 8000)), ("data", 1000, new Array[Byte](8)))
+    val e1 = intercept[IllegalArgumentException](
+      Multimodal.wavPcm(Multimodal.MediaRecord(2L, truncated)))
+    assert(e1.getMessage.contains("doc 2: chunk 'data' size 1000"), e1.getMessage)
+    val oversized = riff(("JUNK", 64, new Array[Byte](4)),
+      ("fmt ", 16, fmt(1, 8000)), ("data", 8, new Array[Byte](8)))
+    val e2 = intercept[IllegalArgumentException](
+      Multimodal.wavPcm(Multimodal.MediaRecord(3L, oversized)))
+    assert(e2.getMessage.contains("doc 3: chunk 'JUNK' size 64"), e2.getMessage)
+    val silent = riff(("fmt ", 16, fmt(0, 8000)), ("data", 8, new Array[Byte](8)))
+    val e3 = intercept[IllegalArgumentException](
+      Multimodal.wavDecoder(Multimodal.MediaRecord(4L, silent), 0L))
+    assert(e3.getMessage.contains("doc 4: fmt declares 0 channels"), e3.getMessage)
+  }
+
+  test("non-image bytes through the image seam fail with the named decode error") {
+    import spark.implicits._
+    val media = Seq((9L, "plain text, not an image".getBytes("UTF-8")))
+      .toDF("doc_id", "payload")
+    val err = intercept[Exception](
+      Multimodal.decodeRows(media, Multimodal.imageIoDecoder).collect())
+    val messages = Iterator.iterate[Throwable](err)(_.getCause)
+      .takeWhile(_ != null).flatMap(t => Option(t.getMessage)).toSeq
+    assert(messages.exists(_.contains("payload of doc 9 is not a decodable image")),
+      messages.mkString(" | "))
   }
 
   test("resize composes on the decoded schema and bounds the long side") {

@@ -175,7 +175,7 @@ class Round16Spec extends SparkSpec {
     }
     feeds.foreach { f => input.addData(f: _*); q.processAllAvailable() }
     q.stop()
-    val v = Streams.latestKllVersion(spark, statePath)
+    val v = Streams.latestStateVersion(spark, statePath)
     assert(v.contains(2L), s"latest version $v")
     // bounded retention: at most the latest two versions remain
     val vdirs = new java.io.File(statePath).listFiles()
@@ -196,7 +196,7 @@ class Round16Spec extends SparkSpec {
     // at-least-once replay: refolding batch 2 from v1 is deterministic,
     // so an overwrite of v2 reproduces identical state
     val refold = Sinks.foldKllState(
-      Streams.latestKllVersion(spark, statePath, below = Some(2L))
+      Streams.latestStateVersion(spark, statePath, below = Some(2L))
         .map(j => spark.read.parquet(s"$statePath/v$j")),
       prep(feeds(2).toDF()), Seq("event_type"), "rh", "cents", 64)
       .as[(String, Seq[Long])].collect().toMap
@@ -228,7 +228,7 @@ class Round16Spec extends SparkSpec {
     }
     feeds.foreach { f => input.addData(f: _*); q.processAllAvailable() }
     q.stop()
-    val v = Streams.latestKllVersion(spark, statePath)
+    val v = Streams.latestStateVersion(spark, statePath)
     assert(v.contains(2L))
     assert(new java.io.File(statePath).listFiles()
       .count(_.getName.matches("v\\d+")) <= 2)
@@ -255,7 +255,7 @@ class Round16Spec extends SparkSpec {
     }
     // replay determinism: refold batch 2 from v1 reproduces v2 exactly
     val refold = Sinks.foldCmState(
-      Streams.latestKllVersion(spark, statePath, below = Some(2L))
+      Streams.latestStateVersion(spark, statePath, below = Some(2L))
         .map(j => spark.read.parquet(s"$statePath/v$j")),
       prep(feeds(2).toDF()), Seq("event_type"), "item", 4, 64)
       .as[(String, Int, Long, Long)].collect().toSet

@@ -53,7 +53,7 @@ class Round17Spec extends SparkSpec {
     }
     feeds.foreach { f => input.addData(f: _*); q.processAllAvailable() }
     q.stop()
-    val v = Streams.latestKllVersion(spark, statePath)
+    val v = Streams.latestStateVersion(spark, statePath)
     assert(v.contains(2L), s"latest version $v")
     assert(new java.io.File(statePath).listFiles()
       .count(_.getName.matches("v\\d+")) <= 2, "version retention bound")

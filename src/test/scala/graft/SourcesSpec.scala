@@ -730,7 +730,7 @@ class SourcesSpec extends SparkSpec {
       assert(bytes.sameElements(Multimodal.synthPng(id)))
     }
     // the frame plugs into the REAL codec seam and decodes correctly
-    val decoded = Multimodal.decodeImagesFrom(
+    val decoded = Multimodal.decodeRows(
         media.select("doc_id", "payload"), Multimodal.imageIoDecoder)
       .collect().map(r => r.getLong(0) -> ((r.getInt(1), r.getInt(2)))).toMap
     ids.foreach { id =>
