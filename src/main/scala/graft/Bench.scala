@@ -240,10 +240,7 @@ object Bench {
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
     // same tuned session as Verify/production: AQE coalesces the many
     // small shuffles at bench scale and re-plans joins at runtime
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // warm up JVM/codegen/parquet-reader paths so the first timed query
     // doesn't absorb one-time session costs
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }

@@ -30,23 +30,25 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.files.maxPartitionBytes", "134217728")
-      // ObjectHashAggregate (collect_set/collect_list/typed-imperative
-      // aggs) falls back to SORT-BASED aggregation once a task's hash map
-      // exceeds this many entries; the Spark default of 128 makes every
-      // multi-group collect aggregation pay a per-task sort. 64k entries
-      // of bounded per-group state (this engine's collects are all
-      // bounded-array model/group state) is well within task memory at
-      // any scale; override via spark.sql.objectHashAggregate.* conf on
-      // clusters with tighter executors (r17 guide §1.2 step-3 config
-      // pass; results are identical either way — only the agg strategy
-      // changes).
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OBJ_AGG_FALLBACK", "65536"))
+        ObjAggFallbackEntries.toString)
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
         DriverListingMaxPaths.toString)
       .config("spark.hadoop.fs.file.impl", classOf[graft.sources.NoForkLocalFileSystem].getName)
       .config("spark.ui.enabled", "false")
+
+  /** Entries an ObjectHashAggregate (collect_set / collect_list /
+    * typed-imperative aggregates) holds per task before it falls back to
+    * sort-based aggregation
+    * (`spark.sql.objectHashAggregate.sortBased.fallbackThreshold`,
+    * default 128). At 128 every multi-group collect aggregation pays a
+    * per-task sort; this engine's collects all hold bounded per-group
+    * state, so 64k entries fit task memory at any scale. Results are the
+    * same either way, only the aggregation strategy changes; a cluster
+    * with tighter executors can lower the conf on its session.
+    */
+  val ObjAggFallbackEntries = 65536
 
   /** Size of Spark's JVM-wide generated-class cache
     * (`spark.sql.codegen.cache.maxEntries`, default 100). One pass of
@@ -73,9 +75,17 @@ object GraftSession {
     */
   val DriverListingMaxPaths = 1024
 
-  /** Shared session for tests / local runs. */
-  def get(): SparkSession = {
-    val s = builder().getOrCreate()
+  /** The session the driver mains run on (`Verify`, `Bench`,
+    * `PlanAudit`): [[builder]] on `local[SPARK_GRAFT_CPUS]` (default 4)
+    * with [[graft.plans.GraftExtensions]] installed, so the queries that
+    * need its functions and strategies (`bloom_filter_agg`, top-k per
+    * key) resolve and plan. Spark logs at WARN.
+    */
+  def local(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val s = builder(s"local[$cpus]", cpus)
+      .withExtensions(new graft.plans.GraftExtensions)
+      .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

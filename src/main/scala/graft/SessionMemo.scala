@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
+
 /** Session-scoped trained-artifact memo keyed by (SparkSession, data dir)
   * — the shared mechanism behind the k-means / PQ / LPA model memos
   * (the `lpaShared` artifact-lifetime convention: deterministic training
@@ -15,10 +18,14 @@ package graft
   */
 private[graft] final class SessionMemo[T] {
 
-  private final class Cell(thunk: () => T) {
+  private final class Cell(dir: String, thunk: () => T) {
     // lazy val's built-in monitor serializes same-key racers and
     // publishes the computed value safely
-    lazy val value: T = thunk()
+    lazy val value: T = {
+      val v = thunk()
+      SessionMemo.computed(dir)
+      v
+    }
   }
 
   private val memo =
@@ -32,8 +39,22 @@ private[graft] final class SessionMemo[T] {
         val m = scala.collection.mutable.Map.empty[String, Cell]
         memo.put(spark, m); m
       }
-      perDir.getOrElseUpdate(dir, new Cell(() => thunk))
+      perDir.getOrElseUpdate(dir, new Cell(dir, () => thunk))
     }
     cell.value
   }
+}
+
+private[graft] object SessionMemo {
+
+  private val cells = new ConcurrentHashMap[String, AtomicInteger]()
+
+  private def computed(dir: String): Unit =
+    cells.computeIfAbsent(dir, _ => new AtomicInteger()).incrementAndGet()
+
+  /** Memo cells computed so far for data dir `dir`, over every memo and
+    * session: a check that [[Training]] trains what the queries read.
+    */
+  private[graft] def computedCells(dir: String): Int =
+    Option(cells.get(dir)).fold(0)(_.get)
 }

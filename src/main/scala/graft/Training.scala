@@ -11,9 +11,10 @@ package graft
   * run first in name order (r14 attribution: pipeline_pretrain +5.2 s,
   * graph_personal_pagerank +2.3 s — pure first-toucher shifts).
   *
-  * Keep this list in sync with the `new graft.SessionMemo` sites; each
-  * forcer calls the owner's shared accessor, whose body eagerly pins
-  * (localCheckpoint / collected model state), so forcing == training.
+  * Each forcer calls the owner's shared accessor, whose body eagerly
+  * pins (localCheckpoint / collected model state), so forcing ==
+  * training. `TrainingSpec` fails, naming the query, when a registered
+  * query computes a `SessionMemo` cell after these builders ran.
   */
 object Training {
 

@@ -66,13 +66,9 @@ object Verify {
     val picked =
       if (args.length <= 2) SparkEntry.queries
       else SparkEntry.queries.filter { case (k, _) => args.drop(2).contains(k) }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // the library's tuned session (AQE + coalescing + skew join + UTC),
     // exactly what a production run gets
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     run(spark, sfDir, outDir, picked, SparkEntry.oracleSql)
     spark.stop()
   }

@@ -32,13 +32,37 @@ object Exact {
   def charge(ext: Column, disc: Column, tax: Column): Column =
     dec(ext) * ((lit(1) - rate(disc)) * (lit(1) + rate(tax))).cast(DecimalType(8, 4))
 
+  /** Exact integer sums and products: DECIMAL(38,0), the widest decimal
+    * Spark keeps exact. Power sums widen to it before they multiply.
+    */
+  val d38: DecimalType = DecimalType(38, 0)
+
+  /** One exact integer value narrow enough that its square's result type
+    * stays inside [[d38]].
+    */
+  val d19: DecimalType = DecimalType(19, 0)
+
   /** Money in exact integer MICRO-units (discPrice carries scale 6, so
     * ×10⁶ is integral — cents would truncate sub-cent digits). Narrowed
-    * to DECIMAL(19,0) so a square's result type stays inside
-    * DECIMAL(38,0): 10¹⁸ micros ≈ 10¹² dollars of headroom per value.
+    * to [[d19]] so a square's result type stays inside [[d38]]: 10¹⁸
+    * micros ≈ 10¹² dollars of headroom per value.
     */
   def microUnits(rev: Column): Column =
-    (rev * lit(1000000)).cast(DecimalType(19, 0))
+    (rev * lit(1000000)).cast(d19)
+
+  /** Money in whole CENTS as a long. Exact for a 2-decimal value; a
+    * scale-6 sum loses its sub-cent digits toward zero (a DuckDB replay
+    * must spell that as micros `// 10000`, because its cast rounds).
+    */
+  def cents(m: Column): Column = (m * 100).cast("long")
+
+  /** Money in WHOLE currency units as a long, the fraction truncated
+    * toward zero (the DuckDB replay is micros `// 1000000`). Used where
+    * a sum of squares or a 12-decimal rounding must fit: micros squared
+    * leave [[decToDouble]]'s exact range, and a micros-scale mean
+    * overflows DECIMAL(24,12).
+    */
+  def wholeUnits(m: Column): Column = m.cast("long")
 
   /** Order-independent mean of a double column via a DECIMAL(38,15) sum
     * — deterministic across partitionings, with 23 integer digits of

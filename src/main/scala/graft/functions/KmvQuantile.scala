@@ -68,27 +68,10 @@ class KmvQuantile(k: Int, s: Int) extends Aggregator[SketchIn, SketchBuf, Sketch
       b.kmv.foldLeft(a.kmv)(insertKmv),
       b.smp.foldLeft(a.smp)(insertSmp))
 
-  /** Interpolated quantile at p = p10/10 over the sorted sample, in
-    * tenths-of-cents integer math; exact-integer → double at the end.
-    */
-  private def quantile(sorted: Vector[Long], p10: Int): Double = {
-    val n = sorted.length
-    if (n == 0) return Double.NaN // total over an empty relation
-    val idx10 = (n - 1).toLong * p10
-    val lo = (idx10 / 10).toInt
-    val f = (idx10 % 10).toInt
-    val v10 =
-      if (f == 0) sorted(lo) * 10
-      else sorted(lo) * (10 - f) + sorted(lo + 1) * f
-    v10.toDouble / 1000.0
-  }
-
   override def finish(b: SketchBuf): SketchOut = {
-    val est =
-      if (b.kmv.length < k) b.kmv.length.toLong
-      else (BigInt(k - 1) * (BigInt(1) << 60) / BigInt(b.kmv.last)).toLong
     val sorted = b.smp.map(_._2).sorted
-    SketchOut(est, quantile(sorted, 5), quantile(sorted, 9))
+    SketchOut(KmvOps.estimate(k)(b.kmv),
+      KllOps.quantileTenths(sorted, 5), KllOps.quantileTenths(sorted, 9))
   }
 
   override def bufferEncoder: Encoder[SketchBuf] = Encoders.kryo[SketchBuf]

@@ -7,6 +7,42 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
+/** The input check and the two-pointer merge both sorted-array
+  * expressions below share. The merge serves interpreted and generated
+  * code alike (generated code calls it by [[Ref]]).
+  */
+object SortedLongMerge {
+
+  /** Fully qualified name generated code calls [[intersection]] by. */
+  val Ref: String = getClass.getName.stripSuffix("$")
+
+  /** Both inputs must be array<bigint>; `name` labels the failure. */
+  def checkInputs(name: String, l: DataType, r: DataType): TypeCheckResult =
+    (l, r) match {
+      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
+        TypeCheckResult.TypeCheckSuccess
+      case _ =>
+        TypeCheckResult.TypeCheckFailure(s"$name requires array<bigint> inputs, got $l / $r")
+    }
+
+  /** |xs ∩ ys| for two ascending arrays of distinct longs. */
+  def intersection(xs: ArrayData, ys: ArrayData): Int = {
+    val na = xs.numElements()
+    val nb = ys.numElements()
+    var i = 0
+    var j = 0
+    var inter = 0
+    while (i < na && j < nb) {
+      val x = xs.getLong(i)
+      val y = ys.getLong(j)
+      if (x == y) { inter += 1; i += 1; j += 1 }
+      else if (x < y) i += 1
+      else j += 1
+    }
+    inter
+  }
+}
+
 /** Jaccard similarity of two SORTED-DISTINCT long arrays via a linear
   * merge — the codegen'd fast path of the dedup verification joins.
   *
@@ -21,13 +57,7 @@ case class SortedLongJaccard(left: Expression, right: Expression)
     extends BinaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) =>
-        TypeCheckResult.TypeCheckFailure(
-          s"sorted_jaccard requires array<bigint> inputs, got $l / $r")
-    }
+    SortedLongMerge.checkInputs(prettyName, left.dataType, right.dataType)
 
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
@@ -36,37 +66,17 @@ case class SortedLongJaccard(left: Expression, right: Expression)
   override protected def nullSafeEval(a: Any, b: Any): Any = {
     val xs = a.asInstanceOf[ArrayData]
     val ys = b.asInstanceOf[ArrayData]
-    val na = xs.numElements()
-    val nb = ys.numElements()
-    var i = 0
-    var j = 0
-    var inter = 0
-    while (i < na && j < nb) {
-      val x = xs.getLong(i)
-      val y = ys.getLong(j)
-      if (x == y) { inter += 1; i += 1; j += 1 }
-      else if (x < y) i += 1
-      else j += 1
-    }
-    val union = na + nb - inter
+    val inter = SortedLongMerge.intersection(xs, ys)
+    val union = xs.numElements() + ys.numElements() - inter
     if (union == 0) null else inter.toDouble / union
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
-      val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val x = ctx.freshName("x"); val y = ctx.freshName("y")
       val inter = ctx.freshName("inter"); val union = ctx.freshName("union")
       s"""
-         |int $na = $a.numElements(); int $nb = $b.numElements();
-         |int $i = 0; int $j = 0; int $inter = 0;
-         |while ($i < $na && $j < $nb) {
-         |  long $x = $a.getLong($i); long $y = $b.getLong($j);
-         |  if ($x == $y) { $inter++; $i++; $j++; }
-         |  else if ($x < $y) { $i++; } else { $j++; }
-         |}
-         |int $union = $na + $nb - $inter;
+         |int $inter = ${SortedLongMerge.Ref}.intersection($a, $b);
+         |int $union = $a.numElements() + $b.numElements() - $inter;
          |if ($union == 0) { ${ev.isNull} = true; }
          |else { ${ev.value} = (double) $inter / $union; }
        """.stripMargin
@@ -92,49 +102,16 @@ case class SortedLongOverlap(left: Expression, right: Expression)
     extends BinaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) =>
-        TypeCheckResult.TypeCheckFailure(
-          s"sorted_overlap requires array<bigint> inputs, got $l / $r")
-    }
+    SortedLongMerge.checkInputs(prettyName, left.dataType, right.dataType)
 
   override def dataType: DataType = LongType
   override def prettyName: String = "sorted_overlap"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val xs = a.asInstanceOf[ArrayData]
-    val ys = b.asInstanceOf[ArrayData]
-    val na = xs.numElements()
-    val nb = ys.numElements()
-    var i = 0; var j = 0; var inter = 0L
-    while (i < na && j < nb) {
-      val x = xs.getLong(i); val y = ys.getLong(j)
-      if (x == y) { inter += 1; i += 1; j += 1 }
-      else if (x < y) i += 1
-      else j += 1
-    }
-    inter
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    SortedLongMerge.intersection(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData]).toLong
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val x = ctx.freshName("x"); val y = ctx.freshName("y")
-      val inter = ctx.freshName("inter")
-      s"""
-         |int $na = $a.numElements(); int $nb = $b.numElements();
-         |int $i = 0; int $j = 0; long $inter = 0L;
-         |while ($i < $na && $j < $nb) {
-         |  long $x = $a.getLong($i); long $y = $b.getLong($j);
-         |  if ($x == $y) { $inter++; $i++; $j++; }
-         |  else if ($x < $y) { $i++; } else { $j++; }
-         |}
-         |${ev.value} = $inter;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) => s"(long) ${SortedLongMerge.Ref}.intersection($a, $b)")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SortedLongOverlap =

@@ -5,7 +5,6 @@ import graft.functions.Exact._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Product-analytics workloads: smoothing, cohorts, funnels — the query
   * shapes the reference's ClickHouse consumer exists to answer.
@@ -630,12 +629,11 @@ object Analytics {
     * any partitioning, one conditional aggregation pass, 1-row output.
     */
   def abTest(t: Tables): DataFrame = {
-    val d38 = DecimalType(38, 0)
     val toD = decToDouble _
     val s = t.events
       .where(col("event_type") === "purchase")
       .select((col("user_id") % 2).as("grp"),
-        (dec(col("value")) * 100).cast("long").as("cents"))
+        cents(dec(col("value"))).as("cents"))
       .agg(
         sum(when(col("grp") === 0, 1L).otherwise(0L)).as("n_a"),
         sum(when(col("grp") === 1, 1L).otherwise(0L)).as("n_b"),
@@ -789,7 +787,6 @@ object Analytics {
     * one broadcast row.
     */
   def decayedCounters(t: Tables): DataFrame = {
-    val d38 = DecimalType(38, 0)
     val toD = decToDouble _
     val maxD = t.events.agg(max(to_date(col("ts"))).as("max_d"))
     t.events
@@ -799,7 +796,7 @@ object Analytics {
         when(col("age") <= DecayMaxAge,
           expr(s"shiftleft(CAST(1 AS BIGINT), $DecayShift - age)"))
           .otherwise(lit(0L)))
-      .withColumn("cents", (dec(col("value")) * 100).cast("long"))
+      .withColumn("cents", cents(dec(col("value"))))
       .groupBy("user_id", "event_type")
       .agg(
         sum(col("wscale").cast(d38)).as("wsum"),
@@ -832,16 +829,29 @@ object Analytics {
        |FROM s ORDER BY user_id, event_type""".stripMargin
   }
 
-  /** A customer whose last order is within this many days of the
-    * observation end is CENSORED (still alive), not churned.
+  /** Risk sets over the customer-lifetime domain: per distinct lifetime
+    * `t`, the churn events `d`, all customers `all_t` ending there, and
+    * `n`, the customers still at risk (the total minus those removed at
+    * shorter lifetimes, by one exclusive cumulative window over the
+    * calendar-bounded lifetime domain). Shared by [[kaplanMeier]] and
+    * [[nelsonAalen]].
     */
-  private val ChurnGapDays = 90
+  private def churnRiskSets(t: Tables): DataFrame = {
+    val durations = Facts.customerLifetimes(t)
+    val byT = durations.groupBy("t")
+      .agg(sum(col("ev")).as("d"), count(lit(1)).as("all_t"))
+    val tot = durations.agg(count(lit(1)).as("total"))
+    val wPrev = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, -1)
+    byT.crossJoin(broadcast(tot))
+      .withColumn("removed", coalesce(sum(col("all_t")).over(wPrev), lit(0L)))
+      .withColumn("n", col("total") - col("removed"))
+  }
 
   /** Kaplan–Meier survival curve of customer lifetimes — "what fraction
     * of customers survive past N days", with right-censoring done
     * properly (dropping still-active customers, the naive move, biases
     * survival DOWN). Lifetime = last−first order date; a customer whose
-    * last order is within [[ChurnGapDays]] of the corpus's last date is
+    * last order is within [[Facts.ChurnGapDays]] of the corpus's last date is
     * censored at their observed lifetime (they leave the risk set
     * without counting as a death — exactly KM's accounting). Risk sets
     * and death counts are exact integers via one cumulative window over
@@ -854,23 +864,7 @@ object Analytics {
     * customer; everything after runs on bounded domains.
     */
   def kaplanMeier(t: Tables): DataFrame = {
-    val perCust = t.orders
-      .groupBy("o_custkey")
-      .agg(min(col("o_orderdate").cast("date")).as("f"),
-        max(col("o_orderdate").cast("date")).as("l"))
-    val end = t.orders.agg(max(col("o_orderdate").cast("date")).as("e"))
-    val durations = perCust.crossJoin(broadcast(end))
-      .select(
-        datediff(col("l"), col("f")).cast("long").as("t"),
-        (datediff(col("e"), col("l")) >= ChurnGapDays).cast("long").as("ev"))
-    val byT = durations.groupBy("t")
-      .agg(sum(col("ev")).as("d"), count(lit(1)).as("all_t"))
-    val tot = durations.agg(count(lit(1)).as("total"))
-    val wPrev = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, -1)
-    val risk = byT.crossJoin(broadcast(tot))
-      .withColumn("removed", coalesce(sum(col("all_t")).over(wPrev), lit(0L)))
-      .withColumn("n", col("total") - col("removed"))
-    risk
+    churnRiskSets(t)
       .groupBy()
       .agg(array_sort(collect_list(struct(col("t"), col("n"), col("d")))).as("arr"))
       .select(posexplode(col("arr")).as(Seq("pos", "x")), col("arr"))
@@ -893,7 +887,7 @@ object Analytics {
        |e AS (SELECT MAX(CAST(o_orderdate AS DATE)) AS e FROM orders),
        |durations AS (
        | SELECT CAST(date_diff('day', f, l) AS BIGINT) AS t,
-       |  CASE WHEN date_diff('day', l, e.e) >= $ChurnGapDays
+       |  CASE WHEN date_diff('day', l, e.e) >= ${Facts.ChurnGapDays}
        |       THEN 1 ELSE 0 END AS ev
        | FROM per_cust CROSS JOIN e),
        |by_t AS (
@@ -931,24 +925,9 @@ object Analytics {
     * order, so both engines accumulate in the identical sequence.
     */
   def nelsonAalen(t: Tables): DataFrame = {
-    val perCust = t.orders
-      .groupBy("o_custkey")
-      .agg(min(col("o_orderdate").cast("date")).as("f"),
-        max(col("o_orderdate").cast("date")).as("l"))
-    val end = t.orders.agg(max(col("o_orderdate").cast("date")).as("e"))
-    val durations = perCust.crossJoin(broadcast(end))
-      .select(
-        datediff(col("l"), col("f")).cast("long").as("t"),
-        (datediff(col("e"), col("l")) >= ChurnGapDays).cast("long").as("ev"))
-    val byT = durations.groupBy("t")
-      .agg(sum(col("ev")).as("d"), count(lit(1)).as("all_t"))
-    val tot = durations.agg(count(lit(1)).as("total"))
-    val wPrev = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, -1)
     val wCum = Window.orderBy("t")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    byT.crossJoin(broadcast(tot))
-      .withColumn("removed", coalesce(sum(col("all_t")).over(wPrev), lit(0L)))
-      .withColumn("n", col("total") - col("removed"))
+    churnRiskSets(t)
       .withColumn("term", col("d").cast("double") / col("n").cast("double"))
       // portable cumulative sum: scale-30 decimal accumulation (exact,
       // order-independent) + 12-decimal final rounding — a plain double
@@ -971,7 +950,7 @@ object Analytics {
        |e AS (SELECT MAX(CAST(o_orderdate AS DATE)) AS e FROM orders),
        |durations AS (
        | SELECT CAST(date_diff('day', f, l) AS BIGINT) AS t,
-       |  CASE WHEN date_diff('day', l, e.e) >= $ChurnGapDays
+       |  CASE WHEN date_diff('day', l, e.e) >= ${Facts.ChurnGapDays}
        |       THEN 1 ELSE 0 END AS ev
        | FROM per_cust CROSS JOIN e),
        |by_t AS (

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.functions.Exact.d38
 import graft.functions.DotProduct
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -899,7 +900,6 @@ object Embeddings {
     * top-[[DimCorrK]] cut.
     */
   def dimCorr(t: Tables): DataFrame = {
-    val d38 = DecimalType(38, 0)
     val q = t.embeddings
       .select(col("vec_id"),
         posexplode(col("embedding").cast("array<double>")).as(Seq("i", "x")))

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Tables
-import graft.functions.Exact.{dec, decToDouble, decToDoubleSql, discPrice, microUnits}
+import graft.functions.Exact.{d38, dec, decToDouble, decToDoubleSql, microUnits}
 import graft.plans.TopKPerKey
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -30,7 +30,6 @@ import org.apache.spark.sql.types.DecimalType
   */
 object ModelEval {
 
-  private val d38 = DecimalType(38, 0)
   private val d2412 = DecimalType(24, 12)
 
   private def round12(c: Column): Column = c.cast(d2412).cast("double")
@@ -419,6 +418,37 @@ object ModelEval {
 
   // --------------------------------------------------------------- PSI
 
+  /** PSI terms per (`keys`…, 50k-currency `bucket`) over `orders`: the
+    * base / current counts `cb` / `cc` split at the integer calendar
+    * midpoint, the per-key totals `nb` / `nc` / `nbk` (bucket count), the
+    * add-one-smoothed shares `p` / `q` and the 12-dec rounded `term`.
+    * Shared by [[psiDrift]] (no key) and [[psiSegmented]] (`segment`).
+    */
+  private def psiTerms(orders: DataFrame, keys: String*): DataFrame = {
+    val sc = orders.select(keys.map(col) ++ Seq(
+      microUnits(dec(col("o_totalprice"))).cast("long").as("u"),
+      Facts.epochDay(col("o_orderdate").cast("date")).cast("long").as("day")): _*)
+    val mm = sc.agg(min(col("day")).as("dmin"), max(col("day")).as("dmax"))
+    val cells = sc.crossJoin(broadcast(mm))
+      .withColumn("isBase",
+        (col("day") <= expr("(dmin + dmax) div 2")).cast("long"))
+      .withColumn("bucket", expr("u div 50000000000"))
+      .groupBy((keys :+ "bucket").map(col): _*)
+      .agg(sum(col("isBase")).as("cb"),
+        sum(lit(1L) - col("isBase")).as("cc"))
+    val tot = cells.groupBy(keys.map(col): _*)
+      .agg(sum(col("cb")).as("nb"), sum(col("cc")).as("nc"),
+        count(lit(1)).as("nbk"))
+    // with no key, the using-join on no columns is the one-row cross join
+    cells.join(broadcast(tot), keys)
+      .withColumn("p", (col("cb") + 1).cast("double") /
+        (col("nb") + col("nbk")).cast("double"))
+      .withColumn("q", (col("cc") + 1).cast("double") /
+        (col("nc") + col("nbk")).cast("double"))
+      .withColumn("term",
+        round12((col("p") - col("q")) * log(col("p") / col("q"))))
+  }
+
   /** Population stability index of the order-value distribution, first
     * calendar half vs second — THE standard production drift monitor
     * (companion to the token-level [[TextAnalysis3.klSourceDrift]] /
@@ -434,27 +464,7 @@ object ModelEval {
     * Rule of thumb read: <0.1 stable, 0.1–0.25 drifting, >0.25 shifted.
     */
   def psiDrift(t: Tables): DataFrame = {
-    val sc = t.orders.select(
-      microUnits(dec(col("o_totalprice"))).cast("long").as("u"),
-      datediff(col("o_orderdate").cast("date"), to_date(lit("1970-01-01")))
-        .cast("long").as("day"))
-    val mm = sc.agg(min(col("day")).as("dmin"), max(col("day")).as("dmax"))
-    val cells = sc.crossJoin(broadcast(mm))
-      .withColumn("isBase",
-        (col("day") <= expr("(dmin + dmax) div 2")).cast("long"))
-      .withColumn("bucket", expr("u div 50000000000"))
-      .groupBy("bucket")
-      .agg(sum(col("isBase")).as("cb"),
-        sum(lit(1L) - col("isBase")).as("cc"))
-    val tot = cells.agg(sum(col("cb")).as("nb"), sum(col("cc")).as("nc"),
-      count(lit(1)).as("nbk"))
-    val terms = cells.crossJoin(broadcast(tot))
-      .withColumn("p", (col("cb") + 1).cast("double") /
-        (col("nb") + col("nbk")).cast("double"))
-      .withColumn("q", (col("cc") + 1).cast("double") /
-        (col("nc") + col("nbk")).cast("double"))
-      .withColumn("term",
-        round12((col("p") - col("q")) * log(col("p") / col("q"))))
+    val terms = psiTerms(t.orders)
     val psi = terms.agg(
       sum(col("term").cast(DecimalType(38, 12))).cast("double")
         .cast(d2412).cast("double").as("psi"))
@@ -517,10 +527,8 @@ object ModelEval {
   /** Daily revenue series in exact integer micros — shared by the
     * forecast-evaluation pair ([[pinballLoss]], [[forecastDm]]). */
   private def dailyRevenue(t: Tables): DataFrame =
-    t.lineitem
-      .groupBy(col("l_shipdate").cast("date").as("day"))
-      .agg((sum(discPrice(col("l_extendedprice"), col("l_discount")))
-        * lit(1000000)).cast(d38).cast("long").as("y"))
+    Facts.dailyRevenue(t)
+      .select(col("d").as("day"), microUnits(col("rev")).cast("long").as("y"))
 
   def pinballLoss(t: Tables): DataFrame = {
     val daily = dailyRevenue(t)
@@ -618,9 +626,9 @@ object ModelEval {
     * 12-dec-rounded DCG/IDCG pair so both engines round once.
     */
   def ndcgAtK(t: Tables): DataFrame = {
-    val spend = t.orders.groupBy(col("o_custkey").as("custkey"))
-      .agg((sum(dec(col("o_totalprice"))) * lit(1000000)).cast(d38)
-        .cast("long").as("relu"))
+    val spend = Facts.customerRevenue(t)
+      .select(col("o_custkey").as("custkey"),
+        microUnits(col("rev")).cast("long").as("relu"))
     val cust = t.customer.select(col("c_custkey").as("custkey"),
         col("c_nationkey").as("nk"), col("c_acctbal"))
       .join(spend, Seq("custkey"), "left")
@@ -792,31 +800,10 @@ object ModelEval {
     * PSI is the exact decimal sum of its rounded terms.
     */
   def psiSegmented(t: Tables): DataFrame = {
-    val sc = t.orders
+    val orders = t.orders
       .join(t.customer.select(col("c_custkey").as("o_custkey"),
         col("c_mktsegment").as("segment")), Seq("o_custkey"))
-      .select(col("segment"),
-        microUnits(dec(col("o_totalprice"))).cast("long").as("u"),
-        datediff(col("o_orderdate").cast("date"), to_date(lit("1970-01-01")))
-          .cast("long").as("day"))
-    val mm = sc.agg(min(col("day")).as("dmin"), max(col("day")).as("dmax"))
-    val cells = sc.crossJoin(broadcast(mm))
-      .withColumn("isBase",
-        (col("day") <= expr("(dmin + dmax) div 2")).cast("long"))
-      .withColumn("bucket", expr("u div 50000000000"))
-      .groupBy("segment", "bucket")
-      .agg(sum(col("isBase")).as("cb"),
-        sum(lit(1L) - col("isBase")).as("cc"))
-    val tot = cells.groupBy("segment")
-      .agg(sum(col("cb")).as("nb"), sum(col("cc")).as("nc"),
-        count(lit(1)).as("nbk"))
-    val terms = cells.join(broadcast(tot), Seq("segment"))
-      .withColumn("p", (col("cb") + 1).cast("double") /
-        (col("nb") + col("nbk")).cast("double"))
-      .withColumn("q", (col("cc") + 1).cast("double") /
-        (col("nc") + col("nbk")).cast("double"))
-      .withColumn("term",
-        round12((col("p") - col("q")) * log(col("p") / col("q"))))
+    val terms = psiTerms(orders, "segment")
     terms.groupBy("segment")
       .agg(first(col("nb")).as("n_base"), first(col("nc")).as("n_curr"),
         count(lit(1)).as("n_buckets"),

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.functions.Exact.d38
 import java.awt.image.BufferedImage
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -1782,7 +1783,6 @@ object Multimodal {
     * formula. Row-local per doc; no shuffle.
     */
   def blurDetect(t: Tables): DataFrame = {
-    val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
     codecRows(t) { id =>
       val img = readImage(id, synthPng(id))
       val (w, h) = (img.getWidth, img.getHeight)
@@ -2158,6 +2158,28 @@ object Multimodal {
        |FROM p LEFT JOIN act ON p.doc_id = act.doc_id
        |ORDER BY p.doc_id""".stripMargin
 
+  /** Per-document 8-bit gray histogram `(doc_id, gray, cnt)` of the
+    * deterministic stub raster (w × h = 8..16 × 8..16 from the doc id),
+    * ITU-601 integer luma `(299r + 587g + 114b) div 1000`. Shared by
+    * [[lumaHistogram]] and [[histogramEntropy]]; explode over the bounded
+    * pixel grid, then one map-side-combining count.
+    */
+  private def stubLumaHistogram(t: Tables): DataFrame =
+    t.documents
+      .select(col("doc_id"),
+        (lit(8) + pmod(col("doc_id"), lit(9))).cast("int").as("w"),
+        (lit(8) + pmod(col("doc_id") * 3, lit(9))).cast("int").as("h"))
+      .select(col("doc_id"), col("w"), col("h"),
+        explode(sequence(lit(0), col("w") - 1)).as("x"))
+      .select(col("doc_id"), col("w"), col("h"), col("x"),
+        explode(sequence(lit(0), col("h") - 1)).as("y"))
+      .select(col("doc_id"),
+        expr("""(299 * ((doc_id + 7*x + 13*y) % 256)
+               | + 587 * ((2*doc_id + 11*x + 3*y) % 256)
+               | + 114 * ((3*doc_id + 5*x + 17*y) % 256)) div 1000""".stripMargin)
+          .as("gray"))
+      .groupBy("doc_id", "gray").agg(count(lit(1)).as("cnt"))
+
   /** Tonal-diversity histogram stats over the stub luma plane — the
     * flat-image screen a vision pipeline uses to drop blank frames,
     * solid fills, and test cards before feature compute: per document,
@@ -2173,20 +2195,7 @@ object Multimodal {
     * [[imageStats]]. Per-doc state is ≤256 histogram rows; linear.
     */
   def lumaHistogram(t: Tables): DataFrame = {
-    val p = t.documents.select(col("doc_id"),
-      (lit(8) + pmod(col("doc_id"), lit(9))).cast("int").as("w"),
-      (lit(8) + pmod(col("doc_id") * 3, lit(9))).cast("int").as("h"))
-    val px = p
-      .select(col("doc_id"), col("w"), col("h"),
-        explode(sequence(lit(0), col("w") - 1)).as("x"))
-      .select(col("doc_id"), col("w"), col("h"), col("x"),
-        explode(sequence(lit(0), col("h") - 1)).as("y"))
-      .select(col("doc_id"),
-        expr("""(299 * ((doc_id + 7*x + 13*y) % 256)
-               | + 587 * ((2*doc_id + 11*x + 3*y) % 256)
-               | + 114 * ((3*doc_id + 5*x + 17*y) % 256)) div 1000""".stripMargin)
-          .as("gray"))
-    val hist = px.groupBy("doc_id", "gray").agg(count(lit(1)).as("cnt"))
+    val hist = stubLumaHistogram(t)
     val mode = hist
       .withColumn("rk", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy("doc_id")
@@ -2389,20 +2398,7 @@ object Multimodal {
     */
   def histogramEntropy(t: Tables): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    val p = t.documents.select(col("doc_id"),
-      (lit(8) + pmod(col("doc_id"), lit(9))).cast("int").as("w"),
-      (lit(8) + pmod(col("doc_id") * 3, lit(9))).cast("int").as("h"))
-    val px = p
-      .select(col("doc_id"), col("w"), col("h"),
-        explode(sequence(lit(0), col("w") - 1)).as("x"))
-      .select(col("doc_id"), col("w"), col("h"), col("x"),
-        explode(sequence(lit(0), col("h") - 1)).as("y"))
-      .select(col("doc_id"),
-        expr("""(299 * ((doc_id + 7*x + 13*y) % 256)
-               | + 587 * ((2*doc_id + 11*x + 3*y) % 256)
-               | + 114 * ((3*doc_id + 5*x + 17*y) % 256)) div 1000""".stripMargin)
-          .as("gray"))
-    val hist = px.groupBy("doc_id", "gray").agg(count(lit(1)).as("cnt"))
+    val hist = stubLumaHistogram(t)
     val withN = hist.groupBy("doc_id")
       .agg(sum(col("cnt")).as("np"), count(lit(1)).as("n_levels"),
         min(col("gray")).as("min_gray"), max(col("gray")).as("max_gray"),

@@ -277,7 +277,7 @@ object Quality {
     */
   def roundNumbers(t: Tables): DataFrame = {
     val o = t.orders.select(col("o_orderpriority"),
-      (graft.functions.Exact.dec(col("o_totalprice")) * 100).cast("long").as("cents"))
+      graft.functions.Exact.cents(graft.functions.Exact.dec(col("o_totalprice"))).as("cents"))
     val per = o.groupBy("o_orderpriority")
       .agg(count(lit(1)).as("n"),
         sum((pmod(col("cents"), lit(100)) === 0).cast("long")).as("n_whole"),

@@ -353,9 +353,8 @@ object Relational {
     // sf0.001), and beyond ~1.8e19 DuckDB's int128→double TRUNCATES; the
     // split parts each convert exactly, so both engines perform the same
     // two IEEE ops and agree bitwise for sums up to ~9e24.
-    val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
     val qc = (dec(col("l_quantity")) * 100).cast("long")
-    val pc = (dec(col("l_extendedprice")) * 100).cast("long")
+    val pc = cents(dec(col("l_extendedprice")))
     val toD = graft.functions.Exact.decToDouble _
     val base = t.lineitem.groupBy("l_returnflag").agg(
       count(lit(1)).cast("double").as("n"),

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.functions.Exact.{cents, d19, d38, dec, discPrice, microUnits}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -80,8 +81,7 @@ object Relational10 {
   def dupPayments(t: Tables): DataFrame = {
     val o = t.orders.select(col("o_orderkey"), col("o_custkey"),
       col("o_orderdate").cast("date").as("d"),
-      (col("o_totalprice").cast(org.apache.spark.sql.types.DecimalType(12, 2))
-        * 100).cast("long").as("cents"))
+      cents(dec(col("o_totalprice"))).as("cents"))
       .withColumn("bucket", expr(s"cents div ${DupBucketDollars * 100}L"))
     o.as("a")
       .join(o.as("b"),
@@ -131,10 +131,7 @@ object Relational10 {
     * line counts; this is the aggregate-revenue form.)
     */
   def didPromoImpact(t: Tables): DataFrame = {
-    val d19 = org.apache.spark.sql.types.DecimalType(19, 0)
-    val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
-    val micros = (graft.functions.Exact.discPrice(
-      col("l_extendedprice"), col("l_discount")) * lit(1000000)).cast(d19)
+    val micros = microUnits(discPrice(col("l_extendedprice"), col("l_discount")))
     t.lineitem
       .join(broadcast(t.part.select(col("p_partkey"),
         col("p_type").startsWith("PROMO").as("treated"))),
@@ -204,7 +201,6 @@ object Relational10 {
     * tie-broken ordering keeps the cut deterministic.
     */
   def topMovers(t: Tables): DataFrame = {
-    val d19 = org.apache.spark.sql.types.DecimalType(19, 0)
     // ONE exchange for both the aggregation and the window: partitioning
     // by l_partkey up front satisfies the (l_partkey, mon) aggregation's
     // clustering requirement AND the window's — the old plan exchanged
@@ -213,8 +209,7 @@ object Relational10 {
     // share one exchange)
     val monthly = t.lineitem
       .select(col("l_partkey"), trunc(col("l_shipdate"), "month").as("mon"),
-        (graft.functions.Exact.discPrice(
-          col("l_extendedprice"), col("l_discount")) * lit(1000000)).cast(d19)
+        microUnits(discPrice(col("l_extendedprice"), col("l_discount")))
           .as("rm"))
       .repartition(col("l_partkey"))
       .groupBy(col("l_partkey"), col("mon"))
@@ -391,16 +386,12 @@ object Relational10 {
     * label; no windows, no driver state.
     */
   def supplierScorecard(t: Tables): DataFrame = {
-    val d19 = org.apache.spark.sql.types.DecimalType(19, 0)
-    val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
     t.lineitem
       .join(t.orders.select("o_orderkey", "o_orderdate"),
         col("l_orderkey") === col("o_orderkey"))
       .groupBy("l_suppkey")
       .agg(count(lit(1)).as("n_lines"),
-        sum((graft.functions.Exact.discPrice(
-          col("l_extendedprice"), col("l_discount")) * lit(1000000))
-          .cast(d19)).cast(d38).cast("long").as("revenue_micros"),
+        sum(microUnits(discPrice(col("l_extendedprice"), col("l_discount")))).cast(d38).cast("long").as("revenue_micros"),
         sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).cast("long")
           .as("n_returned"),
         sum(datediff(col("l_shipdate"), col("o_orderdate")).cast("long"))
@@ -462,10 +453,7 @@ object Relational10 {
     * standard public finance methodology.
     */
   def priceVolumeBridge(t: Tables): DataFrame = {
-    val d19 = org.apache.spark.sql.types.DecimalType(19, 0)
-    val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
-    val micros = (graft.functions.Exact.discPrice(
-      col("l_extendedprice"), col("l_discount")) * lit(1000000)).cast(d19)
+    val micros = microUnits(discPrice(col("l_extendedprice"), col("l_discount")))
     val li = t.lineitem
       .select(col("l_partkey"), year(col("l_shipdate")).as("yr"),
         micros.as("m"), (col("l_quantity") * 100).cast("long").as("qc"))

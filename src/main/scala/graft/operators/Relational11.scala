@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.functions.Exact.{cents, d38, dec, discPrice, microUnits}
 import graft.functions.PortableHash
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -71,8 +72,7 @@ object Relational11 {
     val rows = t.orders.select(
       col("o_orderpriority").as("grp"),
       col("o_orderkey").as("k"),
-      (graft.functions.Exact.dec(col("o_totalprice")) * lit(1000000))
-        .cast(org.apache.spark.sql.types.DecimalType(19, 0)).cast("long")
+      microUnits(dec(col("o_totalprice"))).cast("long")
         .as("x"))
     val resamples = rows
       .select(col("grp"), col("k"), col("x"),
@@ -307,11 +307,9 @@ object Relational11 {
     * every division run on that bounded list. Linear, one shuffle.
     */
   def anova(t: Tables): DataFrame = {
-    val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
     val groups = t.orders
       .select(col("o_orderpriority").as("grp"),
-        (graft.functions.Exact.dec(col("o_totalprice")) * lit(1000000))
-          .cast(org.apache.spark.sql.types.DecimalType(19, 0)).cast("long")
+        microUnits(dec(col("o_totalprice"))).cast("long")
           .as("x"))
       .groupBy("grp")
       .agg(count(lit(1)).as("n"), sum(col("x")).cast("long").as("s1"),
@@ -393,8 +391,7 @@ object Relational11 {
         col("o_custkey") === col("c_custkey"))
       .select(col("c_mktsegment").as("seg"),
         col("o_orderkey").as("k"),
-        (graft.functions.Exact.dec(col("o_totalprice")) * lit(1000000))
-          .cast(org.apache.spark.sql.types.DecimalType(19, 0)).cast("long")
+        microUnits(dec(col("o_totalprice"))).cast("long")
           .as("v"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("seg").orderBy("v", "k")
@@ -480,8 +477,7 @@ object Relational11 {
         col("o_custkey") === col("c_custkey"))
       .where(col("c_mktsegment").isin("BUILDING", "MACHINERY"))
       .select(col("c_mktsegment").as("seg"), col("o_orderkey").as("k"),
-        (graft.functions.Exact.dec(col("o_totalprice")) * lit(1000000))
-          .cast(org.apache.spark.sql.types.DecimalType(19, 0)).cast("long")
+        microUnits(dec(col("o_totalprice"))).cast("long")
           .as("v"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("seg").orderBy("v", "k")
@@ -541,13 +537,11 @@ object Relational11 {
     * aggregation to the |segments|-bounded grid.
     */
   private def segmentStats(t: Tables): DataFrame = {
-    val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
     t.orders
       .join(t.customer.select("c_custkey", "c_mktsegment"),
         col("o_custkey") === col("c_custkey"))
       .select(col("c_mktsegment").as("seg"),
-        (graft.functions.Exact.dec(col("o_totalprice")) * lit(1000000))
-          .cast(org.apache.spark.sql.types.DecimalType(19, 0)).cast("long")
+        microUnits(dec(col("o_totalprice"))).cast("long")
           .as("x"))
       .groupBy("seg")
       .agg(count(lit(1)).as("n"), sum(col("x")).cast("long").as("s1"),
@@ -691,8 +685,7 @@ object Relational11 {
   def trimmedMean(t: Tables): DataFrame = {
     val orders = t.orders.select(col("o_orderpriority").as("grp"),
       col("o_orderkey").as("k"),
-      (graft.functions.Exact.dec(col("o_totalprice")) * lit(1000000))
-        .cast(org.apache.spark.sql.types.DecimalType(19, 0)).cast("long")
+      microUnits(dec(col("o_totalprice"))).cast("long")
         .as("v"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("grp").orderBy("v", "k")
@@ -757,8 +750,7 @@ object Relational11 {
       .groupBy(date_trunc("month", col("o_orderdate")).cast("date").as("month"),
         col("c_mktsegment").as("seg"))
       .agg(count(lit(1)).as("n"),
-        sum((graft.functions.Exact.dec(col("o_totalprice")) * lit(1000000))
-          .cast(org.apache.spark.sql.types.DecimalType(19, 0)).cast("long"))
+        sum(microUnits(dec(col("o_totalprice"))).cast("long"))
           .cast("long").as("s1"))
     val pinned = cells.localCheckpoint(true) // both sides of the pair join
     // full-outer cell pairing: a segment active in only ONE of the two
@@ -881,9 +873,7 @@ object Relational11 {
         pmod(datediff(col("l_shipdate").cast("date"),
           to_date(lit("1970-01-01"))), lit(7)).cast("int").as("dow"),
         month(col("l_shipdate").cast("date")).cast("int").as("mon"))
-      .agg(sum((graft.functions.Exact.discPrice(
-        col("l_extendedprice"), col("l_discount")) * lit(1000000))
-        .cast(org.apache.spark.sql.types.DecimalType(19, 0)))
+      .agg(sum(microUnits(discPrice(col("l_extendedprice"), col("l_discount"))))
         .cast("long").as("v"))
     val s1 = lowerMedian(cells, "dow", "mon", "v", "rm1")
       .withColumn("r1", col("v") - col("rm1"))
@@ -960,9 +950,7 @@ object Relational11 {
         when(col("l_shipdate").cast("date") < to_date(lit(RankSplitDate)),
           "P1").otherwise("P2"))
       .groupBy("period", "l_partkey")
-      .agg(sum((graft.functions.Exact.discPrice(
-        col("l_extendedprice"), col("l_discount")) * lit(1000000))
-        .cast(org.apache.spark.sql.types.DecimalType(19, 0)))
+      .agg(sum(microUnits(discPrice(col("l_extendedprice"), col("l_discount"))))
         .cast("long").as("rev"))
     val p1 = rev.where(col("period") === "P1")
       .select(col("l_partkey"), col("rev").as("rev1"))
@@ -973,7 +961,6 @@ object Relational11 {
     val (ranked, _) = Ranks.withGlobalRanksFused(both, "l_partkey", Seq(
       ("r1", -col("rev1").cast("double")),
       ("r2", -col("rev2").cast("double"))))
-    val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
     ranked
       .withColumn("d", col("r1") - col("r2"))
       .agg(count(lit(1)).cast("long").as("n_parts"),
@@ -1050,11 +1037,8 @@ object Relational11 {
       .join(broadcast(t.nation.select("n_nationkey", "n_name")),
         col("c_nationkey") === col("n_nationkey"))
       .groupBy("n_name")
-      .agg(sum((graft.functions.Exact.discPrice(
-        col("l_extendedprice"), col("l_discount")) * lit(1000000))
-        .cast(org.apache.spark.sql.types.DecimalType(19, 0)))
-        .cast("long").as("rev_micros"))
-      .select(col("n_name"), expr("rev_micros div 10000").as("rev_cents"))
+      .agg(cents(sum(discPrice(col("l_extendedprice"), col("l_discount"))))
+        .as("rev_cents"))
     val tot = rev.agg(sum(col("rev_cents")).cast("long").as("rev_total"))
     val based = rev.crossJoin(broadcast(tot))
       .withColumn("base", expr(s"($AllocBudget * rev_cents) div rev_total"))

@@ -1,11 +1,10 @@
 package graft.operators
 
 import graft.Tables
-import graft.functions.Exact.discPrice
+import graft.functions.Exact.{d38, wholeUnits}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Round-13 relational/statistical additions: lagged series association
   * (cross-correlation, Kendall's τ-b), interval algebra (temporal
@@ -29,15 +28,9 @@ object Relational12 {
     * line count. Calendar-bounded (one row per ship day).
     */
   private def dailyRevCnt(t: Tables): DataFrame =
-    t.lineitem
-      .groupBy(col("l_shipdate").cast("date").as("d"))
-      .agg(
-        sum(discPrice(col("l_extendedprice"), col("l_discount"))).as("rev"),
-        count(lit(1)).as("y"))
-      .select(
-        datediff(col("d"), to_date(lit("1970-01-01"))).cast("long").as("ed"),
-        expr("CAST(rev * 1000000 AS BIGINT) div 1000000").as("x"),
-        col("y"))
+    Facts.dailyRevenue(t)
+      .select(Facts.epochDay(col("d")).cast("long").as("ed"),
+        wholeUnits(col("rev")).as("x"), col("lines").as("y"))
 
   private val MaxLag = 7
 
@@ -53,7 +46,6 @@ object Relational12 {
     */
   def crossCorrelation(t: Tables): DataFrame = {
     val daily = dailyRevCnt(t).localCheckpoint(true)
-    val d38 = DecimalType(38, 0)
     val pairs = daily
       .select(col("ed"), col("x"),
         explode(expr(s"sequence(0, $MaxLag)")).as("lag"))
@@ -409,19 +401,14 @@ object Relational12 {
     * part at any key width), and one re-aggregation — zero self-joins,
     * zero iteration, any depth.
     *
-    * Node revenue reports in WHOLE currency units (per-part micros
-    * integer-divided before the subtree sum, the dailyRevCnt
-    * convention): the root aggregates the entire corpus, and a micros
+    * Node revenue reports in WHOLE currency units (per-part revenue
+    * truncated before the subtree sum, the dailyRevCnt convention): the root aggregates the entire corpus, and a micros
     * sum would overflow BIGINT around sf30 (r13 ADVICE).
     */
   def hierarchyRollup(t: Tables): DataFrame = {
-    val perPart = t.lineitem
-      .groupBy("l_partkey")
-      .agg((sum(discPrice(col("l_extendedprice"), col("l_discount")))
-        * 1000000).cast("long").as("units"))
     val ancestors = (0 to 13).map(j => expr(s"l_partkey div ${pow10(j)}L"))
-    perPart
-      .select(expr("units div 1000000L").as("rev1"),
+    Facts.partRevenue(t)
+      .select(wholeUnits(col("rev")).as("rev1"),
         explode(array_distinct(array(ancestors: _*))).as("node"))
       .groupBy("node")
       .agg(count(lit(1)).as("n_parts"), sum(col("rev1")).as("rev"))

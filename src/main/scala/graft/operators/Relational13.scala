@@ -1,8 +1,8 @@
 package graft.operators
 
 import graft.Tables
-import graft.functions.Exact.{dec, decToDouble, decToDoubleSql, decToDoubleSigned,
-  decToDoubleSignedSql, discPrice, microUnits}
+import graft.functions.Exact.{cents, d38, dec, decToDouble, decToDoubleSql,
+  decToDoubleSigned, decToDoubleSignedSql, discPrice, microUnits, wholeUnits}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -21,8 +21,6 @@ import org.apache.spark.sql.types.DecimalType
   * convention) when the element count is corpus-sized.
   */
 object Relational13 {
-
-  private val d38 = DecimalType(38, 0)
 
   // ---------------------------------------------------------------- entropy
 
@@ -90,11 +88,7 @@ object Relational13 {
     * key order over dims-bounded lists.
     */
   def mutualInformation(t: Tables): DataFrame = {
-    val cells = t.events
-      .select(col("event_type").as("typ"),
-        pmod(datediff(col("ts").cast("date"), to_date(lit("1970-01-01"))),
-          lit(7)).cast("long").as("dow"))
-      .groupBy("typ", "dow").agg(count(lit(1)).as("o"))
+    val cells = Facts.eventWeekdayCells(t)
     val rt = cells.groupBy("typ").agg(sum(col("o")).as("rt"))
     val ct = cells.groupBy("dow").agg(sum(col("o")).as("ct"))
     val n1 = cells.agg(sum(col("o")).as("n"))
@@ -189,9 +183,8 @@ object Relational13 {
     * nation margins — the fact table aggregates exactly once.
     */
   def theilIndex(t: Tables): DataFrame = {
-    val perCust = t.orders
-      .groupBy("o_custkey")
-      .agg(microUnits(sum(dec(col("o_totalprice")))).cast("long").as("x"))
+    val perCust = Facts.customerRevenue(t)
+      .select(col("o_custkey"), microUnits(col("rev")).cast("long").as("x"))
       .join(broadcast(t.customer.select("c_custkey", "c_nationkey")),
         col("o_custkey") === col("c_custkey"))
       .join(broadcast(t.nation.select("n_nationkey", "n_name")),
@@ -286,11 +279,8 @@ object Relational13 {
   def hillTail(t: Tables): DataFrame = {
     val n = t.orders.count()
     val k = hillK(n)
-    val top = t.orders
-      .select(microUnits(dec(col("o_totalprice"))).cast("long").as("u"),
-        col("o_orderkey").as("ok"))
-      .orderBy(col("u").desc, col("ok"))
-      .limit(k + 1)
+    val top = Facts.ordersByPrice(t).limit(k + 1)
+      .select(microUnits(col("price")).cast("long").as("u"), col("ok"))
     top
       .agg(sort_array(collect_list(struct((-col("u")).as("nu"), col("ok"))))
         .as("arr"))
@@ -357,7 +347,7 @@ object Relational13 {
     */
   def propensityMatch(t: Tables): DataFrame = {
     val c = t.customer.select(col("c_custkey").as("key"),
-      (dec(col("c_acctbal")) * 100).cast("long").as("cents"),
+      cents(dec(col("c_acctbal"))).as("cents"),
       (col("c_mktsegment") === "BUILDING").as("treated"))
     val tr = c.where(col("treated"))
       .select(col("key").as("t_key"), col("cents").as("t_cents"),
@@ -397,6 +387,16 @@ object Relational13 {
 
   // ------------------------------------------------- seasonal Mann-Kendall
 
+  /** Net revenue per ship month in exact micros (`mon`, `units` as
+    * DECIMAL(38,0)): the calendar-bounded input of [[seasonalMk]] and
+    * [[friedmanTest]].
+    */
+  private def monthlyUnits(t: Tables): DataFrame =
+    t.lineitem
+      .groupBy(trunc(col("l_shipdate"), "month").as("mon"))
+      .agg(sum(microUnits(discPrice(col("l_extendedprice"), col("l_discount")))
+        .cast(d38)).as("units"))
+
   /** Seasonal Mann-Kendall: the [[Relational8.mkTrend]] statistic
     * computed WITHIN each month-of-year (January-to-January pairs only,
     * etc.) so a strong seasonal cycle cannot masquerade as — or mask —
@@ -406,10 +406,7 @@ object Relational13 {
     * revenue FIRST; the i<j self-join runs over ≤7 rows per season.
     */
   def seasonalMk(t: Tables): DataFrame = {
-    val monthly = t.lineitem
-      .groupBy(trunc(col("l_shipdate"), "month").as("mon"))
-      .agg(sum(microUnits(discPrice(col("l_extendedprice"), col("l_discount")))
-        .cast(d38)).as("units"))
+    val monthly = monthlyUnits(t)
       .select(month(col("mon")).cast("long").as("moy"),
         year(col("mon")).cast("long").as("yr"), col("units"))
       .localCheckpoint(true) // both pair sides + the tie scan
@@ -562,9 +559,8 @@ object Relational13 {
     * integer tie counts. All log-free doubles take the 12-dec rounding.
     */
   def kruskalWallis(t: Tables): DataFrame = {
-    val perCust = t.orders
-      .groupBy("o_custkey")
-      .agg(microUnits(sum(dec(col("o_totalprice")))).cast("long").as("x"))
+    val perCust = Facts.customerRevenue(t)
+      .select(col("o_custkey"), microUnits(col("rev")).cast("long").as("x"))
       .join(broadcast(t.customer.select("c_custkey", "c_mktsegment")),
         col("o_custkey") === col("c_custkey"))
       .select(col("c_mktsegment").as("seg"), col("x"))
@@ -656,10 +652,7 @@ object Relational13 {
     * over the 12 month terms in month order.
     */
   def friedmanTest(t: Tables): DataFrame = {
-    val monthly = t.lineitem
-      .groupBy(trunc(col("l_shipdate"), "month").as("mon"))
-      .agg(sum(microUnits(discPrice(col("l_extendedprice"), col("l_discount")))
-        .cast(d38)).as("units"))
+    val monthly = monthlyUnits(t)
       .select(year(col("mon")).cast("long").as("yr"),
         month(col("mon")).cast("long").as("moy"), col("units"))
     val complete = monthly.groupBy("yr").agg(count(lit(1)).as("km"))
@@ -743,12 +736,8 @@ object Relational13 {
     // inside decToDouble's exactness envelope (hi < 2⁵³, i.e. sums
     // < ~9·10²⁴ — micros squared blow past it and the hi conversion
     // rounding is then engine-specific)
-    val daily = t.lineitem
-      .groupBy(col("l_shipdate").cast("date").as("d"))
-      .agg(expr("CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * " +
-        "CAST(1 - CAST(l_discount AS DECIMAL(4,2)) AS DECIMAL(8,4)) " +
-        "AS DECIMAL(38,6))) * 1000000 AS DECIMAL(38,0)) div 1000000")
-        .cast(d38).as("units"))
+    val daily = Facts.dailyRevenue(t)
+      .select(col("d"), wholeUnits(col("rev")).cast(d38).as("units"))
     val monthlyMax = daily
       .groupBy(trunc(col("d"), "month").as("mon"))
       .agg(max(col("units")).as("mx"))

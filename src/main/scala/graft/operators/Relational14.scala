@@ -1,8 +1,8 @@
 package graft.operators
 
 import graft.Tables
-import graft.functions.Exact.{dec, decToDouble, decToDoubleSql, decToDoubleSigned,
-  decToDoubleSignedSql, discPrice, microUnits}
+import graft.functions.Exact.{d19, d38, dec, decToDouble, decToDoubleSql,
+  decToDoubleSigned, decToDoubleSignedSql, discPrice, microUnits, rate, wholeUnits}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -24,7 +24,6 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Relational14 {
 
-  private val d38 = DecimalType(38, 0)
 
   // ---------------------------------------------------------- AUC-ROC
 
@@ -182,9 +181,8 @@ object Relational14 {
       .agg(
         microUnits(sum(discPrice(col("l_extendedprice"), col("l_discount"))))
           .as("x"),
-        (sum(dec(col("l_quantity"))) * 100).cast(DecimalType(19, 0)).as("y"),
-        (sum(col("l_discount").cast(DecimalType(4, 2))) * 100)
-          .cast(DecimalType(19, 0)).as("z"))
+        (sum(dec(col("l_quantity"))) * 100).cast(d19).as("y"),
+        (sum(rate(col("l_discount"))) * 100).cast(d19).as("z"))
     val sums = per.agg(
       count(lit(1)).as("n"),
       sum(col("x")).cast(d38).as("sx"), sum(col("y")).cast(d38).as("sy"),
@@ -338,9 +336,8 @@ object Relational14 {
     * cancels in the ratio); per-group terms fold in segment order.
     */
   def leveneBf(t: Tables): DataFrame = {
-    val perCust = t.orders
-      .groupBy("o_custkey")
-      .agg(microUnits(sum(dec(col("o_totalprice")))).cast("long").as("x"))
+    val perCust = Facts.customerRevenue(t)
+      .select(col("o_custkey"), microUnits(col("rev")).cast("long").as("x"))
       .join(broadcast(t.customer.select("c_custkey", "c_mktsegment")),
         col("o_custkey") === col("c_custkey"))
       .select(col("c_mktsegment").as("seg"), col("x"))
@@ -453,12 +450,8 @@ object Relational14 {
     * add identical doubles in the identical sequence.
     */
   def ljungBox(t: Tables): DataFrame = {
-    val daily = t.lineitem
-      .groupBy(col("l_shipdate").cast("date").as("d"))
-      .agg(sum(discPrice(col("l_extendedprice"), col("l_discount"))).as("rev"))
-      .select(
-        datediff(col("d"), to_date(lit("1970-01-01"))).as("epoch_day"),
-        microUnits(col("rev")).as("v"))
+    val daily = Facts.dailyRevenue(t)
+      .select(Facts.epochDay(col("d")).as("epoch_day"), microUnits(col("rev")).as("v"))
       .localCheckpoint(true) // feeds the global moments AND both pair sides
     val mom = daily.agg(count(lit(1)).as("n"),
       sum(col("v")).cast(d38).as("s"),
@@ -558,14 +551,9 @@ object Relational14 {
     // rule: the intercept sits at the series' own magnitude and must
     // fit the DECIMAL(24,12) portable rounding (micros put it at ~10¹²
     // and overflow the 12 integer digits at sf0.01 already)
-    val daily = t.lineitem
-      .groupBy(col("l_shipdate").cast("date").as("d"))
-      .agg(sum(discPrice(col("l_extendedprice"), col("l_discount"))).as("rev"))
-      .select(
-        datediff(col("d"), to_date(lit("1970-01-01")))
-          .cast("long").as("td"),
-        microUnits(col("rev")).cast(d38).as("vm"))
-      .select(col("td"), expr("CAST(vm div 1000000 AS BIGINT)").as("v"))
+    val daily = Facts.dailyRevenue(t)
+      .select(Facts.epochDay(col("d")).cast("long").as("td"),
+        wholeUnits(col("rev")).as("v"))
     // NOT pinned (r15): daily feeds the moment sums AND the collected
     // series, but a localCheckpoint barrier measured 0.23 → 1.1 s at
     // sf0.1 — the eager materialization job costs more than recomputing
@@ -682,12 +670,8 @@ object Relational14 {
     * longs, 12-dec rounded.
     */
   def pettitt(t: Tables): DataFrame = {
-    val daily = t.lineitem
-      .groupBy(col("l_shipdate").cast("date").as("d"))
-      .agg(sum(discPrice(col("l_extendedprice"), col("l_discount"))).as("rev"))
-      .select(
-        datediff(col("d"), to_date(lit("1970-01-01")))
-          .cast("long").as("td"),
+    val daily = Facts.dailyRevenue(t)
+      .select(Facts.epochDay(col("d")).cast("long").as("td"),
         microUnits(col("rev")).cast("long").as("v"))
       .localCheckpoint(true) // feeds the value-domain scan AND the fold
     val byValue = daily.groupBy("v").agg(count(lit(1)).as("c"))
@@ -759,11 +743,6 @@ object Relational14 {
 
   // ---------------------------------------------------------- log-rank
 
-  /** Censoring horizon shared with [[Analytics.kaplanMeier]] (days a
-    * customer must be silent before the corpus end to count as
-    * churned). */
-  private val LrChurnGapDays = 90
-
   /** Log-rank (Mantel–Cox) test comparing the churn-survival curves of
     * BUILDING-segment customers against everyone else — "does this
     * segment actually churn differently", the two-sample inference
@@ -776,17 +755,10 @@ object Relational14 {
     * from the ROUNDED sums so both engines square identical doubles.
     */
   def logRank(t: Tables): DataFrame = {
-    val perCust = t.orders
-      .groupBy("o_custkey")
-      .agg(min(col("o_orderdate").cast("date")).as("f"),
-        max(col("o_orderdate").cast("date")).as("l"))
+    val durations = Facts.customerLifetimes(t)
       .join(broadcast(t.customer.select("c_custkey", "c_mktsegment")),
         col("o_custkey") === col("c_custkey"))
-    val end = t.orders.agg(max(col("o_orderdate").cast("date")).as("e"))
-    val durations = perCust.crossJoin(broadcast(end))
-      .select(
-        datediff(col("l"), col("f")).cast("long").as("t"),
-        (datediff(col("e"), col("l")) >= LrChurnGapDays).cast("long").as("ev"),
+      .select(col("t"), col("ev"),
         (col("c_mktsegment") === "BUILDING").cast("long").as("g"))
     val byT = durations.groupBy("t")
       .agg(sum(col("g") * col("ev")).as("d1"),
@@ -836,7 +808,7 @@ object Relational14 {
        |e AS (SELECT MAX(CAST(o_orderdate AS DATE)) AS e FROM orders),
        |durations AS (
        | SELECT CAST(date_diff('day', f, l) AS BIGINT) AS t,
-       |  CASE WHEN date_diff('day', l, e.e) >= $LrChurnGapDays
+       |  CASE WHEN date_diff('day', l, e.e) >= ${Facts.ChurnGapDays}
        |       THEN 1 ELSE 0 END AS ev,
        |  CASE WHEN c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END AS g
        | FROM per_cust

@@ -1,8 +1,8 @@
 package graft.operators
 
 import graft.Tables
-import graft.functions.Exact.{dec, decToDouble, decToDoubleSql, decToDoubleSigned,
-  decToDoubleSignedSql, discPrice}
+import graft.functions.Exact.{d38, dec, decToDouble, decToDoubleSql, decToDoubleSigned,
+  decToDoubleSignedSql, discPrice, wholeUnits}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -14,16 +14,6 @@ import org.apache.spark.sql.types.DecimalType
   * portable-rounding conventions.
   */
 object Relational15 {
-
-  private val d38 = DecimalType(38, 0)
-
-  /** Whole currency units — the extremeValue / durbinWatson envelope
-    * rule: means and their differences must fit the DECIMAL(24,12)
-    * portable rounding at any SF. The revenue sum is a NONNEGATIVE
-    * exact decimal (scale 6), so the long cast's toward-zero fraction
-    * truncation equals the oracle's `// 1000000` floor of micros.
-    */
-  private def wholeUnits(rev: Column): Column = rev.cast("long")
 
   // ------------------------------------------------------ Welch t-test
 
@@ -37,10 +27,8 @@ object Relational15 {
     * via the hi/lo split, identical trees both engines, 12-dec.
     */
   def welchTtest(t: Tables): DataFrame = {
-    val per = t.orders
-      .groupBy("o_custkey")
-      .agg(expr("CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) " +
-        "* 1000000 AS DECIMAL(38,0)) div 1000000 AS BIGINT)").as("x"))
+    val per = Facts.customerRevenue(t)
+      .select(col("o_custkey"), wholeUnits(col("rev")).as("x"))
       .join(broadcast(t.customer.select("c_custkey", "c_mktsegment")),
         col("o_custkey") === col("c_custkey"))
       .select((col("c_mktsegment") === "BUILDING").as("g"), col("x"))
@@ -312,13 +300,9 @@ object Relational15 {
     * the coefficients and F 12-dec rounded at the output seam.
     */
   def grangerLag1(t: Tables): DataFrame = {
-    val daily = t.lineitem
-      .groupBy(col("l_shipdate").cast("date").as("d"))
-      .agg(wholeUnits(sum(discPrice(col("l_extendedprice"), col("l_discount"))))
-          .cast("long").as("x"),
-        count(lit(1)).as("y"))
-      .select(datediff(col("d"), to_date(lit("1970-01-01"))).as("ed"),
-        col("x"), col("y"))
+    val daily = Facts.dailyRevenue(t)
+      .select(Facts.epochDay(col("d")).as("ed"),
+        wholeUnits(col("rev")).cast("long").as("x"), col("lines").as("y"))
       .localCheckpoint(true) // both pair sides
     val prev = daily.select(col("ed").as("pd"), col("x").as("x1"),
       col("y").as("y1"))
@@ -586,12 +570,10 @@ object Relational15 {
   def potGpd(t: Tables): DataFrame = {
     val n = t.orders.count()
     val k = potK(n)
-    val top = t.orders
-      .select(expr("CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 1000000 " +
-        "AS DECIMAL(38,0)) div 1000000").cast("long").as("u"),
-        col("o_orderkey").as("ok"))
-      .orderBy(col("u").desc, col("ok"))
-      .limit(k + 1)
+    // whole units are monotone in the price, so the top k + 1 by price
+    // hold the same unit values as the top k + 1 by unit
+    val top = Facts.ordersByPrice(t).limit(k + 1)
+      .select(wholeUnits(col("price")).as("u"), col("ok"))
     top
       .agg(sort_array(collect_list(struct((-col("u")).as("nu"), col("ok"))))
         .as("arr"))
@@ -683,12 +665,9 @@ object Relational15 {
   def hurst(t: Tables): DataFrame = {
     val spark = t.spark
     import spark.implicits._
-    val daily = t.lineitem
-      .groupBy(col("l_shipdate").cast("date").as("d"))
-      .agg(wholeUnits(sum(discPrice(col("l_extendedprice"), col("l_discount"))))
-        .as("v"))
-      .select(datediff(col("d"), to_date(lit("1970-01-01")))
-        .cast("long").as("ed"), col("v"))
+    val daily = Facts.dailyRevenue(t)
+      .select(Facts.epochDay(col("d")).cast("long").as("ed"),
+        wholeUnits(col("rev")).as("v"))
       .localCheckpoint(true) // one scan feeds all 7 scales
     val scales = HurstBlocks.toDF("m", "lnm")
     val blocks = daily

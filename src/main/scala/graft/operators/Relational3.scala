@@ -246,7 +246,7 @@ object Relational3 {
         sketch(
           h(col("o_custkey")),
           h(col("o_orderkey")),
-          (dec(col("o_totalprice")) * 100).cast("long")).as("sk"))
+          cents(dec(col("o_totalprice")))).as("sk"))
       .select(col("o_orderpriority"), col("n"), col("exact_customers"),
         col("sk.kmv_customers").as("kmv_customers"),
         col("sk.p50_price").as("p50_price"),
@@ -595,7 +595,7 @@ object Relational3 {
       .join(broadcast(t.region), col("n_regionkey") === col("r_regionkey"))
       .select(col("r_name"), col("n_name"),
         h(col("o_orderkey")).as("rh"),
-        (dec(col("o_totalprice")) * 100).cast("long").as("cents"))
+        cents(dec(col("o_totalprice"))).as("cents"))
     val partial = udaf(
       new graft.functions.KllPartial(KllCap),
       org.apache.spark.sql.Encoders.product[graft.functions.KllIn])

@@ -149,7 +149,7 @@ object Relational6 {
     */
   def mad(t: Tables): DataFrame = {
     val x = t.orders.select(col("o_orderpriority"),
-      (dec(col("o_totalprice")) * 100).cast("long").cast("double").as("v"))
+      cents(dec(col("o_totalprice"))).cast("double").as("v"))
     val med = x.groupBy("o_orderpriority")
       .agg(expr("percentile(v, 0.5)").as("med"), count(lit(1)).as("n"))
     x.join(broadcast(med), Seq("o_orderpriority"))

@@ -1,11 +1,10 @@
 package graft.operators
 
 import graft.Tables
-import graft.functions.Exact.{decToDouble, decToDoubleSql, discPrice, microUnits}
+import graft.functions.Exact.{d38, decToDouble, decToDoubleSql, discPrice, microUnits}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Market-structure and time-series diagnostics: supplier concentration
   * (Herfindahl-Hirschman) and revenue autocorrelation — the "how
@@ -20,7 +19,17 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Relational8 {
 
-  private val d38 = DecimalType(38, 0)
+  /** Supplier revenue in micros (`units`) with the supplier's nation
+    * (`n_name`): the input of [[hhi]], [[gini]] and [[lorenz]]. One fact
+    * aggregation by supplier, then two broadcast dimension joins.
+    */
+  private def nationSupplierUnits(t: Tables): DataFrame =
+    Facts.supplierRevenue(t)
+      .withColumn("units", microUnits(col("rev")))
+      .join(broadcast(t.supplier.select("s_suppkey", "s_nationkey")),
+        col("l_suppkey") === col("s_suppkey"))
+      .join(broadcast(t.nation.select("n_nationkey", "n_name")),
+        col("s_nationkey") === col("n_nationkey"))
 
   /** Herfindahl-Hirschman concentration of supplier revenue within each
     * nation: HHI = Σᵢ sᵢ² where sᵢ is supplier i's share of the nation's
@@ -32,15 +41,7 @@ object Relational8 {
     * one row per supplier. No global window, no driver state: 100 TB-safe.
     */
   def hhi(t: Tables): DataFrame = {
-    val perSupp = t.lineitem
-      .groupBy("l_suppkey")
-      .agg(sum(discPrice(col("l_extendedprice"), col("l_discount"))).as("rev"))
-      .withColumn("units", microUnits(col("rev")))
-    perSupp
-      .join(broadcast(t.supplier.select("s_suppkey", "s_nationkey")),
-        col("l_suppkey") === col("s_suppkey"))
-      .join(broadcast(t.nation.select("n_nationkey", "n_name")),
-        col("s_nationkey") === col("n_nationkey"))
+    nationSupplierUnits(t)
       .groupBy("n_name")
       .agg(
         count(lit(1)).as("n_suppliers"),
@@ -85,14 +86,7 @@ object Relational8 {
     * the statistic — fully deterministic.
     */
   def gini(t: Tables): DataFrame = {
-    val perSupp = t.lineitem
-      .groupBy("l_suppkey")
-      .agg(sum(discPrice(col("l_extendedprice"), col("l_discount"))).as("rev"))
-      .withColumn("units", microUnits(col("rev")))
-      .join(broadcast(t.supplier.select("s_suppkey", "s_nationkey")),
-        col("l_suppkey") === col("s_suppkey"))
-      .join(broadcast(t.nation.select("n_nationkey", "n_name")),
-        col("s_nationkey") === col("n_nationkey"))
+    val perSupp = nationSupplierUnits(t)
     val w = org.apache.spark.sql.expressions.Window.partitionBy("n_name")
       .orderBy(col("units"), col("l_suppkey"))
     perSupp
@@ -146,11 +140,7 @@ object Relational8 {
     * conventions disagree (Spark 1=Sun..7, DuckDB 0=Sun..6).
     */
   def chiSquare(t: Tables): DataFrame = {
-    val cells = t.events
-      .select(col("event_type").as("typ"),
-        pmod(datediff(col("ts").cast("date"), to_date(lit("1970-01-01"))),
-          lit(7)).cast("long").as("dow"))
-      .groupBy("typ", "dow").agg(count(lit(1)).as("o"))
+    val cells = Facts.eventWeekdayCells(t)
     val rt = cells.groupBy("typ").agg(sum(col("o")).as("rt"))
     val ct = cells.groupBy("dow").agg(sum(col("o")).as("ct"))
     val n1 = cells.agg(sum(col("o")).as("n"))
@@ -201,6 +191,16 @@ object Relational8 {
       | list_reduce(list(term ORDER BY typ, dow), (a, x) -> a + x) AS chi2
       |FROM terms""".stripMargin
 
+  /** Part revenue in micros (`units`, long) with `promo` = 1 for PROMO
+    * parts: the input of [[ksTest]] and [[mannWhitney]].
+    */
+  private def promoPartUnits(t: Tables): DataFrame =
+    Facts.partRevenue(t)
+      .withColumn("units", microUnits(col("rev")).cast("long"))
+      .join(broadcast(t.part.select(col("p_partkey"), col("p_type"))),
+        col("l_partkey") === col("p_partkey"))
+      .withColumn("promo", (col("p_type") === "PROMO").cast("long"))
+
   /** Two-sample Kolmogorov–Smirnov distance between the per-part
     * revenue distributions of PROMO vs non-PROMO parts — "did the promo
     * catalogue monetize differently", the distribution-level comparison
@@ -216,13 +216,7 @@ object Relational8 {
     * fact aggregation.
     */
   def ksTest(t: Tables): DataFrame = {
-    val perPart = t.lineitem
-      .groupBy("l_partkey")
-      .agg(sum(discPrice(col("l_extendedprice"), col("l_discount"))).as("rev"))
-      .withColumn("units", microUnits(col("rev")).cast("long"))
-      .join(broadcast(t.part.select(col("p_partkey"), col("p_type"))),
-        col("l_partkey") === col("p_partkey"))
-      .withColumn("promo", (col("p_type") === "PROMO").cast("long"))
+    val perPart = promoPartUnits(t)
     val byValue = perPart.groupBy("units")
       .agg(sum(col("promo")).as("a"), sum(lit(1L) - col("promo")).as("b"))
       // pinned per the withGlobalPrefixAggs call-site contract: the scan
@@ -300,13 +294,7 @@ object Relational8 {
     * aggregation does the heavy lifting.
     */
   def mannWhitney(t: Tables): DataFrame = {
-    val perPart = t.lineitem
-      .groupBy("l_partkey")
-      .agg(sum(discPrice(col("l_extendedprice"), col("l_discount"))).as("rev"))
-      .withColumn("units", microUnits(col("rev")).cast("long"))
-      .join(broadcast(t.part.select(col("p_partkey"), col("p_type"))),
-        col("l_partkey") === col("p_partkey"))
-      .withColumn("promo", (col("p_type") === "PROMO").cast("long"))
+    val perPart = promoPartUnits(t)
     val byValue = perPart.groupBy("units")
       .agg(sum(col("promo")).as("a"), count(lit(1)).as("c"))
       // pinned per the withGlobalPrefixAggs call-site contract (the scan
@@ -379,12 +367,8 @@ object Relational8 {
     * [[decToDouble]]-converted sums with the oracle's expression tree.
     */
   def autocorr(t: Tables): DataFrame = {
-    val daily = t.lineitem
-      .groupBy(col("l_shipdate").cast("date").as("d"))
-      .agg(sum(discPrice(col("l_extendedprice"), col("l_discount"))).as("rev"))
-      .select(
-        datediff(col("d"), to_date(lit("1970-01-01"))).as("epoch_day"),
-        microUnits(col("rev")).as("v"))
+    val daily = Facts.dailyRevenue(t)
+      .select(Facts.epochDay(col("d")).as("epoch_day"), microUnits(col("rev")).as("v"))
     val x = daily.select(col("epoch_day"), col("v").as("x"))
       .withColumn("lag", explode(array((1 to AcfMaxLag).map(k => lit(k.toLong)): _*)))
     val y = daily.select(col("epoch_day").as("y_day"), col("v").as("y"))
@@ -407,6 +391,14 @@ object Relational8 {
       .orderBy("lag")
   }
 
+  /** The daily revenue series as (`epoch_day`, `v` = micros, long): the
+    * input of [[cusum]] and [[runsTest]].
+    */
+  private def dailyMicros(t: Tables): DataFrame =
+    Facts.dailyRevenue(t)
+      .select(Facts.epochDay(col("d")).as("epoch_day"),
+        microUnits(col("rev")).cast("long").as("v"))
+
   /** CUSUM upward-shift detection over the daily revenue series — the
     * "did the level change, and when" monitor (Page's cumulative sum):
     * Sₜ = max(0, Sₜ₋₁ + (vₜ − μ)) with μ = the series' own integer mean
@@ -422,12 +414,7 @@ object Relational8 {
     * (days observed, integer mean, peak CUSUM and its day).
     */
   def cusum(t: Tables): DataFrame = {
-    val daily = t.lineitem
-      .groupBy(col("l_shipdate").cast("date").as("d"))
-      .agg(sum(discPrice(col("l_extendedprice"), col("l_discount"))).as("rev"))
-      .select(
-        datediff(col("d"), to_date(lit("1970-01-01"))).as("epoch_day"),
-        microUnits(col("rev")).cast("long").as("v"))
+    val daily = dailyMicros(t)
     daily
       .agg(
         count(lit(1)).as("n"),
@@ -488,12 +475,7 @@ object Relational8 {
     * window; n₁·n₂ products stay far under 2⁵³ for any calendar span.
     */
   def runsTest(t: Tables): DataFrame = {
-    val daily = t.lineitem
-      .groupBy(col("l_shipdate").cast("date").as("d"))
-      .agg(sum(discPrice(col("l_extendedprice"), col("l_discount"))).as("rev"))
-      .select(
-        datediff(col("d"), to_date(lit("1970-01-01"))).as("epoch_day"),
-        microUnits(col("rev")).cast("long").as("v"))
+    val daily = dailyMicros(t)
     val mu = daily.agg(expr("sum(v) div count(1)").as("mu"))
     val w = org.apache.spark.sql.expressions.Window.orderBy("epoch_day")
     daily.crossJoin(broadcast(mu))
@@ -588,14 +570,7 @@ object Relational8 {
     * bounded, 100 TB-safe.
     */
   def lorenz(t: Tables): DataFrame = {
-    val perSupp = t.lineitem
-      .groupBy("l_suppkey")
-      .agg(sum(discPrice(col("l_extendedprice"), col("l_discount"))).as("rev"))
-      .withColumn("units", microUnits(col("rev")))
-      .join(broadcast(t.supplier.select("s_suppkey", "s_nationkey")),
-        col("l_suppkey") === col("s_suppkey"))
-      .join(broadcast(t.nation.select("n_nationkey", "n_name")),
-        col("s_nationkey") === col("n_nationkey"))
+    val perSupp = nationSupplierUnits(t)
     val w = Window.partitionBy("n_name").orderBy(col("units"), col("l_suppkey"))
     val withN = Window.partitionBy("n_name")
     val cum = Window.partitionBy("n_name").orderBy("decile")

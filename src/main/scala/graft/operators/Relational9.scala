@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Tables
-import graft.functions.Exact.{dec, discPrice}
+import graft.functions.Exact.{cents, d38, dec, discPrice, microUnits}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -28,12 +28,9 @@ object Relational9 {
     * domain; pattern ids are pure integer comparisons.
     */
   def ordinalPatterns(t: Tables): DataFrame = {
-    val daily = t.lineitem
-      .groupBy(col("l_shipdate").cast("date").as("d"))
-      .agg(sum(discPrice(col("l_extendedprice"), col("l_discount"))).as("rev"))
-      .select(
-        datediff(col("d"), to_date(lit("1970-01-01"))).as("epoch_day"),
-        (col("rev") * 1000000).cast("long").as("v"))
+    val daily = Facts.dailyRevenue(t)
+      .select(Facts.epochDay(col("d")).as("epoch_day"),
+        microUnits(col("rev")).cast("long").as("v"))
     val w = Window.orderBy("epoch_day")
     daily
       .withColumn("v1", lag(col("v"), 2).over(w))
@@ -94,8 +91,8 @@ object Relational9 {
       .join(broadcast(t.part.select("p_partkey", "p_brand", "p_size")),
         col("l_partkey") === col("p_partkey"))
       .groupBy(col("p_brand"), col("p_size"))
-      .agg((sum(discPrice(col("l_extendedprice"), col("l_discount")))
-        * 1000000).cast("long").as("wu"))
+      .agg(microUnits(sum(discPrice(col("l_extendedprice"), col("l_discount"))))
+        .cast("long").as("wu"))
     val w = Window.partitionBy("p_brand").orderBy("p_size")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val tot = Window.partitionBy("p_brand")
@@ -426,10 +423,8 @@ object Relational9 {
     * makes bucket assignment deterministic under ties.
     */
   def equidepthHist(t: Tables): DataFrame = {
-    val perPart = t.lineitem
-      .groupBy("l_partkey")
-      .agg((sum(discPrice(col("l_extendedprice"), col("l_discount")))
-        * 1000000).cast("long").as("units"))
+    val perPart = Facts.partRevenue(t)
+      .select(col("l_partkey"), microUnits(col("rev")).cast("long").as("units"))
     val (ranked, total) = Ranks.withGlobalRank(
       perPart, "_grk", col("units"), col("l_partkey"))
     ranked
@@ -542,12 +537,10 @@ object Relational9 {
     * month broadcast join, one bounded per-month aggregation.
     */
   def priceIndex(t: Tables): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
     val pm = t.lineitem
       .groupBy(col("l_partkey"),
         date_format(col("l_shipdate"), "yyyy-MM").as("ym"))
-      .agg(((sum(dec(col("l_extendedprice"))) * 1000000).cast("long"))
-        .as("ext_micros"),
+      .agg(microUnits(sum(dec(col("l_extendedprice")))).cast("long").as("ext_micros"),
         sum(col("l_quantity").cast("long")).as("qty"))
       .select(col("l_partkey"), col("ym"),
         expr("ext_micros div qty").as("p_micros"), col("qty"))
@@ -555,7 +548,6 @@ object Relational9 {
     val basket = pm.crossJoin(broadcast(base))
       .where(col("ym") === col("ym0"))
       .select(col("l_partkey"), col("p_micros").as("p0"), col("qty").as("q0"))
-    val d38 = DecimalType(38, 0)
     pm.join(basket, Seq("l_partkey"))
       .groupBy("ym")
       .agg(count(lit(1)).as("n_common_parts"),
@@ -621,9 +613,7 @@ object Relational9 {
     // through DECIMAL(12,2) first: the raw column is a parquet double,
     // and double×100 → long TRUNCATES in Spark but ROUNDS in DuckDB
     val v = t.lineitem.select(
-      (col("l_extendedprice")
-        .cast(org.apache.spark.sql.types.DecimalType(12, 2)) * 100)
-        .cast("long").as("c"),
+      cents(dec(col("l_extendedprice"))).as("c"),
       col("l_orderkey"), col("l_linenumber"))
     val st = v.agg(count(lit(1)).as("n"), min(col("c")).as("mn"),
         max(col("c")).as("mx"))

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Tables
-import graft.functions.Exact.{decToDouble, decToDoubleSql}
+import graft.functions.Exact.{d38, decToDouble, decToDoubleSql}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -444,8 +444,8 @@ object Sampling {
   def sampleEss(t: Tables): DataFrame =
     t.documents.groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
-        sum(col("n_chars").cast(DecimalType(38, 0))).as("sw"),
-        sum((col("n_chars") * col("n_chars")).cast(DecimalType(38, 0)))
+        sum(col("n_chars").cast(d38)).as("sw"),
+        sum((col("n_chars") * col("n_chars")).cast(d38))
           .as("sw2"))
       .select(col("source"), col("n_docs"),
         col("sw").cast("long").as("sum_w"),
@@ -592,7 +592,7 @@ object Sampling {
       .withColumn("est", col("sw").cast("double") / col("nw").cast("double"))
     val base = t.documents.groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
-        (sum(col("n_chars").cast(DecimalType(38, 0))).cast("double") /
+        (sum(col("n_chars").cast(d38)).cast("double") /
           count(lit(1))).cast(DecimalType(24, 12)).cast("double")
           .as("mean_chars"))
     byRep.groupBy("source")

@@ -280,6 +280,31 @@ object Similarity {
     (lloyd(vecs, init), init)
   }
 
+  /** The IVF query vector (vec 0). It usually rode along in the k-means
+    * init collect (vec 0 is among the first [[NumCells]] ids); only an
+    * id-gapped corpus pays an extra bounded fetch.
+    */
+  private def ivfQuery(vecs: DataFrame, init: Seq[(Int, Seq[Double])]): Seq[Double] =
+    init.find(_._1 == 0).map(_._2).getOrElse(
+      vecs.where(col("vec_id") === 0).select(col("v"))
+        .collect()(0).getSeq[Double](0))
+
+  /** Cell ids nearest-first for query `qv`: probe rank c·c − 2q·c (q·q
+    * is row-constant), ties to the smaller id, with the SAME sequential
+    * fold the SQL oracle's list_dot_product uses — so the ranking is
+    * bit-identical across engines, not just mathematically equal (the
+    * (a−b)² form accumulates different rounding).
+    */
+  private def probeOrder(cents: Seq[(Int, Seq[Double])], qv: Seq[Double]): Seq[Int] =
+    cents
+      .map { case (id, c) =>
+        val cc = c.map(x => x * x).sum
+        val qc = c.zip(qv).map { case (a, b) => a * b }.sum
+        (id, cc - 2.0 * qc)
+      }
+      .sortBy(p => (p._2, p._1))
+      .map(_._1)
+
   /** The bounded driver model a STREAMING ANN gate broadcasts: the
     * k-means coarse quantizer, the PQ codebook, and the tracked query
     * vector — trained once offline over the corpus, the anomaly-gate
@@ -294,9 +319,7 @@ object Similarity {
     val vecs = vectors(t).cache()
     val (cents, init) = trainKmeansShared(t, vecs)
     val pq = Embeddings.trainPqShared(t, vecs)
-    val qv = init.find(_._1 == 0).map(_._2).getOrElse(
-      vecs.where(col("vec_id") === 0).select(col("v"))
-        .collect()(0).getSeq[Double](0))
+    val qv = ivfQuery(vecs, init)
     vecs.unpersist(false)
     AnnGateModel(qv, cents, pq)
   }
@@ -319,26 +342,10 @@ object Similarity {
     val (cents, init) = trainKmeansShared(t, vecs)
     def assign(cs: Seq[(Int, Seq[Double])]): DataFrame =
       assignCells(vecs, cs).drop("d")
-    // the query vector usually rode along in the init collect (vec 0 is
-    // among the first NumCells ids); only an id-gapped corpus pays an
-    // extra bounded fetch. No separate cache of the assignment — the
-    // final query is its only consumer and reads the cached base vectors.
-    val qv = init.find(_._1 == 0).map(_._2).getOrElse(
-      vecs.where(col("vec_id") === 0).select(col("v"))
-        .collect()(0).getSeq[Double](0))
-    // probe rank = c·c − 2q·c (q·q is row-constant), with the SAME
-    // sequential fold the SQL oracle's list_dot_product uses — so the
-    // ranking is bit-identical across engines, not just mathematically
-    // equal (the (a−b)² form accumulates different rounding)
-    val probeCells = cents
-      .map { case (id, c) =>
-        val cc = c.map(x => x * x).sum
-        val qc = c.zip(qv).map { case (a, b) => a * b }.sum
-        (id, cc - 2.0 * qc)
-      }
-      .sortBy(p => (p._2, p._1))
-      .take(NumProbes)
-      .map(_._1)
+    // no separate cache of the assignment — the final query is its only
+    // consumer and reads the cached base vectors
+    val qv = ivfQuery(vecs, init)
+    val probeCells = probeOrder(cents, qv).take(NumProbes)
     val out = assign(cents)
       .where(col("cell").isin(probeCells: _*) && col("vec_id") =!= 0)
       .select(col("vec_id"), cosine(col("v"), typedLit(qv)).as("cosine"), col("cell"))
@@ -347,6 +354,28 @@ object Similarity {
     // the cache only serves the training iterations above; release it so
     // library callers don't accumulate leaked storage (the final probe
     // query re-reads the narrow source once)
+    vecs.unpersist(false)
+    out
+  }
+
+  /** The shared IVF-PQ scoring pipeline: both models trained, the
+    * query's probe cells chosen, survivors ADC-scored from codes alone —
+    * returned UNRANKED as (vec_id, adc_dist) so [[ivfPqTopK]] and the
+    * hybrid-retrieval fusion arm ([[Hybrid.hybridRrf]]) share one
+    * definition of the vector ranking's inputs.
+    */
+  private[operators] def ivfPqAdc(t: Tables): DataFrame = {
+    val vecs = vectors(t).cache()
+    val (cents, init) = trainKmeansShared(t, vecs)
+    val pq = Embeddings.trainPqShared(t, vecs)
+    val qv = ivfQuery(vecs, init)
+    val probeCells = probeOrder(cents, qv).take(NumProbes)
+    val survivors = assignCells(vecs, cents)
+      .where(col("cell").isin(probeCells: _*) && col("vec_id") =!= 0)
+      .select(col("vec_id"), col("v"))
+    // scoring = the SHARED ADC tail on the pruned candidate set
+    val out = Embeddings.adcScores(Embeddings.subExplode(survivors),
+      Embeddings.querySubvectors(vecs), pq)
     vecs.unpersist(false)
     out
   }
@@ -368,45 +397,9 @@ object Similarity {
     * probe choice, the PQ chain (CTE-prefixed to coexist), and the
     * decimal-portable ADC sum.
     */
-  /** The shared IVF-PQ scoring pipeline: both models trained, the
-    * query's probe cells chosen, survivors ADC-scored from codes alone —
-    * returned UNRANKED as (vec_id, adc_dist) so [[ivfPqTopK]] and the
-    * hybrid-retrieval fusion arm ([[Hybrid.hybridRrf]]) share one
-    * definition of the vector ranking's inputs.
-    */
-  private[operators] def ivfPqAdc(t: Tables): DataFrame = {
-    val vecs = vectors(t).cache()
-    val (cents, init) = trainKmeansShared(t, vecs)
-    val pq = Embeddings.trainPqShared(t, vecs)
-    val qv = init.find(_._1 == 0).map(_._2).getOrElse(
-      vecs.where(col("vec_id") === 0).select(col("v"))
-        .collect()(0).getSeq[Double](0))
-    val probeCells = cents
-      .map { case (id, c) =>
-        val cc = c.map(x => x * x).sum
-        val qc = c.zip(qv).map { case (a, b) => a * b }.sum
-        (id, cc - 2.0 * qc)
-      }
-      .sortBy(p => (p._2, p._1))
-      .take(NumProbes)
-      .map(_._1)
-    val survivors = assignCells(vecs, cents)
-      .where(col("cell").isin(probeCells: _*) && col("vec_id") =!= 0)
-      .select(col("vec_id"), col("v"))
-    // scoring = the SHARED ADC tail on the pruned candidate set
-    val out = Embeddings.adcScores(Embeddings.subExplode(survivors),
-      Embeddings.querySubvectors(vecs), pq)
-    vecs.unpersist(false)
-    out
-  }
-
   def ivfPqTopK(t: Tables): DataFrame =
     ivfPqAdc(t).orderBy(col("adc_dist"), col("vec_id")).limit(10)
 
-  /** Oracle: k-means replay + probe choice + the "pq"-prefixed PQ chain
-    * + the survivor filter + the decimal-portable ADC aggregation, all
-    * in one WITH.
-    */
   /** The CTE chain of [[ivfPqAdc]]: k-means replay, probe choice,
     * "pq"-prefixed PQ chain, survivor filter, and the decimal-portable
     * ADC aggregation, ending in `adc(vec_id, adc_dist)` — shared by
@@ -443,6 +436,10 @@ object Similarity {
        | JOIN qs ON qs.s = pqa2.s
        | GROUP BY pqa2.vec_id)""".stripMargin
 
+  /** Oracle: k-means replay + probe choice + the "pq"-prefixed PQ chain
+    * + the survivor filter + the decimal-portable ADC aggregation, all
+    * in one WITH.
+    */
   val ivfPqTopKSql: String =
     s"""WITH $ivfPqAdcCte
        |SELECT vec_id, adc_dist FROM adc
@@ -1721,15 +1718,9 @@ object Similarity {
   def ivfSweep(t: Tables): DataFrame = {
     val vecs = vectors(t)
     val (cents, init) = trainKmeansShared(t, vecs)
-    val qv = init.find(_._1 == 0).map(_._2).getOrElse(
-      vecs.where(col("vec_id") === 0).select(col("v"))
-        .collect()(0).getSeq[Double](0))
-    val rankedCells = cents.map { case (id, c) =>
-        val cc = c.map(x => x * x).sum
-        val qc = c.zip(qv).map { case (a, b) => a * b }.sum
-        (id, cc - 2.0 * qc)
-      }.sortBy(p => (p._2, p._1)).zipWithIndex
-      .map { case ((id, _), i) => (id, i + 1) }.toMap
+    val qv = ivfQuery(vecs, init)
+    val rankedCells = probeOrder(cents, qv).zipWithIndex
+      .map { case (id, i) => (id, i + 1) }.toMap
     val assigned = assignCells(vecs, cents).drop("d")
       .where(col("vec_id") =!= 0)
       .withColumn("cell_rank", element_at(typedLit(rankedCells), col("cell")))

@@ -566,6 +566,31 @@ object TextAnalysis3 {
        |   frac_nonalpha <= $OcrMaxNonAlphaFrac AS keep
        |FROM m ORDER BY doc_id""".stripMargin
 
+  /** Token counts per (`source`, `token`) as `c_st`, with the source
+    * total `t_s`, the corpus-wide token total `c_t` and the corpus total
+    * `t` attached: the input of [[klSourceDrift]] and
+    * [[jsSourceDivergence]]. The source totals (source-dim) and the one
+    * corpus row are bounded, so they broadcast. The token totals are
+    * VOCABULARY-sized and grow with the corpus (Heaps' law: 10⁸–10⁹
+    * types on web-scale text), so they take a plain equi-join: AQE still
+    * broadcasts them when a corpus is actually small, without a hint
+    * overriding the size check into an OOM.
+    */
+  private def sourceTokenCounts(t: Tables): DataFrame = {
+    val toks = t.documents
+      .select(col("source"), explode(split(col("text"), " ")).as("token"))
+      .where(length(col("token")) > 0)
+    val st = toks.groupBy("source", "token").agg(count(lit(1)).as("c_st"))
+      .localCheckpoint(true)
+    val srcTot = st.groupBy("source").agg(sum(col("c_st")).as("t_s"))
+    val tokTot = st.groupBy("token").agg(sum(col("c_st")).as("c_t"))
+    val tot = st.agg(sum(col("c_st")).as("t"))
+    st
+      .join(broadcast(srcTot), Seq("source"))
+      .join(tokTot, Seq("token"))
+      .crossJoin(broadcast(tot))
+  }
+
   /** Per-source unigram KL divergence from the corpus distribution —
     * KL(p_src ‖ p_corpus) = Σ_t (c_st/T_s)·ln(c_st·T / (T_s·C_t)),
     * the "which ingestion source drifted off the corpus language" score
@@ -579,23 +604,7 @@ object TextAnalysis3 {
     */
   def klSourceDrift(t: Tables): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    val toks = t.documents
-      .select(col("source"), explode(split(col("text"), " ")).as("token"))
-      .where(length(col("token")) > 0)
-    val st = toks.groupBy("source", "token").agg(count(lit(1)).as("c_st"))
-      .localCheckpoint(true)
-    val srcTot = st.groupBy("source").agg(sum(col("c_st")).as("t_s"))
-    val tokTot = st.groupBy("token").agg(sum(col("c_st")).as("c_t"))
-    val tot = st.agg(sum(col("c_st")).as("t"))
-    // srcTot (source-dim) and tot (1 row) are bounded — broadcast hints
-    // are safe. tokTot is VOCABULARY-sized and grows with the corpus
-    // (Heaps' law: 10⁸–10⁹ types on web-scale text), so it gets a plain
-    // equi-join: AQE still broadcasts it when a corpus is actually
-    // small, without a hint overriding the size check into an OOM.
-    st
-      .join(broadcast(srcTot), Seq("source"))
-      .join(tokTot, Seq("token"))
-      .crossJoin(broadcast(tot))
+    sourceTokenCounts(t)
       .withColumn("term",
         (col("c_st").cast("double") / col("t_s").cast("double")) *
           log((col("c_st").cast("double") * col("t").cast("double")) /
@@ -826,20 +835,9 @@ object TextAnalysis3 {
     */
   def jsSourceDivergence(t: Tables): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    val toks = t.documents
-      .select(col("source"), explode(split(col("text"), " ")).as("token"))
-      .where(length(col("token")) > 0)
-    val st = toks.groupBy("source", "token").agg(count(lit(1)).as("c_st"))
-      .localCheckpoint(true)
-    val srcTot = st.groupBy("source").agg(sum(col("c_st")).as("t_s"))
-    val tokTot = st.groupBy("token").agg(sum(col("c_st")).as("c_t"))
-    val tot = st.agg(sum(col("c_st")).as("t"))
     val px = col("c_st").cast("double") / col("t_s").cast("double")
     val qx = col("c_t").cast("double") / col("t").cast("double")
-    st
-      .join(broadcast(srcTot), Seq("source")) // source-dim: bounded
-      .join(tokTot, Seq("token"))             // vocab-sized: plain join
-      .crossJoin(broadcast(tot))              // 1 row
+    sourceTokenCounts(t)
       .withColumn("term_p", px * log(lit(2.0) * px / (px + qx)))
       .withColumn("term_q", qx * log(lit(2.0) * qx / (px + qx)))
       .groupBy("source")
@@ -847,7 +845,7 @@ object TextAnalysis3 {
         first(col("t_s")).as("n_tokens"),
         first(col("t")).as("t"),
         countDistinct(col("token")).as("n_types"),
-        sum(col("c_t").cast(DecimalType(38, 0))).as("c_pres"),
+        sum(col("c_t").cast(graft.functions.Exact.d38)).as("c_pres"),
         sum(col("term_p").cast(DecimalType(38, 30))).cast("double").as("sum_p"),
         sum(col("term_q").cast(DecimalType(38, 30))).cast("double").as("sum_q"))
       .select(col("source"), col("n_tokens").cast("long").as("n_tokens"),

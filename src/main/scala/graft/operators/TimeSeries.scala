@@ -311,6 +311,22 @@ object TimeSeries {
 
   private val EwmaWindow = 20
 
+  /** Each user's latest event (ts, event_id order) with `vals`, the
+    * values of its trailing [[EwmaWindow]] events in time order —
+    * the input [[ewmaSmooth]] and [[holt]] fold. Both windows partition
+    * by user, so per-row state is bounded.
+    */
+  private def latestTrailingValues(t: Tables): DataFrame = {
+    val wTrail = Window.partitionBy("user_id").orderBy("ts", "event_id")
+      .rowsBetween(-(EwmaWindow - 1), Window.currentRow)
+    val wLatest = Window.partitionBy("user_id")
+      .orderBy(col("ts").desc, col("event_id").desc)
+    t.events
+      .withColumn("vals", collect_list(col("value")).over(wTrail))
+      .withColumn("rk", row_number().over(wLatest))
+      .where(col("rk") === 1)
+  }
+
   /** Per-user EWMA (α = ½) of event values over the trailing
     * [[EwmaWindow]] events, reported at each user's latest event — the
     * standard smoothed-activity feature. The fold `acc ← (acc + x) / 2`
@@ -324,14 +340,7 @@ object TimeSeries {
     * bounded per-row state: corpus-scale safe.
     */
   def ewmaSmooth(t: Tables): DataFrame = {
-    val wTrail = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      .rowsBetween(-(EwmaWindow - 1), Window.currentRow)
-    val wLatest = Window.partitionBy("user_id")
-      .orderBy(col("ts").desc, col("event_id").desc)
-    t.events
-      .withColumn("vals", collect_list(col("value")).over(wTrail))
-      .withColumn("rk", row_number().over(wLatest))
-      .where(col("rk") === 1)
+    latestTrailingValues(t)
       .select(col("user_id"), col("ts"), col("value"),
         expr(s"aggregate(slice(vals, 2, ${EwmaWindow - 1}), vals[0]," +
           " (acc, x) -> (acc + x) / 2)").as("ewma"))
@@ -402,13 +411,12 @@ object TimeSeries {
     * the oracle's expression tree.
     */
   def rollingCorr(t: Tables): DataFrame = {
-    val d38 = DecimalType(38, 0)
     val daily = t.lineitem
       .groupBy(col("l_shipdate").cast("date").as("d"))
       .agg(
         sum((dec(col("l_quantity")) * 100).cast("long")).as("qc"),
-        sum((dec(col("l_extendedprice")) * 100).cast("long")).as("pc"))
-      .withColumn("epoch_day", datediff(col("d"), to_date(lit("1970-01-01"))))
+        sum(cents(dec(col("l_extendedprice")))).as("pc"))
+      .withColumn("epoch_day", Facts.epochDay(col("d")))
     val win = Window.orderBy("epoch_day").rangeBetween(-6, Window.currentRow)
     val toD = graft.functions.Exact.decToDouble _
     daily
@@ -479,7 +487,7 @@ object TimeSeries {
       .groupBy(col("p_brand").as("brand"),
         date_trunc("month", col("l_shipdate")).cast("date").as("month"))
       .agg(sum(discPrice(col("l_extendedprice"), col("l_discount"))).as("rev"))
-      .withColumn("y", floor(col("rev") * 100).cast("long"))
+      .withColumn("y", cents(col("rev")))
       .withColumn("x", months_between(col("month"),
         min(col("month")).over(Window.partitionBy("brand"))).cast("long"))
     val s = monthly.groupBy("brand").agg(
@@ -535,14 +543,7 @@ object TimeSeries {
     * Entity-partitioned window, bounded per-row state: corpus-scale safe.
     */
   def holt(t: Tables): DataFrame = {
-    val wTrail = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      .rowsBetween(-(EwmaWindow - 1), Window.currentRow)
-    val wLatest = Window.partitionBy("user_id")
-      .orderBy(col("ts").desc, col("event_id").desc)
-    t.events
-      .withColumn("vals", collect_list(col("value")).over(wTrail))
-      .withColumn("rk", row_number().over(wLatest))
-      .where(col("rk") === 1)
+    latestTrailingValues(t)
       .withColumn("st", expr(
         s"""aggregate(slice(vals, 2, ${EwmaWindow - 1}),
            |  named_struct('l', vals[0], 'b', CAST(0.0 AS DOUBLE)),
@@ -608,12 +609,9 @@ object TimeSeries {
     * domain.
     */
   def theilSen(t: Tables): DataFrame = {
-    val daily = t.lineitem
-      .groupBy(col("l_shipdate").cast("date").as("d"))
-      .agg(sum(discPrice(col("l_extendedprice"), col("l_discount"))).as("rev"))
-      .select(
-        datediff(col("d"), to_date(lit("1970-01-01"))).cast("long").as("ed"),
-        (col("rev") * 1000000).cast("long").as("v"))
+    val daily = Facts.dailyRevenue(t)
+      .select(Facts.epochDay(col("d")).cast("long").as("ed"),
+        microUnits(col("rev")).cast("long").as("v"))
       // pinned (localCheckpoint, not persist — the cached-plan/AQE rule)
       .localCheckpoint(true)
     val span = daily.agg(max(col("ed")).as("mxd"))
@@ -680,9 +678,7 @@ object TimeSeries {
       // residual in DECIMAL(38,0): slope·ed can cross 2⁶³ on long-span
       // high-volume series even when slope and v individually fit longs
       .select(col("np"), col("slope"),
-        (col("v").cast(org.apache.spark.sql.types.DecimalType(38, 0)) -
-          col("slope").cast(org.apache.spark.sql.types.DecimalType(19, 0)) *
-            col("ed").cast(org.apache.spark.sql.types.DecimalType(19, 0))).as("r"))
+        (col("v").cast(d38) - col("slope").cast(d19) * col("ed").cast(d19)).as("r"))
       .withColumn("rk", row_number().over(wD))
       .withColumn("nd", count(lit(1)).over(Window.partitionBy(lit(1))))
       .where(col("rk") === expr("(nd + 1) div 2"))
@@ -740,13 +736,9 @@ object TimeSeries {
     * series (the repo's bounded-domain window convention).
     */
   def bollinger(t: Tables): DataFrame = {
-    val daily = t.lineitem
-      .groupBy(col("l_shipdate").cast("date").as("d"))
-      .agg(sum(discPrice(col("l_extendedprice"), col("l_discount"))).as("rev"))
-      // rev is a scale-6 decimal: ×10⁶ is integer-EXACT (×100 would
-      // truncate in Spark but round in DuckDB); the cents reduction is
-      // then an explicit integer div both engines share
-      .select(col("d"), expr("CAST(rev * 1000000 AS LONG) div 10000").as("cents"))
+    // rev is a scale-6 decimal; cents truncate its sub-cent digits (the
+    // oracle's micros `// 10000`)
+    val daily = Facts.dailyRevenue(t).select(col("d"), cents(col("rev")).as("cents"))
     val w = Window.orderBy("d").rowsBetween(-(BollWin - 1), 0)
     daily
       .withColumn("n", count(lit(1)).over(w))
@@ -811,10 +803,7 @@ object TimeSeries {
     * cannot diverge.
     */
   def holtWinters(t: Tables): DataFrame = {
-    val daily = t.lineitem
-      .groupBy(col("l_shipdate").cast("date").as("d"))
-      .agg(sum(discPrice(col("l_extendedprice"), col("l_discount")))
-        .cast("double").as("x"))
+    val daily = Facts.dailyRevenue(t).select(col("d"), col("rev").cast("double").as("x"))
     val maxD = daily.agg(max(col("d")).as("mx"))
     val series = daily.crossJoin(broadcast(maxD))
       .where(datediff(col("mx"), col("d")) < HwDays)
@@ -903,10 +892,7 @@ object TimeSeries {
     * window over the calendar-bounded series + one broadcast stats row.
     */
   def controlChart(t: Tables): DataFrame = {
-    val daily = t.lineitem
-      .groupBy(col("l_shipdate").cast("date").as("d"))
-      .agg(sum(discPrice(col("l_extendedprice"), col("l_discount"))).as("rev"))
-      .select(col("d"), expr("CAST(rev * 1000000 AS LONG) div 10000").as("cents"))
+    val daily = Facts.dailyRevenue(t).select(col("d"), cents(col("rev")).as("cents"))
     val w = Window.orderBy("d")
     val withMr = daily
       .withColumn("mr", abs(col("cents") - lag(col("cents"), 1).over(w)))
@@ -957,13 +943,11 @@ object TimeSeries {
     * aggregation + one bounded brand aggregation.
     */
   def elasticity(t: Tables): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    val d38 = DecimalType(38, 0)
     val pm = t.lineitem
       .join(broadcast(t.part.select(col("p_partkey"), col("p_brand"))),
         col("l_partkey") === col("p_partkey"))
       .groupBy(col("p_brand"), date_format(col("l_shipdate"), "yyyy-MM").as("ym"))
-      .agg((sum(dec(col("l_extendedprice"))) * 100).cast("long").as("ext_cents"),
+      .agg(cents(sum(dec(col("l_extendedprice")))).as("ext_cents"),
         sum(col("l_quantity").cast("long")).as("qty"))
       .select(col("p_brand"),
         expr("ext_cents div qty").as("price_cents"), col("qty"))
@@ -1026,12 +1010,8 @@ object TimeSeries {
     * fact aggregation feeds it.
     */
   def forecastBacktest(t: Tables): DataFrame = {
-    val d19 = DecimalType(19, 0)
-    val d38 = DecimalType(38, 0)
-    val daily = t.lineitem
-      .groupBy(to_date(col("l_shipdate")).as("d"))
-      .agg(sum((discPrice(col("l_extendedprice"), col("l_discount"))
-        * lit(1000000)).cast(d19)).cast(d38).cast("long").as("v"))
+    val daily = Facts.dailyRevenue(t)
+      .select(col("d"), microUnits(col("rev")).cast("long").as("v"))
     val w = Window.orderBy("d").rowsBetween(-BacktestWindow, -1)
     daily
       .withColumn("vals", collect_list(col("v")).over(w))
@@ -1096,10 +1076,8 @@ object TimeSeries {
     * [[forecastBacktest]] convention), not a global data sort.
     */
   def stlDecompose(t: Tables): DataFrame = {
-    val daily = t.lineitem
-      .groupBy(col("l_shipdate").cast("date").as("d"))
-      .agg(sum((discPrice(col("l_extendedprice"), col("l_discount")) *
-        lit(1000000)).cast(DecimalType(19, 0))).cast("long").as("v"))
+    val daily = Facts.dailyRevenue(t)
+      .select(col("d"), microUnits(col("rev")).cast("long").as("v"))
     val w = Window.orderBy("d").rowsBetween(-StlHalf, StlHalf)
     val trended = daily
       .withColumn("wsum", sum(col("v")).over(w))
@@ -1389,8 +1367,7 @@ object TimeSeries {
       .join(broadcast(t.nation.select("n_nationkey", "n_name")),
         col("c_nationkey") === col("n_nationkey"))
       .groupBy(col("n_name"), col("o_orderdate").cast("date").as("d"))
-      .agg(sum((graft.functions.Exact.dec(col("o_totalprice")) *
-        lit(1000000)).cast(DecimalType(19, 0))).cast("long").as("v"))
+      .agg(sum(microUnits(dec(col("o_totalprice")))).cast("long").as("v"))
     val sym = daily.withColumn("sym",
       ntile(4).over(Window.partitionBy("n_name").orderBy("v", "d")))
     sym.groupBy("n_name")
