@@ -75,24 +75,30 @@ final case class Tables(spark: SparkSession, dir: String) {
     * TimestampType µs column. DuckDB truncates ns→µs the same way, so
     * oracle comparisons agree on either encoding.
     *
-    * The nanosAsLong conf is DELIBERATELY SESSION-WIDE: it is consulted
-    * again at scan execution time, so a set-and-restore around this
-    * (lazy) read would fail at runtime. The visible effect is that any
-    * later nanos-timestamp parquet read in the session also arrives as
-    * raw longs instead of erroring — acceptable for this engine's
-    * sessions, which own their builder (see Bench/Verify/specs).
+    * The two confs this relies on are set once, when the `Tables` is
+    * built, and DELIBERATELY SESSION-WIDE:
+    *  - `nanosAsLong` is consulted again at scan execution time, so a
+    *    set-and-restore around this (lazy) read would fail at runtime.
+    *    The visible effect is that any later nanos-timestamp parquet read
+    *    in the session also arrives as raw longs instead of erroring —
+    *    acceptable for this engine's sessions, which own their builder
+    *    (see Bench/Verify/specs).
+    *  - `inferTimestampNTZ` off reads unadjusted (NTZ) parquet timestamps
+    *    as session-TZ TimestampType AT THE SCAN instead of casting after:
+    *    with the UTC session the values are identical, but a post-scan
+    *    cast would block predicate pushdown — this way ts range filters
+    *    reach the parquet row-group stats (TablesSpec pins PushedFilters).
+    *    It applies to every table (`lineitem.l_shipdate` is NTZ too), so
+    *    it is set before any accessor runs: a table's types must not
+    *    depend on whether `events` was read first, nor, when loads run
+    *    concurrently, on which thread reaches `events` first.
     */
+  spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+
   private def eventsRaw: DataFrame = {
     import org.apache.spark.sql.functions.{col, expr}
     import org.apache.spark.sql.types.{LongType, TimestampType}
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // read unadjusted (NTZ) parquet timestamps as session-TZ TimestampType
-    // AT THE SCAN instead of casting after: with the UTC session the
-    // values are identical, but a post-scan cast would block predicate
-    // pushdown — this way ts range filters reach the parquet row-group
-    // stats (TablesSpec pins PushedFilters). Session-wide like
-    // nanosAsLong, same rationale.
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     val raw = t("events")
     raw.schema("ts").dataType match {
       // TIMESTAMP(NANOS) read as raw longs: truncate ns → µs

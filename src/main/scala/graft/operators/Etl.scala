@@ -122,25 +122,42 @@ object Etl {
   /** End-to-end ETL run mirroring the reference's `main` (etl.py:56):
     * extract all sources → conform dims → enrich facts → load partitioned
     * sinks. One call materializes the same four tables the reference
-    * inserts into ClickHouse, as month-partitioned ordered parquet.
+    * inserts into ClickHouse, as month-partitioned ordered parquet, and
+    * returns each table's row count.
+    *
+    *  - The four loads do not depend on each other, so they run at once,
+    *    one thread per load, named `etl-load-<table>`. The threads are
+    *    started by the caller and inherit its Spark local properties, so
+    *    their jobs carry the caller's job group.
+    *  - The counts are the rows each write reports
+    *    ([[graft.sources.Sinks.writeChunked]],
+    *    [[graft.sources.Sinks.writeMonthPartitioned]]); no table is read
+    *    back.
+    *  - The call returns when every load has ended, so no load thread
+    *    outlives it. If any load failed, it throws the failure of the
+    *    first failed table (in the order `dim_products`, `dim_customers`,
+    *    `fact_sales`, `fact_inventory`) as the load threw it, with the
+    *    other failures attached as suppressed.
     */
   def pipeline(t: Tables, outDir: String): Map[String, Long] = {
-    val dims = Map(
-      "dim_products"  -> dimProducts(t),
-      "dim_customers" -> dimCustomers(t))
-    dims.foreach { case (name, df) =>
-      graft.sources.Sinks.writeChunked(df, s"$outDir/$name", 1000000)
+    import graft.sources.Sinks.{writeChunked, writeMonthPartitioned}
+    val loads = Seq[(String, String => Long)](
+      "dim_products"   -> (writeChunked(dimProducts(t), _, 1000000)),
+      "dim_customers"  -> (writeChunked(dimCustomers(t), _, 1000000)),
+      "fact_sales"     -> (writeMonthPartitioned(factSales(t), "ts", _, Seq("ts", "event_id"))),
+      "fact_inventory" -> (writeMonthPartitioned(factInventory(t), "date", _,
+        Seq("date", "product_id", "warehouse_id"))))
+    val outcomes = new Array[Either[Throwable, Long]](loads.size)
+    val threads = loads.zipWithIndex.map { case ((name, load), i) =>
+      new Thread(() => outcomes(i) =
+        try Right(load(s"$outDir/$name")) catch { case e: Throwable => Left(e) },
+        s"etl-load-$name")
     }
-    val facts = Map(
-      "fact_sales"     -> (factSales(t), "ts", Seq("ts", "event_id")),
-      "fact_inventory" -> (factInventory(t), "date", Seq("date", "product_id", "warehouse_id")))
-    facts.foreach { case (name, (df, tsCol, order)) =>
-      graft.sources.Sinks.writeMonthPartitioned(df, tsCol, s"$outDir/$name", order)
-    }
-    val spark = t.spark
-    (dims.keys ++ facts.keys).map { name =>
-      name -> spark.read.parquet(s"$outDir/$name").count()
-    }.toMap
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    val (failed, counts) = outcomes.toSeq.partitionMap(identity)
+    failed.headOption.foreach { first => failed.tail.foreach(first.addSuppressed); throw first }
+    loads.map(_._1).zip(counts).toMap
   }
 
   /** `_normalize_df` parity (loaders.py:115): money quantized to

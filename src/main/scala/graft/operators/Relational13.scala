@@ -3,7 +3,7 @@ package graft.operators
 import graft.Tables
 import graft.functions.Exact.{cents, d38, dec, decToDouble, decToDoubleSql,
   decToDoubleSigned, decToDoubleSignedSql, discPrice, microUnits, wholeUnits}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 

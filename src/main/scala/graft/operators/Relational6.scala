@@ -2,8 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.Exact._
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Round-4 relational operators: snapshot diffing, sliding distinct

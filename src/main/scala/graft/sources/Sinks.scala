@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Load layer: partitioned, ordered columnar sinks — the Spark-native
@@ -16,13 +16,16 @@ import org.apache.spark.sql.functions._
   */
 object Sinks {
 
-  /** Month-partitioned, time-ordered fact write (fact_sales twin). */
+  /** Month-partitioned, time-ordered fact write (fact_sales twin).
+    * Returns the number of rows written, counted by the write itself
+    * ([[countingWrite]]).
+    */
   def writeMonthPartitioned(df: DataFrame, tsCol: String, path: String,
-      orderCols: Seq[String]): Unit =
+      orderCols: Seq[String]): Long =
     writeMonths(df.withColumn("ym", date_format(col(tsCol), "yyyyMM")), path, orderCols)
 
   /** Overwrites `path` with `df` partitioned by its `ym` column, each
-    * month file in `orderCols` order.
+    * month file in `orderCols` order, and returns the rows written.
     *  - The shuffle names its partition count (the one `repartition(col)`
     *    would use), so AQE keeps one writer per shuffle partition instead
     *    of coalescing a small load into a single task that writes every
@@ -30,14 +33,30 @@ object Sinks {
     *  - The sort leads with `ym`, the ordering the partitioned write
     *    requires. Without it the planner adds its own `Sort [ym]` and
     *    drops this one, leaving month files in shuffle order.
+    *  - The row count is observed above the sort, not on the caller's
+    *    frame: between a caller's global `orderBy` and the `ym` shuffle,
+    *    the observation keeps Spark from eliminating that sort, which
+    *    then costs its own range-sampling jobs.
     */
-  private def writeMonths(df: DataFrame, path: String, orderCols: Seq[String]): Unit =
-    df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions, col("ym"))
-      .sortWithinPartitions(("ym" +: orderCols).map(col): _*)
-      .write
-      .mode("overwrite")
-      .partitionBy("ym")
-      .parquet(path)
+  private def writeMonths(df: DataFrame, path: String, orderCols: Seq[String]): Long =
+    countingWrite(df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions, col("ym"))
+      .sortWithinPartitions(("ym" +: orderCols).map(col): _*)) {
+      _.write
+        .mode("overwrite")
+        .partitionBy("ym")
+        .parquet(path)
+    }
+
+  /** Runs `write` over `df` and returns the number of rows it wrote,
+    * counted by an [[org.apache.spark.sql.Observation]] on the written
+    * plan: the count rides the write's own tasks, and no job reads the
+    * output back. An empty frame counts 0.
+    */
+  private def countingWrite(df: DataFrame)(write: DataFrame => Unit): Long = {
+    val written = Observation()
+    write(df.observe(written, count(lit(1)).as("rows")))
+    written.get("rows").asInstanceOf[Long]
+  }
 
   /** TTL expiry for month-partitioned tables — the ClickHouse
     * `TTL … DELETE` parity piece of the MergeTree sink surface
@@ -170,13 +189,16 @@ object Sinks {
 
   /** Chunked plain write (the reference's chunked insert, loaders.py:151
     * — in Spark the parallel write IS the chunking; `maxRecordsPerFile`
-    * bounds file sizes for downstream consumers).
+    * bounds file sizes for downstream consumers). Returns the number of
+    * rows written, counted by the write itself ([[countingWrite]]).
     */
-  def writeChunked(df: DataFrame, path: String, maxRecordsPerFile: Int): Unit =
-    df.write
-      .mode("overwrite")
-      .option("maxRecordsPerFile", maxRecordsPerFile.toString)
-      .parquet(path)
+  def writeChunked(df: DataFrame, path: String, maxRecordsPerFile: Int): Long =
+    countingWrite(df) {
+      _.write
+        .mode("overwrite")
+        .option("maxRecordsPerFile", maxRecordsPerFile.toString)
+        .parquet(path)
+    }
 
   private val ZBits = 16
 

@@ -118,7 +118,6 @@ object Sources {
     import org.apache.avro.mapreduce.AvroKeyInputFormat
     import org.apache.hadoop.fs.Path
     import org.apache.hadoop.io.NullWritable
-    import org.apache.spark.sql.Row
     import scala.jdk.CollectionConverters._
     // driver-side metadata read: writer schema from the first container
     val p = new Path(path)

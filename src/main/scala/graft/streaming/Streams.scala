@@ -257,7 +257,7 @@ object Streams {
       lo: org.apache.spark.sql.Column, hi: org.apache.spark.sql.Column,
       outPath: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    import org.apache.spark.sql.types.{ArrayType, StringType, StructType}
+    import org.apache.spark.sql.types.{ArrayType, StringType}
     val standing = spark.read.option("recursiveFileLookup", "true")
       .json(s"$path/_manifest").schema
     // pin the fencing columns even if this table has never folded (and

@@ -77,10 +77,50 @@ class EtlSpec extends SparkSpec {
     assert(counts.keySet == Set("dim_products", "dim_customers", "fact_sales", "fact_inventory"))
     assert(counts.values.forall(_ > 0))
     assert(counts("fact_sales") == sf.events.count())
+    // the counts come from the writes; reading each table back agrees
+    counts.foreach { case (name, n) =>
+      assert(n == spark.read.parquet(s"$out/$name").count(), name)
+    }
     // facts are month-partitioned on disk
     val salesDirs = new java.io.File(s"$out/fact_sales").listFiles()
       .filter(_.isDirectory).map(_.getName)
     assert(salesDirs.nonEmpty && salesDirs.forall(_.startsWith("ym=")))
+  }
+
+  /** Jobs one warm pipeline takes on sf0.001, as measured on the current
+    * plans; like JobBudgetSpec, a run may exceed it by max(2, 5%).
+    */
+  private val PipelineJobCeiling = 19
+
+  test("a warm pipeline stays within its job ceiling, counted under the caller's job group") {
+    val jobs = new JobCounter(spark)
+    try {
+      val out = java.nio.file.Files.createTempDirectory("graft-etl-jobs").toString
+      jobs.count("etl_pipeline")(Etl.pipeline(sf, out))
+      val (_, warm) = jobs.count("etl_pipeline")(Etl.pipeline(sf, out))
+      info(s"warm pipeline: $warm jobs")
+      // every load writes in at least one job of its own: fewer than four
+      // means the load threads' jobs escaped the caller's group
+      assert(warm >= 4, s"only $warm jobs carried the caller's job group")
+      assert(warm <= PipelineJobCeiling + math.max(2, (PipelineJobCeiling + 19) / 20),
+        s"the pipeline launched $warm jobs; ceiling $PipelineJobCeiling")
+    } finally jobs.close()
+  }
+
+  test("a failed load rethrows its own exception, and no load thread outlives the call") {
+    val empty = java.nio.file.Files.createTempDirectory("graft-etl-empty").toString
+    val out = java.nio.file.Files.createTempDirectory("graft-etl-fail").toString
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      Etl.pipeline(Tables(spark, empty), out))
+    // dim_products is the first table, and it reads part
+    assert(e.getMessage.contains(s"$empty/part.parquet"), e.getMessage)
+    // the other three loads failed too and ride along as suppressed
+    // (beside the caller stack trace Spark itself attaches)
+    val others = e.getSuppressed.collect { case a: org.apache.spark.sql.AnalysisException => a }
+    assert(others.length == 3, e.getSuppressed.toSeq)
+    import scala.jdk.CollectionConverters._
+    val alive = Thread.getAllStackTraces.keySet.asScala.filter(_.getName.startsWith("etl-load-"))
+    assert(alive.isEmpty, alive.map(_.getName))
   }
 
   test("month-partitioned loads keep every month file in the table's order") {

@@ -127,11 +127,27 @@ class SourcesSpec extends SparkSpec {
 
   test("month-partitioned sink writes hive-style ym directories (MergeTree parity)") {
     val out = Files.createTempDirectory("graft-sink").toString + "/fact"
-    Sinks.writeMonthPartitioned(sf.events.limit(500), "ts", out, Seq("ts", "event_id"))
+    val written = Sinks.writeMonthPartitioned(sf.events.limit(500), "ts", out, Seq("ts", "event_id"))
     val dirs = new java.io.File(out).listFiles().filter(_.isDirectory).map(_.getName).sorted
     assert(dirs.nonEmpty && dirs.forall(_.matches("ym=\\d{6}")))
     val back = spark.read.parquet(out)
     assert(back.count() == 500)
+    assert(written == 500)
+  }
+
+  test("sinks count an empty frame as 0 rows written, without blocking") {
+    import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+    import org.scalatest.time.SpanSugar._
+    implicit val signaler: Signaler = ThreadSignaler
+    val base = sf.events.limit(500)
+    val dir = Files.createTempDirectory("graft-sink-empty").toString
+    Seq("where" -> base.where(lit(false)), "limit" -> base.limit(0)).foreach { case (label, empty) =>
+      TimeLimits.failAfter(60.seconds) {
+        assert(Sinks.writeChunked(empty, s"$dir/$label-chunked", 100) == 0L, label)
+        assert(Sinks.writeMonthPartitioned(empty, "ts", s"$dir/$label-months",
+          Seq("ts", "event_id")) == 0L, label)
+      }
+    }
   }
 
   test("orc roundtrip preserves schema and rows") {

@@ -47,6 +47,14 @@ class TablesSpec extends SparkSpec {
     assert(refRows.nonEmpty)
   }
 
+  test("a table's timestamp types do not depend on whether events was read first") {
+    // as in a fresh session: neither scan conf set yet
+    spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    spark.conf.unset("spark.sql.parquet.inferTimestampNTZ.enabled")
+    val t = Tables(spark, sf.dir)
+    assert(t.lineitem.schema("l_shipdate").dataType == TimestampType)
+  }
+
   test("ts range filters push down to the events parquet scan") {
     // the NTZ-as-session-timestamp scan conf means ts arrives as a plain
     // scan column — a post-scan cast would strand every time-range
