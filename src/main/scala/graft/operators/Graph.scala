@@ -14,10 +14,10 @@ import org.apache.spark.sql.functions._
   * With a FIXED superstep count the whole dataflow stays lazy (one
   * fused job, no driver actions); the edge relation is persisted so
   * every superstep reads the mined graph, not the mining pipeline.
-  * A convergence-driven variant (unknown iteration count) would
-  * materialize per superstep instead, exactly like the label-
-  * propagation fixpoint in [[Dedup.clusters]] — that keeps lineage
-  * linear when the loop bound is data-dependent.
+  * Loops whose round count depends on the data ([[bfsHops]], [[kcore]],
+  * [[ktruss]]) run through one helper, [[untilRowCountStable]]: it pins
+  * every round with a localCheckpoint, which keeps lineage linear, and
+  * reads the round's row count from that same action.
   *
   * All rank arithmetic is INTEGER femto-units (10⁻¹⁵ of total mass)
   * with truncating division — deterministic under any partitioning and
@@ -79,6 +79,27 @@ object Graph {
           struct(col("b_part").as("u"), col("a_part").as("v")))).as("e"))
         .select(col("e.u").as("u"), col("e.v").as("v"))
         .localCheckpoint(true))
+
+  /** Oracle twin of [[minedPairsShared]]: the CTEs `items` and
+    * `cp(a, b)`, the canonical a < b pairs at support [[EdgeSupport]].
+    * Oracles that need the support column or `MATERIALIZED` CTEs spell
+    * their own form.
+    */
+  private val coPurchasePairsSql: String =
+    s"""items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+       |cp AS (
+       |  SELECT a.l_partkey AS a, b.l_partkey AS b
+       |  FROM items a JOIN items b
+       |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+       |  GROUP BY 1, 2 HAVING COUNT(*) >= $EdgeSupport)""".stripMargin
+
+  /** Oracle twin of [[edgesShared]]: [[coPurchasePairsSql]] plus
+    * `edges(u, v)`, the pairs doubled into both directions.
+    */
+  private val coPurchaseEdgesSql: String =
+    s"""$coPurchasePairsSql,
+       |edges AS (SELECT a AS u, b AS v FROM cp
+       |          UNION ALL SELECT b AS u, a AS v FROM cp)""".stripMargin
 
   /** Total rank mass in femto-units: 10¹⁵ (< 2⁵³, so the final
     * femto→double division is exact in both engines).
@@ -244,14 +265,7 @@ object Graph {
          |  GROUP BY e.v, tmv.tm)""".stripMargin
     val iters = (1 to Iters).map(i => iter(i, if (i == 1) "r0" else s"it${i - 1}"))
       .mkString(",\n")
-    s"""WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-       |cp AS (
-       |  SELECT a.l_partkey AS a, b.l_partkey AS b
-       |  FROM items a JOIN items b
-       |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-       |  GROUP BY 1, 2 HAVING COUNT(*) >= $EdgeSupport),
-       |edges AS (SELECT a AS u, b AS v FROM cp
-       |          UNION ALL SELECT b AS u, a AS v FROM cp),
+    s"""WITH $coPurchaseEdgesSql,
        |deg AS (SELECT u, CAST(COUNT(*) AS BIGINT) AS d FROM edges GROUP BY u),
        |cparts AS (
        |  SELECT DISTINCT o.o_custkey, l.l_partkey
@@ -316,12 +330,7 @@ object Graph {
   }
 
   val trianglesSql: String =
-    s"""WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-       |cp AS (
-       |  SELECT a.l_partkey AS a, b.l_partkey AS b
-       |  FROM items a JOIN items b
-       |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-       |  GROUP BY 1, 2 HAVING COUNT(*) >= $EdgeSupport),
+    s"""WITH $coPurchasePairsSql,
        |tri AS (
        |  SELECT e1.a AS x, e1.b AS y, e2.b AS z
        |  FROM cp e1 JOIN cp e2 ON e2.a = e1.b
@@ -418,12 +427,7 @@ object Graph {
   }
 
   val degreeDistributionSql: String =
-    s"""WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-       |cp AS (
-       |  SELECT a.l_partkey AS a, b.l_partkey AS b
-       |  FROM items a JOIN items b
-       |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-       |  GROUP BY 1, 2 HAVING COUNT(*) >= $EdgeSupport),
+    s"""WITH $coPurchasePairsSql,
        |deg AS (
        |  SELECT node, CAST(COUNT(*) AS BIGINT) AS degree FROM (
        |    SELECT a AS node FROM cp UNION ALL SELECT b AS node FROM cp)
@@ -450,14 +454,7 @@ object Graph {
          |  GROUP BY e.v, nn.n)""".stripMargin
     val iters = (1 to Iters).map(i => iter(i, if (i == 1) "r0" else s"it${i - 1}"))
       .mkString(",\n")
-    s"""WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-       |cp AS (
-       |  SELECT a.l_partkey AS a, b.l_partkey AS b
-       |  FROM items a JOIN items b
-       |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-       |  GROUP BY 1, 2 HAVING COUNT(*) >= $EdgeSupport),
-       |edges AS (SELECT a AS u, b AS v FROM cp
-       |          UNION ALL SELECT b AS u, a AS v FROM cp),
+    s"""WITH $coPurchaseEdgesSql,
        |deg AS (SELECT u, CAST(COUNT(*) AS BIGINT) AS d FROM edges GROUP BY u),
        |nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM deg),
        |r0 AS (SELECT deg.u AS node, CAST($mass // nn.n AS BIGINT) AS r
@@ -491,6 +488,40 @@ object Graph {
       .orderBy("p_partkey")
   }
 
+  /** The loop behind every data-dependent fixpoint here ([[bfsHops]],
+    * [[kcore]], [[ktruss]]): pin `init`, then apply `step` to the pinned
+    * frame until a round keeps the row count of the round before, or
+    * `maxRounds` rounds have run. Returns the last pinned frame and
+    * whether it converged. A row count is a sound stop test only for a
+    * monotone step, whose output contains (BFS growth) or is contained in
+    * (peeling) its input: then an equal count means an equal frame.
+    *
+    * Each round is ONE Spark action: the eager localCheckpoint pins the
+    * round (round r+1 reads pinned blocks instead of replaying rounds
+    * 1..r, and a step that reads its input twice keeps a linear plan),
+    * and an `Observation` on that same action reads the row count — the
+    * [[betweenness]] level convention.
+    */
+  private def untilRowCountStable(init: DataFrame, maxRounds: Int)(
+      step: DataFrame => DataFrame): (DataFrame, Boolean) = {
+    def pin(df: DataFrame, round: Int): (DataFrame, Long) = {
+      val rows = new Observation(s"fixpoint_round_$round")
+      val pinned = df.observe(rows, count(lit(1)).as("n")).localCheckpoint(true)
+      (pinned, rows.get("n").asInstanceOf[Long])
+    }
+    var (cur, n) = pin(init, 0)
+    var round = 0
+    var stable = false
+    while (!stable && round < maxRounds) {
+      round += 1
+      val (next, m) = pin(step(cur), round)
+      stable = m == n
+      cur = next
+      n = m
+    }
+    (cur, stable)
+  }
+
   private val BfsMaxRounds = 30
 
   /** Single-source BFS hop distances over the co-purchase network —
@@ -498,51 +529,28 @@ object Graph {
     * "which island", this answers "how far"). Source = the minimum
     * part key appearing in the edge set (deterministic); per superstep
     * one join relaxes `hops+1` along edges and one min-aggregation
-    * folds it into the frontier, run to FIXPOINT with a scalar
-    * convergence probe (a fixed round count would silently truncate a
-    * long-diameter graph; [[BfsMaxRounds]] only backstops). Unreachable
-    * parts are absent by construction — at 100 TB the result stays
-    * proportional to the reachable component, never the part table.
+    * folds it into the frontier, run to fixpoint by
+    * [[untilRowCountStable]]. [[BfsMaxRounds]] caps the depth, silently,
+    * exactly where the oracle's walk stops. Unreachable parts are absent
+    * by construction — at 100 TB the result stays proportional to the
+    * reachable component, never the part table.
     */
   def bfsHops(t: Tables): DataFrame = {
     val edges = edgesShared(t)
-    // one driver scalar (the source id), same bounded convention as the
-    // convergence probes. An EMPTY mined edge set (no pair reaches
-    // EdgeSupport) has no source: return the empty hop frame instead of
-    // dereferencing the null aggregate (r9 ADVICE) — the oracle's walk
-    // filters its NULL seed the same way.
-    val srcRow = edges.agg(min(col("u"))).head()
-    val spark = t.spark
-    import spark.implicits._
-    if (srcRow.isNullAt(0)) {
-      return Seq.empty[(Long, Long)].toDF("node", "hops")
-        .select(col("node").as("p_partkey"), col("hops"))
-    }
-    val src = srcRow.getLong(0)
-    var dist = Seq((src, 0L)).toDF("node", "hops")
-    var changed = 1L
-    var round = 0
-    while (changed > 0 && round < BfsMaxRounds) {
-      val relaxed = edges
-        .join(dist.select(col("node").as(s"n$round"), col("hops").as(s"h$round")),
-          col("u") === col(s"n$round"))
-        .select(col("v").as("node"), (col(s"h$round") + 1L).as("hops"))
-      // localCheckpoint is LOAD-BEARING: each step references `dist`
-      // twice (the union and the relax join), so an uncut lineage
-      // doubles per round — 2^rounds plan nodes by the time a
-      // long-diameter graph converges (OOMs the driver around round
-      // ~25). Checkpointing pins the round's result and resets the
-      // plan to a leaf.
-      val step = dist.union(relaxed)
-        .groupBy("node").agg(min(col("hops")).as("hops"))
-        .localCheckpoint(true)
-      // one convergence probe: a node is "changed" if new or improved
-      changed = step
-        .join(dist.select(col("node"), col("hops").as("old")), Seq("node"), "left")
-        .where(col("old").isNull || col("hops") < col("old"))
-        .count()
-      dist = step
-      round += 1
+    // an EMPTY mined edge set (no pair reaches EdgeSupport) has no
+    // source: the null minimum is filtered out, so the seed frame and
+    // the result are empty — the oracle's walk drops its NULL seed the
+    // same way
+    val seed = edges.agg(min(col("u")).as("node"))
+      .where(col("node").isNotNull)
+      .select(col("node"), lit(0L).as("hops"))
+    // Level-synchronous BFS reaches a node first at its minimum hop
+    // count, so a round never improves a node it already holds: "new or
+    // improved" is exactly growth in row count.
+    val (dist, _) = untilRowCountStable(seed, BfsMaxRounds) { dist =>
+      val relaxed = edges.join(dist, col("u") === col("node"))
+        .select(col("v").as("node"), (col("hops") + 1L).as("hops"))
+      dist.union(relaxed).groupBy("node").agg(min(col("hops")).as("hops"))
     }
     dist.select(col("node").as("p_partkey"), col("hops"))
       .orderBy("p_partkey")
@@ -554,14 +562,7 @@ object Graph {
     */
   val bfsHopsSql: String =
     s"""WITH RECURSIVE
-       |items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-       |cp AS (
-       |  SELECT a.l_partkey AS a, b.l_partkey AS b
-       |  FROM items a JOIN items b
-       |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-       |  GROUP BY 1, 2 HAVING COUNT(*) >= $EdgeSupport),
-       |edges AS (SELECT a AS u, b AS v FROM cp
-       |          UNION ALL SELECT b AS u, a AS v FROM cp),
+       |$coPurchaseEdgesSql,
        |walk(node, d) AS (
        |  SELECT MIN(u), CAST(0 AS BIGINT) FROM edges HAVING MIN(u) IS NOT NULL
        |  UNION
@@ -577,14 +578,7 @@ object Graph {
     */
   val componentsSql: String =
     s"""WITH RECURSIVE
-       |items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-       |cp AS (
-       |  SELECT a.l_partkey AS a, b.l_partkey AS b
-       |  FROM items a JOIN items b
-       |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-       |  GROUP BY 1, 2 HAVING COUNT(*) >= $EdgeSupport),
-       |edges AS (SELECT a AS u, b AS v FROM cp
-       |          UNION ALL SELECT b AS u, a AS v FROM cp),
+       |$coPurchaseEdgesSql,
        |reach(node, lbl) AS (
        |  SELECT u, u FROM (SELECT DISTINCT u FROM edges)
        |  UNION
@@ -611,12 +605,12 @@ object Graph {
     * Peeling is monotone (the remaining set only shrinks), so the
     * fixpoint is unique and an oracle that unrolls MORE rounds than
     * convergence needs is exact — extra rounds are no-ops. The operator
-    * therefore runs to a probed fixpoint with [[KcoreMaxRounds]] as a
-    * fail-loud backstop (the propagateLabels convention), and the
-    * oracle unrolls exactly [[KcoreMaxRounds]] rounds. Per round: two
-    * semi-joins (edge endpoints against survivors) + one degree count —
-    * edge-relation shuffles, never quadratic; localCheckpoint pins each
-    * round's membership.
+    * therefore runs to fixpoint through [[untilRowCountStable]] with
+    * [[KcoreMaxRounds]] as a fail-loud backstop, and the oracle unrolls
+    * exactly [[KcoreMaxRounds]] rounds. Per round: two semi-joins (edge
+    * endpoints against survivors) + one degree count — edge-relation
+    * shuffles, never quadratic; localCheckpoint pins each round's
+    * membership.
     */
   def kcore(t: Tables): DataFrame = {
     val edges = edgesShared(t)
@@ -625,31 +619,15 @@ object Graph {
         .join(members.select(col("id").as("mu")), col("u") === col("mu"), "left_semi")
         .join(members.select(col("id").as("mv")), col("v") === col("mv"), "left_semi")
         .groupBy("u").agg(count(lit(1)).as("deg"))
-    var members = edges.select(col("u").as("id")).distinct().localCheckpoint(true)
-    // ONE action per round: the previous round's size carries over, so
-    // the convergence probe costs a single count() of the checkpointed
-    // membership (counting an already-materialized localCheckpoint is a
-    // metadata-cheap scan, but there is no reason to pay it twice)
-    var changed = 1L
-    var round = 0
-    var prevSize = members.count()
-    while (changed > 0 && round < KcoreMaxRounds) {
-      val next = degrees(members)
-        .where(col("deg") >= KcoreK)
-        .select(col("u").as("id"))
-        .localCheckpoint(true)
-      val nextSize = next.count()
-      changed = prevSize - nextSize
-      prevSize = nextSize
-      members = next
-      round += 1
+    val (members, converged) = untilRowCountStable(
+        edges.select(col("u").as("id")).distinct(), KcoreMaxRounds) { members =>
+      degrees(members).where(col("deg") >= KcoreK).select(col("u").as("id"))
     }
-    require(changed == 0,
+    require(converged,
       s"kcore did not converge in $KcoreMaxRounds rounds; raise the backstop")
-    val out = degrees(members)
+    degrees(members)
       .select(col("u").as("p_partkey"), col("deg").as("core_degree"))
       .orderBy("p_partkey")
-    out
   }
 
   /** Oracle: [[KcoreMaxRounds]] unrolled peel rounds (no-ops after
@@ -757,9 +735,6 @@ object Graph {
     (edges, labels)
   }
 
-  /** Oracle: the [[LpaRounds]] synchronous rounds unrolled as CTE pairs
-    * (votes → plurality winner with the same (count desc, label) order).
-    */
   /** The shared LPA CTE chain (mined edges → [[LpaRounds]] vote rounds,
     * ending in `l{LpaRounds}(id, lbl)`) — used by [[labelPropagationSql]]
     * and [[modularitySql]].
@@ -777,19 +752,15 @@ object Graph {
          | SELECT n.id, COALESCE(w.lbl, n.id) AS lbl
          | FROM nodes n LEFT JOIN w$r w USING (id))""".stripMargin
     }.mkString(",\n")
-    s"""items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-       |cp AS (
-       |  SELECT a.l_partkey AS a, b.l_partkey AS b
-       |  FROM items a JOIN items b
-       |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-       |  GROUP BY 1, 2 HAVING COUNT(*) >= $EdgeSupport),
-       |edges AS (SELECT a AS u, b AS v FROM cp
-       |          UNION ALL SELECT b AS u, a AS v FROM cp),
+    s"""$coPurchaseEdgesSql,
        |nodes AS (SELECT p_partkey AS id FROM part),
        |l0 AS (SELECT id, id AS lbl FROM nodes),
        |$rounds""".stripMargin
   }
 
+  /** Oracle: the [[LpaRounds]] synchronous rounds unrolled as CTE pairs
+    * (votes → plurality winner with the same (count desc, label) order).
+    */
   val labelPropagationSql: String =
     s"""WITH $lpaCtesSql
        |SELECT id AS p_partkey, lbl AS community,
@@ -912,14 +883,7 @@ object Graph {
 
   val assortativitySql: String = {
     val toD = graft.functions.Exact.decToDoubleSql _
-    s"""WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-       |cp AS (
-       |  SELECT a.l_partkey AS a, b.l_partkey AS b
-       |  FROM items a JOIN items b
-       |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-       |  GROUP BY 1, 2 HAVING COUNT(*) >= $EdgeSupport),
-       |edges AS (SELECT a AS u, b AS v FROM cp
-       |          UNION ALL SELECT b AS u, a AS v FROM cp),
+    s"""WITH $coPurchaseEdgesSql,
        |deg AS (SELECT u, CAST(COUNT(*) AS BIGINT) AS d FROM edges GROUP BY u),
        |xy AS (
        | SELECT du.d AS x, dv.d AS y
@@ -947,23 +911,6 @@ object Graph {
   private val ClosenessSeeds = 8
   private val ClosenessRadius = 6
 
-  /** Harmonic closeness centrality of the [[ClosenessSeeds]] highest-
-    * degree hubs within [[ClosenessRadius]] hops: multi-source BFS
-    * (frontier rows keyed (seed, node)), then per seed
-    * Σ 1000 div hops over reached nodes — "which hubs can touch the
-    * most of the network, and how tightly". All-pairs closeness is
-    * quadratic state; seeding from the hub set keeps the frontier at
-    * S×|reachable| while answering the question the metric is actually
-    * used for (ranking the network's centers). The round count is FIXED
-    * (the radius bound is part of the metric's definition), but unlike
-    * [[pageRank]] — whose superstep references the rank frame ONCE and
-    * so stays a linear lazy plan — the BFS min-fold references `dist`
-    * twice (the union and the relax join), which doubles the plan per
-    * round and re-executes subtrees (measured: 21.7 s at sf0.1 for the
-    * lazy form). Each round therefore localCheckpoints, the
-    * [[bfsHops]] convention. Per round: one join along edges + one
-    * min-fold, both keyed (seed, node).
-    */
   /** Per-(seed, node) hop distances from the [[ClosenessSeeds]]
     * highest-degree seeds, memoized per (session, dir) — the shared
     * front-end of [[closeness]] and [[effectiveDiameter]] (the BFS is
@@ -997,6 +944,40 @@ object Graph {
       dist
     }
 
+  /** Oracle twin of [[seedDistancesShared]], after
+    * [[coPurchaseEdgesSql]] in a `WITH RECURSIVE`: the same seeds
+    * (degree desc, then id) and a depth-bounded walk per seed, ending in
+    * `dist(seed, node, hops)` with MIN(d) as the hop distance.
+    */
+  private val seedDistancesSql: String =
+    s"""deg AS (SELECT u, CAST(COUNT(*) AS BIGINT) AS deg FROM edges GROUP BY u),
+       |seeds AS (SELECT u AS seed FROM deg
+       |          ORDER BY deg DESC, u LIMIT $ClosenessSeeds),
+       |walk(seed, node, d) AS (
+       |  SELECT seed, seed, CAST(0 AS BIGINT) FROM seeds
+       |  UNION
+       |  SELECT w.seed, e.v, w.d + 1 FROM walk w JOIN edges e ON e.u = w.node
+       |  WHERE w.d < $ClosenessRadius),
+       |dist AS (
+       |  SELECT seed, node, MIN(d) AS hops FROM walk GROUP BY seed, node)""".stripMargin
+
+  /** Harmonic closeness centrality of the [[ClosenessSeeds]] highest-
+    * degree hubs within [[ClosenessRadius]] hops: multi-source BFS
+    * (frontier rows keyed (seed, node)), then per seed
+    * Σ 1000 div hops over reached nodes — "which hubs can touch the
+    * most of the network, and how tightly". All-pairs closeness is
+    * quadratic state; seeding from the hub set keeps the frontier at
+    * S×|reachable| while answering the question the metric is actually
+    * used for (ranking the network's centers). The round count is FIXED
+    * (the radius bound is part of the metric's definition), but unlike
+    * [[pageRank]] — whose superstep references the rank frame ONCE and
+    * so stays a linear lazy plan — the BFS min-fold references `dist`
+    * twice (the union and the relax join), which doubles the plan per
+    * round and re-executes subtrees (measured: 21.7 s at sf0.1 for the
+    * lazy form). Each round therefore localCheckpoints, the
+    * [[bfsHops]] convention. Per round: one join along edges + one
+    * min-fold, both keyed (seed, node).
+    */
   def closeness(t: Tables): DataFrame = {
     val out = seedDistancesShared(t)
       .where(col("hops") > 0)
@@ -1008,30 +989,13 @@ object Graph {
     out
   }
 
-  /** Oracle: identical seed derivation (degree desc, id limit), then a
-    * depth-bounded recursive walk per seed; MIN(d) per (seed, node) is
-    * the hop distance, 1000 // d the harmonic term.
+  /** Oracle: the [[seedDistancesSql]] walk, with 1000 // hops as the
+    * harmonic term.
     */
   val closenessSql: String =
     s"""WITH RECURSIVE
-       |items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-       |cp AS (
-       |  SELECT a.l_partkey AS a, b.l_partkey AS b
-       |  FROM items a JOIN items b
-       |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-       |  GROUP BY 1, 2 HAVING COUNT(*) >= $EdgeSupport),
-       |edges AS (SELECT a AS u, b AS v FROM cp
-       |          UNION ALL SELECT b AS u, a AS v FROM cp),
-       |deg AS (SELECT u, CAST(COUNT(*) AS BIGINT) AS deg FROM edges GROUP BY u),
-       |seeds AS (SELECT u AS seed FROM deg
-       |          ORDER BY deg DESC, u LIMIT $ClosenessSeeds),
-       |walk(seed, node, d) AS (
-       |  SELECT seed, seed, CAST(0 AS BIGINT) FROM seeds
-       |  UNION
-       |  SELECT w.seed, e.v, w.d + 1 FROM walk w JOIN edges e ON e.u = w.node
-       |  WHERE w.d < $ClosenessRadius),
-       |dist AS (
-       |  SELECT seed, node, MIN(d) AS hops FROM walk GROUP BY seed, node)
+       |$coPurchaseEdgesSql,
+       |$seedDistancesSql
        |SELECT seed AS p_partkey,
        |  CAST(COUNT(*) AS BIGINT) AS n_reached,
        |  CAST(SUM(1000 // hops) AS BIGINT) AS harmonic_milli
@@ -1069,29 +1033,13 @@ object Graph {
       .orderBy("hops")
   }
 
-  /** Oracle: the closeness walk's recursive CTE + the identical
-    * histogram / cumulative / integer-threshold chain.
+  /** Oracle: the [[seedDistancesSql]] walk + the identical histogram /
+    * cumulative / integer-threshold chain.
     */
   val effectiveDiameterSql: String =
     s"""WITH RECURSIVE
-       |items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-       |cp AS (
-       |  SELECT a.l_partkey AS a, b.l_partkey AS b
-       |  FROM items a JOIN items b
-       |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-       |  GROUP BY 1, 2 HAVING COUNT(*) >= $EdgeSupport),
-       |edges AS (SELECT a AS u, b AS v FROM cp
-       |          UNION ALL SELECT b AS u, a AS v FROM cp),
-       |deg AS (SELECT u, CAST(COUNT(*) AS BIGINT) AS deg FROM edges GROUP BY u),
-       |seeds AS (SELECT u AS seed FROM deg
-       |          ORDER BY deg DESC, u LIMIT $ClosenessSeeds),
-       |walk(seed, node, d) AS (
-       |  SELECT seed, seed, CAST(0 AS BIGINT) FROM seeds
-       |  UNION
-       |  SELECT w.seed, e.v, w.d + 1 FROM walk w JOIN edges e ON e.u = w.node
-       |  WHERE w.d < $ClosenessRadius),
-       |dist AS (
-       |  SELECT seed, node, MIN(d) AS hops FROM walk GROUP BY seed, node),
+       |$coPurchaseEdgesSql,
+       |$seedDistancesSql,
        |hist AS (
        |  SELECT hops, CAST(COUNT(*) AS BIGINT) AS n_pairs
        |  FROM dist WHERE hops > 0 GROUP BY hops),
@@ -1256,14 +1204,7 @@ object Graph {
     }.mkString(",\n")
     val nonSrc = (1 to BcDepth)
       .map(l => s"SELECT node, delta FROM d$l").mkString("\n  UNION ALL ")
-    s"""WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-       |cp AS (
-       |  SELECT a.l_partkey AS a, b.l_partkey AS b
-       |  FROM items a JOIN items b
-       |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-       |  GROUP BY 1, 2 HAVING COUNT(*) >= $EdgeSupport),
-       |edges AS (SELECT a AS u, b AS v FROM cp
-       |          UNION ALL SELECT b AS u, a AS v FROM cp),
+    s"""WITH $coPurchaseEdgesSql,
        |srcs AS (SELECT DISTINCT u AS s FROM edges ORDER BY s LIMIT $BcSources),
        |f0 AS (SELECT s, s AS node, CAST(1 AS BIGINT) AS sigma FROM srcs),
        |v0 AS (SELECT s, node FROM f0),
@@ -1323,14 +1264,7 @@ object Graph {
     * is complete for J > 0, so the blocked result equals the full scan).
     */
   val nodeSimilaritySql: String =
-    s"""WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-       |cp AS (
-       |  SELECT a.l_partkey AS a, b.l_partkey AS b
-       |  FROM items a JOIN items b
-       |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-       |  GROUP BY 1, 2 HAVING COUNT(*) >= $EdgeSupport),
-       |edges AS (SELECT a AS u, b AS v FROM cp
-       |          UNION ALL SELECT b AS u, a AS v FROM cp),
+    s"""WITH $coPurchaseEdgesSql,
        |nb AS (SELECT u, list_sort(list(DISTINCT v)) AS ns FROM edges GROUP BY u)
        |SELECT a.u AS a_part, b.u AS b_part,
        | CAST(len(list_intersect(a.ns, b.ns)) AS BIGINT) AS n_common,
@@ -1376,14 +1310,7 @@ object Graph {
   /** Oracle: neighbor-set brute force with the same integer weights and
     * the NOT-EXISTS edge exclusion. */
   val linkPredictSql: String =
-    s"""WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-       |cp AS (
-       |  SELECT a.l_partkey AS a, b.l_partkey AS b
-       |  FROM items a JOIN items b
-       |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-       |  GROUP BY 1, 2 HAVING COUNT(*) >= $EdgeSupport),
-       |edges AS (SELECT a AS u, b AS v FROM cp
-       |          UNION ALL SELECT b AS u, a AS v FROM cp),
+    s"""WITH $coPurchaseEdgesSql,
        |deg AS (SELECT u, CAST(COUNT(*) AS BIGINT) AS d FROM edges GROUP BY u),
        |wedge AS (
        | SELECT e1.u AS a, e2.u AS b, e1.v AS w
@@ -1488,14 +1415,7 @@ object Graph {
   }
 
   val twoHopReachSql: String =
-    s"""WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-       |cp AS (
-       |  SELECT a.l_partkey AS a, b.l_partkey AS b
-       |  FROM items a JOIN items b
-       |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-       |  GROUP BY 1, 2 HAVING COUNT(*) >= $EdgeSupport),
-       |edges AS (SELECT a AS u, b AS v FROM cp
-       |          UNION ALL SELECT b AS u, a AS v FROM cp),
+    s"""WITH $coPurchaseEdgesSql,
        |one AS (SELECT u, CAST(COUNT(*) AS BIGINT) AS n1 FROM edges GROUP BY u),
        |two AS (
        |  SELECT u, CAST(COUNT(*) AS BIGINT) AS n2 FROM (
@@ -1563,14 +1483,7 @@ object Graph {
     val steps = (1 to WalkSteps)
       .map(i => step(i, if (i == 1) "w0" else s"s${i - 1}"))
       .mkString(",\n")
-    s"""WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-       |cp AS (
-       |  SELECT a.l_partkey AS a, b.l_partkey AS b
-       |  FROM items a JOIN items b
-       |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-       |  GROUP BY 1, 2 HAVING COUNT(*) >= $EdgeSupport),
-       |edges AS (SELECT a AS u, b AS v FROM cp
-       |          UNION ALL SELECT b AS u, a AS v FROM cp),
+    s"""WITH $coPurchaseEdgesSql,
        |w0 AS (SELECT DISTINCT u AS walk_id, u AS cur, CAST(u AS VARCHAR) AS path
        |       FROM edges),
        |$steps
@@ -1746,9 +1659,9 @@ object Graph {
     * mined SIGNAL graph (support-thresholded, orders of magnitude
     * smaller than the fact table) plus a group-by — the same per-round
     * shape as [[kcore]]'s degree filter, shuffling on edge keys. Rounds
-    * are data-dependent but bounded; each round's survivor set is
-    * localCheckpoint-pinned so round r+1 reads pinned blocks instead of
-    * replaying rounds 1..r.
+    * are data-dependent but bounded: [[untilRowCountStable]] pins each
+    * round's survivor set, and [[KtrussMaxRounds]] is a fail-loud
+    * backstop.
     */
   def ktruss(t: Tables): DataFrame = {
     val canon = minedPairsShared(t)
@@ -1761,22 +1674,10 @@ object Graph {
         .join(dbl.select(col("u").as("b"), col("v").as("w")), Seq("b", "w"))
         .groupBy("a", "b").agg(count(lit(1)).as("sup"))
     }
-    var cur = canon.localCheckpoint(true)
-    var prev = cur.count()
-    var changed = prev // an empty mined graph skips the loop entirely
-    var round = 0
-    while (changed > 0 && round < KtrussMaxRounds) {
-      val next = support(cur)
-        .where(col("sup") >= KtrussK - 2)
-        .select("a", "b")
-        .localCheckpoint(true)
-      val n = next.count()
-      changed = prev - n
-      prev = n
-      cur = next
-      round += 1
+    val (cur, converged) = untilRowCountStable(canon, KtrussMaxRounds) { cur =>
+      support(cur).where(col("sup") >= KtrussK - 2).select("a", "b")
     }
-    require(changed == 0,
+    require(converged,
       s"ktruss did not converge in $KtrussMaxRounds rounds; raise the backstop")
     support(cur)
       .select(col("a").as("a_part"), col("b").as("b_part"),

@@ -214,9 +214,10 @@ object Relational6 {
 
   /** Bloom-filter join pre-filtering — the runtime-filter pattern for
     * big-fact ⋈ selective-dim joins at scale: build a bloom filter over
-    * the qualifying orders' keys (distributed aggregation, merged to
-    * bounded driver state: one binary value), cut the fact table with the
-    * might-contain test BEFORE its shuffle, then run the exact join.
+    * the qualifying orders' keys (distributed aggregation, merged to one
+    * binary value that reaches the fact scan as a scalar subquery), cut
+    * the fact table with the might-contain test BEFORE its shuffle, then
+    * run the exact join.
     * False positives survive the pre-filter but are removed by the join
     * itself, so the result is EXACTLY the plain join — which is what the
     * oracle runs. The win at 100 TB: the fact shuffle carries ~the
@@ -234,16 +235,14 @@ object Relational6 {
   def bloomSemiFilter(t: Tables): DataFrame = {
     val urgent = t.orders.where(col("o_orderpriority") === "1-URGENT")
       .select(col("o_orderkey"), col("o_orderdate"))
-    // static upper bound on qualifying keys: 1M items / 8M bits (1 MB)
+    // static upper bound on qualifying keys: 1M items / 8M bits (1 MB).
+    // The filter is a scalar subquery, not a driver fetch: an empty build
+    // side aggregates to a NULL filter, might_contain is then NULL, and
+    // the where drops every row
     val bf = urgent.agg(
       call_function("bloom_filter_agg", col("o_orderkey"),
-        lit(1000000L), lit(8000000L)).as("bf"))
-      .head().getAs[Array[Byte]]("bf")
-    // empty build side yields a null filter — nothing can match then
-    val pre =
-      if (bf == null) t.lineitem.where(lit(false))
-      else t.lineitem.where(call_function("might_contain", lit(bf), col("l_orderkey")))
-    pre
+        lit(1000000L), lit(8000000L))).scalar()
+    t.lineitem.where(call_function("might_contain", bf, col("l_orderkey")))
       .join(urgent, col("l_orderkey") === col("o_orderkey"))
       .groupBy(date_trunc("month", col("o_orderdate")).cast("date").as("month"))
       .agg(count(lit(1)).as("n_lines"),

@@ -312,20 +312,64 @@ class GraphSpec extends SparkSpec {
     assert(comp.toSeq == Seq(1L, 7L))
   }
 
-  test("kcore peels chains and keeps the interlocked cluster") {
+  /** A lineitem table in which each pair is bought together in two
+    * orders (support 2) and nothing else is, so the mined graph is
+    * exactly `pairs`.
+    */
+  private def supportTwoGraph(pairs: Seq[(Long, Long)]): Tables = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-kcore").toString
-    // triangle {1,2,3} (every node degree 2) + a pendant chain 3-4-5:
-    // peeling at k=2 drops 5 (deg 1), then 4 — triangle survives intact
-    val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L), (4L, 5L))
-    edges.zipWithIndex.flatMap { case ((a, b), i) =>
+    val dir = java.nio.file.Files.createTempDirectory("graft-graph").toString
+    pairs.zipWithIndex.flatMap { case ((a, b), i) =>
       Seq((100L + 2 * i, a), (100L + 2 * i, b),
         (101L + 2 * i, a), (101L + 2 * i, b))
     }.toDF("l_orderkey", "l_partkey")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    val got = Graph.kcore(Tables(spark, dir)).collect()
+    Tables(spark, dir)
+  }
+
+  /** A support-2 path 1-2-…-n. */
+  private def path(n: Long): Tables = supportTwoGraph((1L until n).map(i => (i, i + 1)))
+
+  test("kcore peels chains and keeps the interlocked cluster") {
+    // triangle {1,2,3} (every node degree 2) + a pendant chain 3-4-5:
+    // peeling at k=2 drops 5 (deg 1), then 4 — triangle survives intact
+    val t = supportTwoGraph(Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L), (4L, 5L)))
+    val got = Graph.kcore(t).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(got == Seq((1L, 2L), (2L, 2L), (3L, 2L)), s"got $got")
+  }
+
+  test("kcore fails loud when peeling needs more rounds than its backstop") {
+    // a 30-part path loses its two end parts per round: 15 peel rounds,
+    // past KcoreMaxRounds = 12
+    val e = intercept[IllegalArgumentException](Graph.kcore(path(30)))
+    assert(e.getMessage.contains("kcore did not converge in 12 rounds"), e.getMessage)
+  }
+
+  test("bfs hops stops at its round cap, exactly where the oracle's walk stops") {
+    // from part 1 along a 35-part path, BfsMaxRounds = 30 rounds reach
+    // parts 1..31; the oracle's walk stops at w.d < 30 the same way
+    val got = Graph.bfsHops(path(35)).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toSeq
+    assert(got == (0L to 30L).map(h => (h + 1) -> h), s"got $got")
+  }
+
+  test("bfs hops, kcore and ktruss return no rows when no pair reaches the edge support") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-empty-graph").toString
+    // every pair is bought together in one order only: no mined edge
+    Seq((10L, 1L), (10L, 2L), (11L, 2L), (11L, 3L), (12L, 1L), (12L, 3L))
+      .toDF("l_orderkey", "l_partkey")
+      .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+    val t = Tables(spark, dir)
+    Seq(
+      Graph.bfsHops(t) -> Seq("p_partkey", "hops"),
+      Graph.kcore(t) -> Seq("p_partkey", "core_degree"),
+      Graph.ktruss(t) -> Seq("a_part", "b_part", "truss_support"))
+      .foreach { case (df, cols) =>
+        assert(df.columns.toSeq == cols)
+        assert(df.collect().isEmpty, cols.mkString(","))
+      }
   }
 
   test("kcore on the sf graph matches an in-memory peeling replay") {
@@ -571,18 +615,12 @@ class GraphSpec extends SparkSpec {
   }
 
   test("ktruss peels triangle-free edges and keeps shared-edge supports") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ktruss").toString
     // two triangles sharing edge (2,3) + a pendant edge (4,5): the
     // pendant closes no triangle and peels in round 1; every remaining
     // edge sits in ≥1 triangle; (2,3) sits in both
-    val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L), (3L, 4L), (4L, 5L))
-    edges.zipWithIndex.flatMap { case ((a, b), i) =>
-      Seq((100L + 2 * i, a), (100L + 2 * i, b),
-        (101L + 2 * i, a), (101L + 2 * i, b))
-    }.toDF("l_orderkey", "l_partkey")
-      .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    val got = Graph.ktruss(Tables(spark, dir)).collect()
+    val t = supportTwoGraph(
+      Seq((1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L), (3L, 4L), (4L, 5L)))
+    val got = Graph.ktruss(t).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(got == Seq(
       (1L, 2L, 1L), (1L, 3L, 1L), (2L, 3L, 2L),

@@ -4,7 +4,7 @@ import graft.operators.{Graph, Relational7}
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 
-/** The per-pass tax of the three job-heavy iterative operators, pinned on
+/** The per-pass tax of the job-heavy iterative operators, pinned on
   * sf0.001: a repeated run reuses its generated classes (GraftSession sizes
   * Spark's JVM-wide codegen cache above their working set), and each run
   * stays within a job ceiling counted by job group over the build and a
@@ -19,6 +19,9 @@ class JobBudgetSpec extends SparkSpec {
     */
   private val ceilings = Seq[(String, Tables => DataFrame, Int)](
     ("graph_betweenness", Graph.betweenness, 21),
+    ("graph_bfs_hops", Graph.bfsHops, 17),
+    ("graph_kcore", Graph.kcore, 10),
+    ("graph_ktruss", Graph.ktruss, 19),
     ("graph_personal_pagerank", Graph.personalPageRank, 30),
     ("q_abc_xyz", Relational7.abcXyz, 16))
 

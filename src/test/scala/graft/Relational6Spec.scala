@@ -115,6 +115,16 @@ class Relational6Spec extends SparkSpec {
       s"interpreted UDF in the hot path:\n$plan")
   }
 
+  test("bloom pre-filter with no qualifying order returns no rows") {
+    // an empty build side aggregates to a NULL filter, and a NULL
+    // might_contain drops every fact row
+    val dir = java.nio.file.Files.createTempDirectory("graft-bloom-empty").toString
+    sf.orders.where(col("o_orderpriority") =!= "1-URGENT")
+      .write.parquet(s"$dir/orders.parquet")
+    sf.lineitem.write.parquet(s"$dir/lineitem.parquet")
+    assert(Relational6.bloomSemiFilter(Tables(spark, dir)).collect().isEmpty)
+  }
+
   test("lm score weights repeated bigrams by their per-doc count") {
     // repetition-heavy corpus, computed by hand: doc 1 = "a a a a" has
     // bigram (a,a) x3; doc 2 = "a b" has (a,b) x1. Unigram counts over
