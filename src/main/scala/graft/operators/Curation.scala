@@ -475,15 +475,7 @@ object Curation {
 
   private[graft] def domainFilterShared(t: Tables): DataFrame =
     domainMemo.getOrCompute(t.spark, t.dir) {
-      val url = concat(
-        when(pmod(col("doc_id"), lit(2)) === 0, lit("https://")).otherwise(lit("http://")),
-        when(pmod(col("doc_id"), lit(7)) === 0, lit("www.")).otherwise(lit("")),
-        col("source"),
-        when(pmod(col("doc_id"), lit(3)) === 0, lit(".com"))
-          .when(pmod(col("doc_id"), lit(3)) === 1, lit(".org")).otherwise(lit(".net")),
-        when(pmod(col("doc_id"), lit(5)) === 0, lit(":8080")).otherwise(lit("")),
-        lit("/p/"), col("doc_id").cast("string"),
-        when(pmod(col("doc_id"), lit(4)) === 0, lit("?utm_source=feed")).otherwise(lit("")))
+      val url = Dedup.syntheticUrl(col("doc_id"))
       // domain comes from PARSING the url (scheme/www/port/path stripped),
       // not from the build ingredients — that's the operator under test
       val w = org.apache.spark.sql.expressions.Window
@@ -508,14 +500,7 @@ object Curation {
     val u = Sampling.unitHashSqlFmt.format("doc_id")
     s"""du AS (
        | SELECT doc_id,
-       |  (CASE WHEN doc_id % 2 = 0 THEN 'https://' ELSE 'http://' END ||
-       |   CASE WHEN doc_id % 7 = 0 THEN 'www.' ELSE '' END ||
-       |   source ||
-       |   CASE WHEN doc_id % 3 = 0 THEN '.com'
-       |        WHEN doc_id % 3 = 1 THEN '.org' ELSE '.net' END ||
-       |   CASE WHEN doc_id % 5 = 0 THEN ':8080' ELSE '' END ||
-       |   '/p/' || CAST(doc_id AS VARCHAR) ||
-       |   CASE WHEN doc_id % 4 = 0 THEN '?utm_source=feed' ELSE '' END) AS url
+       |  ${Dedup.syntheticUrlSql("doc_id")} AS url
        | FROM documents),
        |dd AS (
        | SELECT doc_id, url,

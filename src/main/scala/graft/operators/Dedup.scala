@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.Shingles
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Document deduplication suite for training-data pipelines.
@@ -33,21 +33,33 @@ object Dedup {
 
   private[graft] val JaccardThreshold = 0.6
 
-  /** Word-3-gram Jaccard near-dup pairs (threshold 0.6).
-    *
-    * Candidate generation is SOUND prefix filtering (AllPairs/PPJoin
-    * family) in the COUNTED k=2 form — see
-    * [[countedPrefixCandidates]]: equi-join on extended df-ranked
-    * prefix grams, per-row positional bound, and a require-two-
-    * surviving-rows gate that provably loses no qualifying pair while
-    * keeping the verify set duplicate-shaped on vocabulary-saturating
-    * corpora. The global order is ASCENDING DOCUMENT FREQUENCY (ties
-    * by hashed gram): prefixes are then each doc's rarest grams, which
-    * shrinks candidate collisions by orders of magnitude vs a
-    * lexicographic order (the standard AllPairs ordering). Everything
-    * is equi-joins + aggregations; the n² pair space is never shuffled,
-    * and the oracle is the unblocked brute force.
+  /** `WITH g AS (…)`: each document's distinct word-3-grams — the head
+    * of every brute-force oracle below.
     */
+  private val gramsCte: String =
+    s"""WITH g AS (
+       | SELECT doc_id, ${Shingles.grams3Sql("text")} AS grams
+       | FROM documents)""".stripMargin
+
+  /** The brute-force Jaccard ≥ 0.6 pairs over `g` — the body of the
+    * pair CTE in every oracle that needs the near-dup truth as a set.
+    */
+  private val jaccardPairsSql: String =
+    """SELECT a.doc_id AS a_id, b.doc_id AS b_id
+      | FROM g a JOIN g b ON a.doc_id < b.doc_id
+      | WHERE CAST(len(list_distinct(list_intersect(a.grams, b.grams))) AS DOUBLE)
+      |    / len(list_distinct(list_concat(a.grams, b.grams))) >= 0.6""".stripMargin
+
+  /** Sound length filter for a candidate pair at Jaccard `threshold`:
+    * J ≥ t ⟹ min(|A|, |B|) ≥ t·max(|A|, |B|).
+    */
+  private[graft] def lengthCompatible(aSz: Column, bSz: Column, threshold: Double): Column =
+    least(aSz, bSz).cast("double") >= lit(threshold) * greatest(aSz, bSz)
+
+  /** Extended (k=2) prefix length `sz − ⌈t·sz⌉ + 2`, capped at `sz`. */
+  private def prefixLen(threshold: Double): Column =
+    least((col("sz") - ceil(lit(threshold) * col("sz")) + 2).cast("int"), col("sz"))
+
   /** COUNTED k=2 prefix-join candidate channel for symmetric Jaccard at
     * `threshold` — the shared sound blocking of [[ngramJaccardPairs]]
     * and [[thresholdSweep]]. Posting rows come from each doc's EXTENDED
@@ -81,9 +93,7 @@ object Dedup {
       s"countedPrefixCandidates is sound only for threshold > 1/3, got $threshold")
     // extended (k=2) prefix postings with full-list positions
     val pref2 = ranked.where(col("sz") >= 2)
-      .withColumn("p",
-        least((col("sz") - ceil(lit(threshold) * col("sz")) + 2)
-          .cast("int"), col("sz")))
+      .withColumn("p", prefixLen(threshold))
       .select(col("doc_id"), col("sz"),
         posexplode(expr("slice(rg, 1, p)")).as(Seq("pos", "gram")))
     // minimum shared-gram count for a qualifying pair; the double
@@ -99,8 +109,7 @@ object Dedup {
       .join(pref2.select(col("doc_id").as("b_id"), col("sz").as("b_sz"),
         col("pos").as("j"), col("gram")), Seq("gram"))
       .where(col("a_id") < col("b_id") &&
-        least(col("a_sz"), col("b_sz")).cast("double") >=
-          lit(threshold) * greatest(col("a_sz"), col("b_sz")) &&
+        lengthCompatible(col("a_sz"), col("b_sz"), threshold) &&
         // m=2 positional bound — holds for BOTH witness rows (for s1,
         // |A∩B| ≤ 1 + min(tails) is even tighter), so count ≥ 2 below
         // cannot lose a qualifying pair
@@ -123,6 +132,21 @@ object Dedup {
     pairCands.unionByName(singles).distinct()
   }
 
+  /** Word-3-gram Jaccard near-dup pairs (threshold 0.6).
+    *
+    * Candidate generation is SOUND prefix filtering (AllPairs/PPJoin
+    * family) in the COUNTED k=2 form — see
+    * [[countedPrefixCandidates]]: equi-join on extended df-ranked
+    * prefix grams, per-row positional bound, and a require-two-
+    * surviving-rows gate that provably loses no qualifying pair while
+    * keeping the verify set duplicate-shaped on vocabulary-saturating
+    * corpora. The global order is ASCENDING DOCUMENT FREQUENCY (ties
+    * by hashed gram): prefixes are then each doc's rarest grams, which
+    * shrinks candidate collisions by orders of magnitude vs a
+    * lexicographic order (the standard AllPairs ordering). Everything
+    * is equi-joins + aggregations; the n² pair space is never shuffled,
+    * and the oracle is the unblocked brute force.
+    */
   def ngramJaccard(t: Tables): DataFrame =
     ngramJaccardPairs(t).orderBy("a_id", "b_id")
 
@@ -145,26 +169,6 @@ object Dedup {
 
   private val ContainmentThreshold = 0.8
 
-  /** Asymmetric CONTAINMENT near-dup pairs: C(A→B) = |A∩B| / |A| ≥ 0.8 —
-    * catches documents that are (near-)subsets of a longer document,
-    * which symmetric Jaccard misses when lengths differ widely (quote
-    * pages, boilerplate-wrapped copies — a first-class corpus-curation
-    * case).
-    *
-    * Blocking is a GRAM-PAIR (2-prefix) filter — see the inline notes:
-    * C ≥ t ⟹ at least TWO shared grams sit in A's first
-    * `|A| − ⌈t·|A|⌉ + 2` df-ranked grams, so candidates come from an
-    * equi-join on ordered gram PAIRS, whose co-occurrence frequency
-    * stays duplicate-shaped even when the single-gram df saturates
-    * (the r13 10×-data run measured the single-gram prefix join at
-    * corpus²/vocab on a vocabulary-saturating corpus). The pair-explode
-    * constant is held down by restricting B's grams to the global
-    * prefix-gram set before pairing (sound — witness pairs are pairs of
-    * A-prefix grams; see the inline note), so the B side pairs only its
-    * rare grams rather than all ~sz²/2 combinations. Sound, so the
-    * oracle is the unblocked brute force. Verification divides the
-    * codegen'd merge-intersection count by |A|.
-    */
   /** (doc_id, gram) posting rows with the gram text hashed to a 64-bit
     * long — the narrow representation every blocking join runs on.
     */
@@ -198,9 +202,7 @@ object Dedup {
     */
   private def prefixPairs(ranked: DataFrame, threshold: Double): DataFrame =
     ranked.where(col("sz") >= 2)
-      .withColumn("p",
-        least((col("sz") - ceil(lit(threshold) * col("sz")) + 2)
-          .cast("int"), col("sz")))
+      .withColumn("p", prefixLen(threshold))
       .select(col("doc_id"), col("sz"),
         explode(expr(
           """flatten(transform(slice(rg, 1, p), (x, i) ->
@@ -210,6 +212,26 @@ object Dedup {
       .select(col("doc_id"), col("sz"), col("pr.g1").as("g1"),
         col("pr.g2").as("g2"), col("pr.pos2").as("pos2"))
 
+  /** Asymmetric CONTAINMENT near-dup pairs: C(A→B) = |A∩B| / |A| ≥ 0.8 —
+    * catches documents that are (near-)subsets of a longer document,
+    * which symmetric Jaccard misses when lengths differ widely (quote
+    * pages, boilerplate-wrapped copies — a first-class corpus-curation
+    * case).
+    *
+    * Blocking is a GRAM-PAIR (2-prefix) filter — see the inline notes:
+    * C ≥ t ⟹ at least TWO shared grams sit in A's first
+    * `|A| − ⌈t·|A|⌉ + 2` df-ranked grams, so candidates come from an
+    * equi-join on ordered gram PAIRS, whose co-occurrence frequency
+    * stays duplicate-shaped even when the single-gram df saturates
+    * (the r13 10×-data run measured the single-gram prefix join at
+    * corpus²/vocab on a vocabulary-saturating corpus). The pair-explode
+    * constant is held down by restricting B's grams to the global
+    * prefix-gram set before pairing (sound — witness pairs are pairs of
+    * A-prefix grams; see the inline note), so the B side pairs only its
+    * rare grams rather than all ~sz²/2 combinations. Sound, so the
+    * oracle is the unblocked brute force. Verification divides the
+    * codegen'd merge-intersection count by |A|.
+    */
   def containment(t: Tables): DataFrame = {
     val g = Shingles.gramsOf(t.documents).localCheckpoint(true)
     val ex = hashedExplode(g)
@@ -243,9 +265,7 @@ object Dedup {
     // along (j), so the positional filter below is unchanged: the
     // first-two shared row survives restriction by construction.
     val prefixGrams = ranked.where(col("sz") >= 2)
-      .withColumn("p",
-        least((col("sz") - ceil(lit(ContainmentThreshold) * col("sz")) + 2)
-          .cast("int"), col("sz")))
+      .withColumn("p", prefixLen(ContainmentThreshold))
       .select(explode(expr("slice(rg, 1, p)")).as("gram"))
       .distinct()
     val bPairs = ranked.where(col("sz") >= 2)
@@ -303,9 +323,7 @@ object Dedup {
     * sound, so the blocked result equals the full scan.
     */
   val containmentSql: String =
-    s"""WITH g AS (
-       | SELECT doc_id, ${Shingles.grams3Sql("text")} AS grams
-       | FROM documents)
+    s"""$gramsCte
        |SELECT a.doc_id AS a_id, b.doc_id AS b_id,
        | CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE) / len(a.grams) AS containment
        |FROM g a JOIN g b ON a.doc_id <> b.doc_id
@@ -360,9 +378,7 @@ object Dedup {
     * blocked result must equal the full pair scan.
     */
   val ngramJaccardSql: String =
-    s"""WITH g AS (
-       | SELECT doc_id, ${Shingles.grams3Sql("text")} AS grams
-       | FROM documents)
+    s"""$gramsCte
        |SELECT a.doc_id AS a_id, b.doc_id AS b_id,
        | CAST(len(list_distinct(list_intersect(a.grams, b.grams))) AS DOUBLE)
        |   / len(list_distinct(list_concat(a.grams, b.grams))) AS jaccard
@@ -375,16 +391,6 @@ object Dedup {
   private val BandRows  = 4
   private val NumBands  = NumHashes / BandRows // 32
 
-  /** MinHash signatures + LSH banding + exact-Jaccard verification.
-    *
-    * r=4 rows × b=32 bands: P(candidate | j) = 1-(1-j⁴)^32 ≈ 0.99 at
-    * j=0.6 and ≈ 1-1e-10 at j=0.85, so with the data's similarity gap the
-    * verified output equals the brute-force truth (which is exactly what
-    * the oracle computes). The whole 128-permutation signature comes from
-    * ONE [[graft.functions.MinHashSig]] call per doc — a narrow map, no
-    * (doc, gram) shuffle; candidate generation then shuffles
-    * (band, bucket) keys only — linear at scale, never the n² pair space.
-    */
   /** (doc_id, sz, band_idx, band_hash) LSH band keys — the shared
     * banding front end of [[minhashLsh]] and [[incrementalDedup]]. The
     * whole signature is ONE [[graft.functions.MinHashSig]] call; band
@@ -428,8 +434,22 @@ object Dedup {
         col("c_hg"), col("band_idx"), col("band_hash"))
   }
 
-  def minhashLsh(t: Tables): DataFrame = {
-    // persisted: feeds the signature build + the verify join
+  /** MinHash signatures + LSH banding + exact-Jaccard verification.
+    *
+    * r=4 rows × b=32 bands: P(candidate | j) = 1-(1-j⁴)^32 ≈ 0.99 at
+    * j=0.6 and ≈ 1-1e-10 at j=0.85, so with the data's similarity gap the
+    * verified output equals the brute-force truth (which is exactly what
+    * the oracle computes). The whole 128-permutation signature comes from
+    * ONE [[graft.functions.MinHashSig]] call per doc — a narrow map, no
+    * (doc, gram) shuffle; candidate generation then shuffles
+    * (band, bucket) keys only — linear at scale, never the n² pair space.
+    */
+  def minhashLsh(t: Tables): DataFrame =
+    minhashLshPairs(t).orderBy("a_id", "b_id")
+
+  /** Unsorted verified MinHash-LSH pairs (a_id, b_id, jaccard). */
+  private def minhashLshPairs(t: Tables): DataFrame = {
+    // pinned: feeds the signature build + the verify join
     val g = Shingles.gramsOf(t.documents).localCheckpoint(true)
     val bands = bandsOf(g)
     val ca = bands.select(col("doc_id").as("a_id"), col("sz").as("a_sz"),
@@ -440,12 +460,11 @@ object Dedup {
     // between very different-sized docs before the distinct + verify
     val candidates = ca.join(cb, Seq("band_idx", "band_hash"))
       .where(col("a_id") < col("b_id") &&
-        least(col("a_sz"), col("b_sz")).cast("double") >=
-          lit(JaccardThreshold) * greatest(col("a_sz"), col("b_sz")))
+        lengthCompatible(col("a_sz"), col("b_sz"), JaccardThreshold))
       .select("a_id", "b_id")
       .distinct()
     // exact verification join (precision 1.0; LSH only buys candidate cuts)
-    verifyJaccard(candidates, hashedGramsOf(g)).orderBy("a_id", "b_id")
+    verifyJaccard(candidates, hashedGramsOf(g))
   }
 
   /** Incremental dedup — the shape a production pipeline runs DAILY:
@@ -468,8 +487,7 @@ object Dedup {
       col("band_idx"), col("band_hash"))
     val candidates = nb.join(all, Seq("band_idx", "band_hash"))
       .where(col("a_id") =!= col("b_id") &&
-        least(col("a_sz"), col("b_sz")).cast("double") >=
-          lit(JaccardThreshold) * greatest(col("a_sz"), col("b_sz")))
+        lengthCompatible(col("a_sz"), col("b_sz"), JaccardThreshold))
       // batch↔batch pairs meet twice (both sides are in `nb`); canonical
       // (min, max) ordering + distinct collapses them
       .select(least(col("a_id"), col("b_id")).as("a_id"),
@@ -483,9 +501,7 @@ object Dedup {
     * restricted to those pairs.
     */
   val incrementalDedupSql: String =
-    s"""WITH g AS (
-       | SELECT doc_id, ${Shingles.grams3Sql("text")} AS grams
-       | FROM documents)
+    s"""$gramsCte
        |SELECT a.doc_id AS a_id, b.doc_id AS b_id,
        | CAST(len(list_distinct(list_intersect(a.grams, b.grams))) AS DOUBLE)
        |   / len(list_distinct(list_concat(a.grams, b.grams))) AS jaccard
@@ -498,20 +514,41 @@ object Dedup {
   /** Oracle: brute-force word-3-gram Jaccard over all pairs — the ground
     * truth MinHash+verify must reproduce.
     */
-  val minhashLshSql: String =
-    s"""WITH g AS (
-       | SELECT doc_id, ${Shingles.grams3Sql("text")} AS grams
-       | FROM documents)
-       |SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-       | CAST(len(list_distinct(list_intersect(a.grams, b.grams))) AS DOUBLE)
-       |   / len(list_distinct(list_concat(a.grams, b.grams))) AS jaccard
-       |FROM g a JOIN g b ON a.doc_id < b.doc_id
-       |WHERE CAST(len(list_distinct(list_intersect(a.grams, b.grams))) AS DOUBLE)
-       |   / len(list_distinct(list_concat(a.grams, b.grams))) >= 0.6
-       |ORDER BY a_id, b_id""".stripMargin
+  val minhashLshSql: String = ngramJaccardSql
 
   private val SimBits = 60 // 15 md5 hex chars — portable big-endian parse
   private val SimSegs = 4  // pigeonhole: hamming ≤ 3 pairs share ≥ 1 of 4 segments
+
+  /** The oracles' SimHash signature in SQL: per-bit ±1 vote sums over
+    * the md5-derived gram hashes `h`, then the majority bits OR-ed into
+    * one BIGINT.
+    */
+  private val simhashBitSums: String = (0 until SimBits)
+    .map(j => s"SUM(CASE WHEN (h >> $j) & 1 = 1 THEN 1 ELSE -1 END) AS b$j")
+    .mkString(",\n   ")
+  private val simhashSigBits: String = (0 until SimBits)
+    .map(j => s"(CASE WHEN b$j > 0 THEN (CAST(1 AS BIGINT) << $j) ELSE 0 END)")
+    .mkString(" | ")
+
+  /** The brute-force SimHash hamming ≤ 3 pairs over `g`, as the CTE
+    * chain `she → shh → shb → shs → sim` that the tier comparisons
+    * compose with a Jaccard pair set.
+    */
+  private val simhashPairsCtes: String =
+    s"""she AS (SELECT doc_id, unnest(grams) AS gram FROM g),
+       |shh AS (
+       | SELECT doc_id,
+       |  CAST('0x' || substr(md5(gram), 1, 15) AS BIGINT) AS h
+       | FROM she),
+       |shb AS (
+       | SELECT doc_id,
+       |   $simhashBitSums
+       | FROM shh GROUP BY doc_id),
+       |shs AS (SELECT doc_id, $simhashSigBits AS sig FROM shb),
+       |sim AS (
+       | SELECT a.doc_id AS a_id, b.doc_id AS b_id
+       | FROM shs a JOIN shs b ON a.doc_id < b.doc_id
+       | WHERE bit_count(xor(a.sig, b.sig)) <= 3)""".stripMargin
 
   /** 60-bit SimHash near-dup pairs (hamming ≤ 3).
     *
@@ -526,7 +563,11 @@ object Dedup {
     * because the blocking is COMPLETE for hamming ≤ 3 — the output equals
     * the brute-force signature scan the oracle runs.
     */
-  def simhash(t: Tables): DataFrame = {
+  def simhash(t: Tables): DataFrame =
+    simhashPairs(t).orderBy("a_id", "b_id")
+
+  /** Unsorted SimHash pairs (a_id, b_id, hamming). */
+  private def simhashPairs(t: Tables): DataFrame = {
     val g = Shingles.gramsOf(t.documents)
     // whole 60-bit signature from ONE SimHashSig call per doc (same
     // md5-derived gram hash + ±1 bit votes the oracle rebuilds in SQL) —
@@ -550,23 +591,14 @@ object Dedup {
         bit_count(col("a_sim").bitwiseXOR(col("b_sim"))).as("hamming"))
       .distinct()
       .where(col("hamming") <= 3)
-      .orderBy("a_id", "b_id")
   }
 
   /** Oracle: rebuild every 60-bit signature in SQL (same md5-derived gram
     * hash, same majority bit votes) and brute-force the hamming scan —
     * the segment blocking is complete for hamming ≤ 3, so results match.
     */
-  val simhashSql: String = {
-    val bitSums = (0 until SimBits)
-      .map(j => s"SUM(CASE WHEN (h >> $j) & 1 = 1 THEN 1 ELSE -1 END) AS b$j")
-      .mkString(",\n   ")
-    val sigBits = (0 until SimBits)
-      .map(j => s"(CASE WHEN b$j > 0 THEN (CAST(1 AS BIGINT) << $j) ELSE 0 END)")
-      .mkString(" | ")
-    s"""WITH g AS (
-       | SELECT doc_id, ${Shingles.grams3Sql("text")} AS grams
-       | FROM documents),
+  val simhashSql: String =
+    s"""$gramsCte,
        |e AS (SELECT doc_id, unnest(grams) AS gram FROM g),
        |h AS (
        | SELECT doc_id,
@@ -574,15 +606,14 @@ object Dedup {
        | FROM e),
        |b AS (
        | SELECT doc_id,
-       |   $bitSums
+       |   $simhashBitSums
        | FROM h GROUP BY doc_id),
-       |s AS (SELECT doc_id, $sigBits AS sig FROM b)
+       |s AS (SELECT doc_id, $simhashSigBits AS sig FROM b)
        |SELECT a.doc_id AS a_id, b.doc_id AS b_id,
        | CAST(bit_count(xor(a.sig, b.sig)) AS INT) AS hamming
        |FROM s a JOIN s b ON a.doc_id < b.doc_id
        |WHERE bit_count(xor(a.sig, b.sig)) <= 3
        |ORDER BY a_id, b_id""".stripMargin
-  }
 
   /** Min-label propagation to FIXPOINT — hybrid execution.
     *
@@ -593,9 +624,11 @@ object Dedup {
     * component labels come from a local union-find — exact same result,
     * none of the per-round job overhead.
     * Larger graphs run the distributed loop: one equi-join + aggregation
-    * per round over the edge-touched subgraph with a scalar convergence
-    * probe, converging for dup chains of ANY diameter (a fixed round
-    * count would not). Both paths produce the connected component's
+    * per round over the edge-touched subgraph, pinned by a localCheckpoint
+    * that also counts the round's changed labels through an
+    * [[org.apache.spark.sql.Observation]] — one Spark action per round —
+    * converging for dup chains of ANY diameter (a fixed round count
+    * would not). Both paths produce the connected component's
     * minimum id as the label.
     *
     * `nodes` must have a single column `id`; `pairs` columns `a_id`,`b_id`.
@@ -679,14 +712,16 @@ object Dedup {
       // long-diameter dup chain OOMs driver ANALYSIS even though the
       // cached data is tiny (bit bfsHops at round ~25 before the same
       // fix). Checkpointing pins the round and resets the plan to a
-      // leaf.
+      // leaf; the same action counts the changed labels.
+      val moved = new Observation(s"label_round_$round")
       val step = labels
         .join(e, col("id") === col(s"x$round"), "left")
         .join(nb, col(s"y$round") === col(s"nid$round"), "left")
         .groupBy(col("id"), col("lbl"))
         .agg(least(col("lbl"), coalesce(min(col(s"nlbl$round")), col("lbl"))).as("new_lbl"))
+        .observe(moved, count(when(col("new_lbl") =!= col("lbl"), 1)).as("n"))
         .localCheckpoint(true)
-      changed = step.where(col("new_lbl") =!= col("lbl")).count()
+      changed = moved.get("n").asInstanceOf[Long]
       if (prevStep != null) prevStep.unpersist(false)
       prevStep = step
       labels = step.select(col("id"), col("new_lbl").as("lbl"))
@@ -780,14 +815,9 @@ object Dedup {
     * a converged fixpoint equals any later round.
     */
   private[operators] lazy val clustersCte: String =
-    s"""WITH g AS (
-       | SELECT doc_id, ${Shingles.grams3Sql("text")} AS grams
-       | FROM documents),
+    s"""$gramsCte,
        |p AS (
-       | SELECT a.doc_id AS a_id, b.doc_id AS b_id
-       | FROM g a JOIN g b ON a.doc_id < b.doc_id
-       | WHERE CAST(len(list_distinct(list_intersect(a.grams, b.grams))) AS DOUBLE)
-       |    / len(list_distinct(list_concat(a.grams, b.grams))) >= 0.6),
+       | $jaccardPairsSql),
        |e AS (SELECT a_id AS x, b_id AS y FROM p UNION ALL SELECT b_id, a_id FROM p),
        |l0 AS (SELECT doc_id AS id, doc_id AS lbl FROM documents),
        |l1 AS (
@@ -838,14 +868,14 @@ object Dedup {
        |FROM l3
        |ORDER BY doc_id""".stripMargin
 
+  private val EditDistMax = 3
+
   /** Fuzzy value clustering: edit-distance pairs over the DISTINCT values
     * of a key column (the OpenRefine "cluster & edit" shape for messy
     * dimension keys). Distinct-first keeps the pair space tiny even when
     * the table is huge — dedupe the domain, not the rows; a length-band
     * block prunes the remaining quadratic.
     */
-  private val EditDistMax = 3
-
   def editDistance(t: Tables): DataFrame = {
     val names = t.part.select(col("p_name").as("name")).distinct()
     // length-band blocking as an EQUI-join: levenshtein ≥ |len(a)−len(b)|,
@@ -979,6 +1009,34 @@ object Dedup {
        |ORDER BY a_id, b_id""".stripMargin
   }
 
+  /** A document's synthetic crawl URL (the corpus carries no URL
+    * column): scheme, optional `www.`, `source` plus a TLD, optional
+    * `:8080` port, `/p/<path>` and an optional `utm_` query, each picked
+    * from `doc_id`. [[Curation.domainFilter]] passes `doc_id` itself;
+    * [[urlCanonical]] passes `doc_id % 40`, so that pages collide.
+    */
+  private[graft] def syntheticUrl(path: Column): Column =
+    concat(
+      when(pmod(col("doc_id"), lit(2)) === 0, lit("https://")).otherwise(lit("http://")),
+      when(pmod(col("doc_id"), lit(7)) === 0, lit("www.")).otherwise(lit("")),
+      col("source"),
+      when(pmod(col("doc_id"), lit(3)) === 0, lit(".com"))
+        .when(pmod(col("doc_id"), lit(3)) === 1, lit(".org")).otherwise(lit(".net")),
+      when(pmod(col("doc_id"), lit(5)) === 0, lit(":8080")).otherwise(lit("")),
+      lit("/p/"), path.cast("string"),
+      when(pmod(col("doc_id"), lit(4)) === 0, lit("?utm_source=feed")).otherwise(lit("")))
+
+  /** [[syntheticUrl]] in DuckDB SQL; `path` is the SQL text of the path. */
+  private[graft] def syntheticUrlSql(path: String): String =
+    s"""(CASE WHEN doc_id % 2 = 0 THEN 'https://' ELSE 'http://' END ||
+       |   CASE WHEN doc_id % 7 = 0 THEN 'www.' ELSE '' END ||
+       |   source ||
+       |   CASE WHEN doc_id % 3 = 0 THEN '.com'
+       |        WHEN doc_id % 3 = 1 THEN '.org' ELSE '.net' END ||
+       |   CASE WHEN doc_id % 5 = 0 THEN ':8080' ELSE '' END ||
+       |   '/p/' || CAST($path AS VARCHAR) ||
+       |   CASE WHEN doc_id % 4 = 0 THEN '?utm_source=feed' ELSE '' END)""".stripMargin
+
   /** URL canonicalization + exact URL dedup — the Common-Crawl
     * front-door dedup that runs BEFORE any content fetch: scheme
     * normalized away, `www.` stripped, default/explicit ports dropped,
@@ -991,15 +1049,7 @@ object Dedup {
     * hash aggregation.
     */
   def urlCanonical(t: Tables): DataFrame = {
-    val url = concat(
-      when(pmod(col("doc_id"), lit(2)) === 0, lit("https://")).otherwise(lit("http://")),
-      when(pmod(col("doc_id"), lit(7)) === 0, lit("www.")).otherwise(lit("")),
-      col("source"),
-      when(pmod(col("doc_id"), lit(3)) === 0, lit(".com"))
-        .when(pmod(col("doc_id"), lit(3)) === 1, lit(".org")).otherwise(lit(".net")),
-      when(pmod(col("doc_id"), lit(5)) === 0, lit(":8080")).otherwise(lit("")),
-      lit("/p/"), pmod(col("doc_id"), lit(40)).cast("string"),
-      when(pmod(col("doc_id"), lit(4)) === 0, lit("?utm_source=feed")).otherwise(lit("")))
+    val url = syntheticUrl(pmod(col("doc_id"), lit(40)))
     val canon =
       regexp_replace(
         regexp_replace(
@@ -1020,16 +1070,10 @@ object Dedup {
     * canonicalization (scheme/www/port/query variants of one page).
     */
   val urlCanonicalSql: String =
-    """WITH u AS (
+    // raw: the regexps' backslashes stay literal; `$$` is a literal `$`
+    raw"""WITH u AS (
       | SELECT doc_id,
-      |  (CASE WHEN doc_id % 2 = 0 THEN 'https://' ELSE 'http://' END ||
-      |   CASE WHEN doc_id % 7 = 0 THEN 'www.' ELSE '' END ||
-      |   source ||
-      |   CASE WHEN doc_id % 3 = 0 THEN '.com'
-      |        WHEN doc_id % 3 = 1 THEN '.org' ELSE '.net' END ||
-      |   CASE WHEN doc_id % 5 = 0 THEN ':8080' ELSE '' END ||
-      |   '/p/' || CAST(doc_id % 40 AS VARCHAR) ||
-      |   CASE WHEN doc_id % 4 = 0 THEN '?utm_source=feed' ELSE '' END) AS url
+      |  ${syntheticUrlSql("doc_id % 40")} AS url
       | FROM documents),
       |c AS (
       | SELECT doc_id,
@@ -1038,8 +1082,8 @@ object Dedup {
       |    regexp_replace(
       |     regexp_replace(lower(url), '^[a-z]+://(www\.)?', ''),
       |     ':[0-9]+', ''),
-      |    '\?utm_[^?]*$', ''),
-      |   '/$', '') AS canonical_url
+      |    '\?utm_[^?]*$$', ''),
+      |   '/$$', '') AS canonical_url
       | FROM u)
       |SELECT canonical_url, MIN(doc_id) AS keep_id,
       | CAST(COUNT(*) AS BIGINT) AS n_variants
@@ -1052,62 +1096,45 @@ object Dedup {
     * dedup): the SimHash hamming≤3 pair set scored against the exact
     * word-3-gram Jaccard≥0.6 truth. Counts + precision/recall in exact
     * ppm (truncating division, bit-portable). Both tiers run their
-    * normal blocked pipelines; the comparison is two pair-set
-    * left-semi/anti folds over canonical (a, b) keys — bounded by true
-    * near-dup counts, never n².
+    * normal blocked pipelines; the comparison is one [[pairOverlap]]
+    * aggregation over canonical (a, b) keys — bounded by true near-dup
+    * counts, never n².
     */
-  def tierEval(t: Tables): DataFrame = {
-    // localCheckpoint (not persist): each pair frame feeds BOTH a count
-    // and the agreement semi-join — pinning the tiny verified pair sets
-    // runs each tier's pipeline exactly once, with normal (uncached-
-    // plan) AQE during the build
-    val truth = ngramJaccardPairs(t).select("a_id", "b_id").localCheckpoint(true)
-    val sim = simhash(t).select("a_id", "b_id").localCheckpoint(true)
-    val both = sim.join(truth, Seq("a_id", "b_id"), "left_semi")
-    val nTruth = truth.count()
-    val nSim = sim.count()
-    val nBoth = both.count()
-    val spark = t.spark
-    import spark.implicits._
-    Seq((nTruth, nSim, nBoth,
-      if (nSim > 0) nBoth * 1000000L / nSim else 0L,
-      if (nTruth > 0) nBoth * 1000000L / nTruth else 0L))
-      .toDF("n_truth_pairs", "n_simhash_pairs", "n_agree",
-        "precision_ppm", "recall_ppm")
-  }
+  def tierEval(t: Tables): DataFrame =
+    // lazy: each tier's pipeline runs once, inside the query's own action
+    pairOverlap(ngramJaccardPairs(t), simhashPairs(t))
+      .select(col("n_x").as("n_truth_pairs"), col("n_y").as("n_simhash_pairs"),
+        col("n_both").as("n_agree"),
+        ppm("n_both", "n_y").as("precision_ppm"),
+        ppm("n_both", "n_x").as("recall_ppm"))
+
+  /** One-row set comparison of two distinct (a_id, b_id) pair frames:
+    * (n_x, n_y, n_both) = |x|, |y|, |x ∩ y|. One tagged union and one
+    * per-pair aggregation; the global aggregate is `count`, which is 0,
+    * not NULL, on an empty input.
+    */
+  private[graft] def pairOverlap(x: DataFrame, y: DataFrame): DataFrame =
+    x.select(col("a_id"), col("b_id"), lit(true).as("in_x"), lit(false).as("in_y"))
+      .unionByName(
+        y.select(col("a_id"), col("b_id"), lit(false).as("in_x"), lit(true).as("in_y")))
+      .groupBy("a_id", "b_id")
+      .agg(max(col("in_x")).as("in_x"), max(col("in_y")).as("in_y"))
+      .agg(count(when(col("in_x"), 1)).as("n_x"),
+        count(when(col("in_y"), 1)).as("n_y"),
+        count(when(col("in_x") && col("in_y"), 1)).as("n_both"))
+
+  /** `num · 10⁶ div den` in exact integers, 0 when `den` is not positive. */
+  private def ppm(num: String, den: String): Column =
+    when(col(den) > 0, expr(s"($num * 1000000L) div $den")).otherwise(0L)
 
   /** Oracle: both tiers' published oracle chains composed (simhash CTEs
     * prefixed sh*) + the same count folds.
     */
-  lazy val tierEvalSql: String = {
-    val bitSums = (0 until SimBits)
-      .map(j => s"SUM(CASE WHEN (h >> $j) & 1 = 1 THEN 1 ELSE -1 END) AS b$j")
-      .mkString(",\n   ")
-    val sigBits = (0 until SimBits)
-      .map(j => s"(CASE WHEN b$j > 0 THEN (CAST(1 AS BIGINT) << $j) ELSE 0 END)")
-      .mkString(" | ")
-    s"""WITH g AS (
-       | SELECT doc_id, ${Shingles.grams3Sql("text")} AS grams
-       | FROM documents),
+  lazy val tierEvalSql: String =
+    s"""$gramsCte,
        |truth AS (
-       | SELECT a.doc_id AS a_id, b.doc_id AS b_id
-       | FROM g a JOIN g b ON a.doc_id < b.doc_id
-       | WHERE CAST(len(list_distinct(list_intersect(a.grams, b.grams))) AS DOUBLE)
-       |    / len(list_distinct(list_concat(a.grams, b.grams))) >= 0.6),
-       |she AS (SELECT doc_id, unnest(grams) AS gram FROM g),
-       |shh AS (
-       | SELECT doc_id,
-       |  CAST('0x' || substr(md5(gram), 1, 15) AS BIGINT) AS h
-       | FROM she),
-       |shb AS (
-       | SELECT doc_id,
-       |   $bitSums
-       | FROM shh GROUP BY doc_id),
-       |shs AS (SELECT doc_id, $sigBits AS sig FROM shb),
-       |sim AS (
-       | SELECT a.doc_id AS a_id, b.doc_id AS b_id
-       | FROM shs a JOIN shs b ON a.doc_id < b.doc_id
-       | WHERE bit_count(xor(a.sig, b.sig)) <= 3),
+       | $jaccardPairsSql),
+       |$simhashPairsCtes,
        |agree AS (
        | SELECT * FROM sim WHERE EXISTS (
        |  SELECT 1 FROM truth WHERE truth.a_id = sim.a_id AND truth.b_id = sim.b_id)),
@@ -1125,7 +1152,6 @@ object Dedup {
        |   THEN (n_agree * 1000000) // n_truth_pairs ELSE 0 END AS BIGINT)
        |   AS recall_ppm
        |FROM c""".stripMargin
-  }
 
   /** Operating points probed by [[thresholdSweep]], in permille. */
   private val SweepPermille = Seq(500L, 600L, 700L, 800L)
@@ -1185,9 +1211,7 @@ object Dedup {
     */
   val thresholdSweepSql: String = {
     val permilles = SweepPermille.mkString(", ")
-    s"""WITH g AS (
-       | SELECT doc_id, ${Shingles.grams3Sql("text")} AS grams
-       | FROM documents),
+    s"""$gramsCte,
        |p AS (
        | SELECT a.doc_id AS a_id, b.doc_id AS b_id,
        |  CAST(len(list_distinct(list_intersect(a.grams, b.grams))) AS DOUBLE)
@@ -1226,60 +1250,28 @@ object Dedup {
     * my config even see" number that decides whether to add a tier.
     *
     * Scale: both tiers are the already-audited Σ|bucket|² pipelines;
-    * the overlap is a semi-join of two dup-pair lists (tiny by
-    * construction). Everything after is 1-row arithmetic.
+    * the overlap is one [[pairOverlap]] aggregation over two dup-pair
+    * lists (tiny by construction). Everything after is 1-row
+    * arithmetic.
     */
-  def captureRecapture(t: Tables): DataFrame = {
-    // pinned: each list feeds its own count AND the overlap semi-join
-    val lsh = minhashLsh(t).select("a_id", "b_id").localCheckpoint(true)
-    val sim = simhash(t).select("a_id", "b_id").localCheckpoint(true)
-    val n1 = lsh.count()
-    val n2 = sim.count()
-    val m = lsh.join(sim, Seq("a_id", "b_id"), "left_semi").count()
-    val est = (n1 + 1) * (n2 + 1) / (m + 1) - 1
-    val spark = t.spark
-    import spark.implicits._
-    Seq((n1, n2, m, est,
-      if (est > 0) n1 * 1000000L / est else 0L,
-      if (est > 0) n2 * 1000000L / est else 0L))
-      .toDF("n_lsh", "n_simhash", "n_both", "chapman_est",
-        "lsh_coverage_ppm", "simhash_coverage_ppm")
-  }
+  def captureRecapture(t: Tables): DataFrame =
+    pairOverlap(minhashLshPairs(t), simhashPairs(t))
+      .withColumn("est", expr("(n_x + 1) * (n_y + 1) div (n_both + 1) - 1"))
+      .select(col("n_x").as("n_lsh"), col("n_y").as("n_simhash"), col("n_both"),
+        col("est").as("chapman_est"),
+        ppm("n_x", "est").as("lsh_coverage_ppm"),
+        ppm("n_y", "est").as("simhash_coverage_ppm"))
 
   /** Oracle: both tiers' published oracle chains (brute-force truth for
     * the verified-LSH tier — its banding is complete at the data's
     * similarity gap — and the rebuilt 60-bit signatures for SimHash)
     * composed with the same Chapman arithmetic.
     */
-  lazy val captureRecaptureSql: String = {
-    val bitSums = (0 until SimBits)
-      .map(j => s"SUM(CASE WHEN (h >> $j) & 1 = 1 THEN 1 ELSE -1 END) AS b$j")
-      .mkString(",\n   ")
-    val sigBits = (0 until SimBits)
-      .map(j => s"(CASE WHEN b$j > 0 THEN (CAST(1 AS BIGINT) << $j) ELSE 0 END)")
-      .mkString(" | ")
-    s"""WITH g AS (
-       | SELECT doc_id, ${Shingles.grams3Sql("text")} AS grams
-       | FROM documents),
+  lazy val captureRecaptureSql: String =
+    s"""$gramsCte,
        |lsh AS (
-       | SELECT a.doc_id AS a_id, b.doc_id AS b_id
-       | FROM g a JOIN g b ON a.doc_id < b.doc_id
-       | WHERE CAST(len(list_distinct(list_intersect(a.grams, b.grams))) AS DOUBLE)
-       |    / len(list_distinct(list_concat(a.grams, b.grams))) >= 0.6),
-       |she AS (SELECT doc_id, unnest(grams) AS gram FROM g),
-       |shh AS (
-       | SELECT doc_id,
-       |  CAST('0x' || substr(md5(gram), 1, 15) AS BIGINT) AS h
-       | FROM she),
-       |shb AS (
-       | SELECT doc_id,
-       |   $bitSums
-       | FROM shh GROUP BY doc_id),
-       |shs AS (SELECT doc_id, $sigBits AS sig FROM shb),
-       |sim AS (
-       | SELECT a.doc_id AS a_id, b.doc_id AS b_id
-       | FROM shs a JOIN shs b ON a.doc_id < b.doc_id
-       | WHERE bit_count(xor(a.sig, b.sig)) <= 3),
+       | $jaccardPairsSql),
+       |$simhashPairsCtes,
        |ovl AS (
        | SELECT * FROM lsh WHERE EXISTS (
        |  SELECT 1 FROM sim WHERE sim.a_id = lsh.a_id AND sim.b_id = lsh.b_id)),
@@ -1296,7 +1288,6 @@ object Dedup {
        | CAST(CASE WHEN est > 0 THEN (n2 * 1000000) // est ELSE 0 END AS BIGINT)
        |   AS simhash_coverage_ppm
        |FROM e""".stripMargin
-  }
 
   /** Signature components audited by [[minhashAudit]] — deliberately
     * SMALL (a 16-component sketch is what you'd actually ship per doc
@@ -1358,9 +1349,7 @@ object Dedup {
     val matchSum = (0 until AuditK)
       .map(i => s"(CASE WHEN sa.s$i = sb.s$i THEN 1 ELSE 0 END)")
       .mkString(" + ")
-    s"""WITH g AS (
-       | SELECT doc_id, ${Shingles.grams3Sql("text")} AS grams
-       | FROM documents),
+    s"""$gramsCte,
        |gg AS (SELECT doc_id, grams FROM g WHERE len(grams) > 0),
        |sig AS (
        | SELECT doc_id,

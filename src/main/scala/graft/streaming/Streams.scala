@@ -1242,8 +1242,7 @@ object Streams {
           .withColumn("sz", size(col("grams")))
           .select("doc_id", "ts", "sz", "hg", "grams"))
       .drop("grams")
-    def lenOk(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-      least(a, b).cast("double") >= lit(thr) * greatest(a, b)
+    val lenOk = graft.operators.Dedup.lengthCompatible(_, _, thr)
     // (a) standing-corpus probes: stateless stream-static equi-join
     val corpusHits = banded
       .join(corpusIndex, Seq("band_idx", "band_hash"))

@@ -221,6 +221,22 @@ class DedupSpec extends SparkSpec {
         s"limit=$limit: $labels")
       assert(labels(99L) == 99L, s"limit=$limit")
     }
+    // two distributed rounds leave the chain's tail unlabelled: the
+    // round cap fails loudly instead of returning partial labels
+    val e = intercept[IllegalArgumentException](
+      Dedup.propagateLabels(nodes, pairs, maxRounds = 2, driverEdgeLimit = 0L))
+    assert(e.getMessage.contains("propagateLabels did not converge after 2 rounds"),
+      e.getMessage)
+  }
+
+  test("pair overlap of empty or disjoint pair sets is one row with no shared pair") {
+    val empty = Seq.empty[(Long, Long)].toDF("a_id", "b_id")
+    val x = Seq((1L, 2L), (1L, 3L)).toDF("a_id", "b_id")
+    val y = Seq((2L, 3L)).toDF("a_id", "b_id")
+    Seq((empty, empty, (0L, 0L, 0L)), (x, y, (2L, 1L, 0L))).foreach { case (a, b, want) =>
+      val rows = Dedup.pairOverlap(a, b).as[(Long, Long, Long)].collect()
+      assert(rows.toSeq == Seq(want))
+    }
   }
 
   test("ann brute-force topk returns 10 ordered neighbours") {

@@ -1,14 +1,15 @@
 package graft
 
-import graft.operators.{Graph, Relational7}
+import graft.operators.{Dedup, Graph, Relational7}
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 
-/** The per-pass tax of the job-heavy iterative operators, pinned on
-  * sf0.001: a repeated run reuses its generated classes (GraftSession sizes
-  * Spark's JVM-wide codegen cache above their working set), and each run
-  * stays within a job ceiling counted by job group over the build and a
-  * full `noop` write of the result.
+/** The per-pass tax of the job-heavy operators (iterative loops and the
+  * dedup tier comparisons), pinned on sf0.001: a repeated run reuses its
+  * generated classes (GraftSession sizes Spark's JVM-wide codegen cache
+  * above their working set), and each run stays within a job ceiling
+  * counted by job group over the build and a full `noop` write of the
+  * result.
   */
 class JobBudgetSpec extends SparkSpec {
 
@@ -23,7 +24,9 @@ class JobBudgetSpec extends SparkSpec {
     ("graph_kcore", Graph.kcore, 10),
     ("graph_ktruss", Graph.ktruss, 19),
     ("graph_personal_pagerank", Graph.personalPageRank, 30),
-    ("q_abc_xyz", Relational7.abcXyz, 16))
+    ("q_abc_xyz", Relational7.abcXyz, 16),
+    ("dedup_tier_eval", Dedup.tierEval, 16),
+    ("dedup_capture_recapture", Dedup.captureRecapture, 11))
 
   /** Classes a warm run may still compile: a tenth of the ~200-class
     * working set, which Spark's default 100-entry cache recompiles in
