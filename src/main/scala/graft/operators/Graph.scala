@@ -1,23 +1,32 @@
 package graft.operators
 
 import graft.Tables
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
-/** Iterative graph algorithms over DataFrames — the Pregel-shaped
-  * message-passing loop expressed as join + aggregate per superstep,
-  * which is exactly how a 1000-executor cluster wants it: each
-  * superstep is one join (messages out along edges) plus one
-  * aggregation (combine at the receiver), over (node, rank) pairs —
-  * never the source fact table.
+/** Iterative graph algorithms over the mined co-purchase graph, in two
+  * shapes.
   *
-  * With a FIXED superstep count the whole dataflow stays lazy (one
-  * fused job, no driver actions); the edge relation is persisted so
-  * every superstep reads the mined graph, not the mining pipeline.
-  * Loops whose round count depends on the data ([[bfsHops]], [[kcore]],
-  * [[ktruss]]) run through one helper, [[untilRowCountStable]]: it pins
-  * every round with a localCheckpoint, which keeps lineage linear, and
-  * reads the round's row count from that same action.
+  * Most operators run the Pregel-shaped message-passing loop as
+  * DataFrames: each superstep is one join (messages out along edges)
+  * plus one aggregation (combine at the receiver), over (node, rank)
+  * pairs — never the source fact table. With a FIXED superstep count
+  * the whole dataflow stays lazy (one fused job, no driver actions); the
+  * edge relation is pinned once per session so every superstep reads
+  * the mined graph, not the mining pipeline. Loops whose round count
+  * depends on the data ([[bfsHops]], [[kcore]], [[ktruss]]) run through
+  * one helper, [[untilRowCountStable]]: it pins every round with a
+  * localCheckpoint, which keeps lineage linear, and reads the round's
+  * row count from that same action.
+  *
+  * [[betweenness]] and [[personalPageRank]] instead iterate INSIDE
+  * tasks, over one broadcast CSR [[Adjacency]] of the mined edges
+  * (bounded by [[MaxAdjacencyEdges]]): the support-mined graph is tiny
+  * next to the facts, and a per-level or per-superstep Spark job costs
+  * far more in scheduling than the level's work. Only their fact-scale
+  * inputs (the personalised teleport pick) and their final ranking stay
+  * Spark plans.
   *
   * All rank arithmetic is INTEGER femto-units (10⁻¹⁵ of total mass)
   * with truncating division — deterministic under any partitioning and
@@ -54,10 +63,10 @@ object Graph {
     */
   private val minedPairsMemo = new graft.SessionMemo[DataFrame]
 
-  /** [[graft.Training]] forcer for the mined pair graph + its doubled
-    * edge form.
+  /** [[graft.Training]] forcer for the mined pair graph, its doubled
+    * edge form and the broadcast [[Adjacency]] built from it.
     */
-  private[graft] def warmEdges(t: Tables): Unit = { edgesShared(t); () }
+  private[graft] def warmEdges(t: Tables): Unit = { adjacencyShared(t); () }
 
   private def minedPairsShared(t: Tables): DataFrame =
     minedPairsMemo.getOrCompute(t.spark, t.dir)(
@@ -79,6 +88,50 @@ object Graph {
           struct(col("b_part").as("u"), col("a_part").as("v")))).as("e"))
         .select(col("e.u").as("u"), col("e.v").as("v"))
         .localCheckpoint(true))
+
+  /** Directed edges [[adjacencyShared]] collects at most: 10⁶, about
+    * 300× the mined graph at sf0.01–sf0.1 (≈ 6.9k edges). At the bound
+    * the CSR arrays take about 4 MB of neighbour indices plus at most
+    * 12 MB of node ids and offsets, broadcast once per session; the
+    * collect itself holds up to 10⁶ + 1 two-long rows on the driver.
+    */
+  private[graft] val MaxAdjacencyEdges = 1000000
+
+  /** The mined edge set as a compressed sparse row graph: node `i` has
+    * id `ids(i)` (ascending) and neighbours `nbrs(offsets(i) until
+    * offsets(i + 1))`, as indices into `ids`, ascending.
+    */
+  private[graft] final class Adjacency(val ids: Array[Long],
+      val offsets: Array[Int], val nbrs: Array[Int]) extends Serializable {
+    def size: Int = ids.length
+    def degree(i: Int): Int = offsets(i + 1) - offsets(i)
+    /** Index of node `id`, negative when it is not a node. */
+    def indexOf(id: Long): Int = java.util.Arrays.binarySearch(ids, id)
+  }
+
+  /** [[edgesShared]] collected once per (session, dir) into an
+    * [[Adjacency]] and broadcast; the memo holds the `Broadcast` itself,
+    * so every consumer ships the same block. The collect reads at most
+    * [[MaxAdjacencyEdges]] + 1 rows and fails, naming both, above the
+    * bound.
+    */
+  private val adjacencyMemo = new graft.SessionMemo[Broadcast[Adjacency]]
+
+  private def adjacencyShared(t: Tables): Broadcast[Adjacency] =
+    adjacencyMemo.getOrCompute(t.spark, t.dir) {
+      val rows = edgesShared(t).limit(MaxAdjacencyEdges + 1).collect()
+      require(rows.length <= MaxAdjacencyEdges,
+        s"adjacency bound exceeded: the mined co-purchase graph has at least ${rows.length} " +
+          s"directed edges, above MaxAdjacencyEdges = $MaxAdjacencyEdges")
+      val edges = rows.map(r => (r.getLong(0), r.getLong(1))).sorted
+      // the edge set is symmetric, so every endpoint is a source too
+      val ids = edges.map(_._1).distinct
+      val offsets = new Array[Int](ids.length + 1)
+      edges.foreach { case (u, _) => offsets(java.util.Arrays.binarySearch(ids, u) + 1) += 1 }
+      for (i <- ids.indices) offsets(i + 1) += offsets(i)
+      val nbrs = edges.map { case (_, v) => java.util.Arrays.binarySearch(ids, v) }
+      t.spark.sparkContext.broadcast(new Adjacency(ids, offsets, nbrs))
+    }
 
   /** Oracle twin of [[minedPairsShared]]: the CTEs `items` and
     * `cp(a, b)`, the canonical a < b pairs at support [[EdgeSupport]].
@@ -179,73 +232,59 @@ object Graph {
     * parts (the customer holding the MOST distinct graph-node parts,
     * tie-broken by min custkey — a deterministic, plan-side pick), so
     * rank mass diffuses outward from their basket instead of spreading
-    * uniformly. Same one-join + one-aggregation superstep as
-    * [[pageRank]]; the per-receiver teleport mass rides the edge
-    * relation exactly like the receiver degree, so the loop body is
-    * unchanged in shape. Seed = the teleport distribution itself
-    * (`Mass div |S|` on teleport nodes, 0 elsewhere); update
+    * uniformly. Seed = the teleport distribution itself (`Mass div |S|`
+    * on teleport nodes, 0 elsewhere); update
     * `r_v = (15·tm_v) div 100 + (85·Σ r_u div d_u) div 100` in exact
     * femto-longs, replayed verbatim by the unrolled-CTE oracle.
     *
-    * Scale: the customer-parts frame semi-joins the fact table against
-    * the BROADCAST node set (the support-mined graph is orders of
-    * magnitude smaller than the part dimension); the top-1 customer is
-    * a TakeOrdered, never a driver sort.
+    * Scale: the teleport pick is the one fact-scale step and stays a
+    * Spark plan — `orders ⋈ lineitem`, filtered to graph nodes by a
+    * lookup in the broadcast [[Adjacency]], one `collect_set` per
+    * customer and a TakeOrdered top-1. Its single row, that customer's
+    * parts, is a subset of the nodes, so collecting it is bounded by
+    * [[MaxAdjacencyEdges]]. The [[Iters]] supersteps then run in ONE
+    * task over the broadcast adjacency (O(Iters·edges) long adds, with
+    * overflow failing as Spark's ANSI arithmetic would), and only the
+    * final ordering is a Spark sort.
     */
   def personalPageRank(t: Tables): DataFrame = {
-    val edges = edgesShared(t)
-    val deg = edges.groupBy("u").agg(count(lit(1)).as("d"))
-    // distinct (customer, part) pairs restricted to graph nodes
-    val cparts = t.orders.select(col("o_custkey"), col("o_orderkey"))
-      .join(t.lineitem.select(col("l_orderkey"), col("l_partkey")),
-        col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(deg.select(col("u").as("gn"))), col("l_partkey") === col("gn"))
-      .select(col("o_custkey"), col("l_partkey")).distinct()
-    val pick = cparts.groupBy("o_custkey").agg(count(lit(1)).as("np"))
-      .orderBy(col("np").desc, col("o_custkey")).limit(1)
-      .select(col("o_custkey").as("pc"))
-    val tele = cparts.join(broadcast(pick), col("o_custkey") === col("pc"))
-      .select(col("l_partkey").as("tnode"))
-    val sRow = tele.agg(count(lit(1)).as("s"))
-    // per-node teleport mass: Mass div |S| on teleport nodes, else 0.
-    // Pinned once: the edge attach below AND the rank seed read it, so
-    // the orders⋈lineitem teleport pick runs in this one action instead
-    // of again inside the final query's lazy seed
-    val tm = deg.join(tele, col("u") === col("tnode"), "left")
-      .crossJoin(broadcast(sRow))
-      .select(col("u").as("node"), col("d"),
-        when(col("tnode").isNotNull, expr(s"${Mass}L div s"))
-          .otherwise(lit(0L)).as("tm"))
-      .localCheckpoint(true)
-    // receiver degree AND receiver teleport mass ride the edges. Not
-    // pre-partitioned by the superstep key: AQE's final plan re-shuffles
-    // the checkpointed edges by u and broadcasts them into every
-    // superstep join anyway, so a repartition only adds a shuffle to this
-    // pin (the finding behind [[pageRank]]'s unpartitioned edges too)
-    val edgesD = edges
-      .join(tm.select(col("node").as("dv"), col("d").as("vd"),
-        col("tm").as("vtm")), col("v") === col("dv"))
-      .select(col("u"), col("v"), col("vd"), col("vtm"))
-      .localCheckpoint(true)
-    var ranks = tm.select(col("node"), col("d"), col("tm").as("r"))
-    for (i <- 1 to Iters) {
-      val contrib = ranks.select(col("node").as(s"cu$i"),
-        expr("r div d").as(s"c$i"))
-      ranks = edgesD.join(contrib, col("u") === col(s"cu$i"))
-        .groupBy(col("v"))
-        .agg(sum(col(s"c$i")).as(s"s$i"), first(col("vd")).as("d"),
-          first(col("vtm")).as("tm"))
-        .select(col("v").as("node"), col("d"),
-          expr(s"(15L * tm) div 100L + (85L * s$i) div 100L").as("r"),
-          col("tm"))
-        .select(col("node"), col("d"), col("r"), col("tm"))
-    }
-    ranks
-      .select(col("node").as("p_partkey"),
-        (col("tm") > 0).cast("long").as("in_teleport"),
-        col("r").as("rank_femto"),
-        (col("r").cast("double") / lit(1e15)).as("rank"))
+    val spark = t.spark
+    import spark.implicits._
+    val g = adjacencyShared(t)
+    val isNode = udf((p: Long) => g.value.indexOf(p) >= 0)
+    val pick = t.orders.select(col("o_custkey"), col("o_orderkey"))
+      .join(t.lineitem.select(col("l_orderkey"), col("l_partkey"))
+        .where(isNode(col("l_partkey"))), col("l_orderkey") === col("o_orderkey"))
+      .groupBy("o_custkey").agg(collect_set(col("l_partkey")).as("parts"))
+      .orderBy(size(col("parts")).desc, col("o_custkey")).limit(1)
+      .select(col("parts")).collect()
+    val tele = pick.flatMap(_.getSeq[Long](0)).map(g.value.indexOf)
+    spark.sparkContext.parallelize(Seq(0), 1)
+      .flatMap(_ => personalRanks(g.value, tele))
+      .toDF("p_partkey", "in_teleport", "rank_femto")
+      .select(col("p_partkey"), col("in_teleport"), col("rank_femto"),
+        (col("rank_femto").cast("double") / lit(1e15)).as("rank"))
       .orderBy(col("rank_femto").desc, col("p_partkey"))
+  }
+
+  /** [[personalPageRank]]'s supersteps over `g` from teleport node
+    * indices `tele`: (node id, in_teleport, rank_femto) for every node.
+    */
+  private def personalRanks(g: Adjacency, tele: Array[Int]): Iterator[(Long, Long, Long)] = {
+    val tm = new Array[Long](g.size)
+    tele.foreach(i => tm(i) = Mass / tele.length)
+    var r = tm
+    for (_ <- 1 to Iters) {
+      val s = new Array[Long](g.size)
+      for (u <- 0 until g.size) {
+        val c = r(u) / g.degree(u)
+        for (j <- g.offsets(u) until g.offsets(u + 1))
+          s(g.nbrs(j)) = Math.addExact(s(g.nbrs(j)), c)
+      }
+      r = Array.tabulate(g.size)(v => Math.addExact(
+        Math.multiplyExact(15L, tm(v)) / 100L, Math.multiplyExact(85L, s(v)) / 100L))
+    }
+    Iterator.range(0, g.size).map(v => (g.ids(v), if (tm(v) > 0) 1L else 0L, r(v)))
   }
 
   /** Oracle: the personalized teleport pick + five unrolled supersteps
@@ -1066,106 +1105,33 @@ object Graph {
     * Bader/Brandes-style pivoting — both public knowledge): dependency
     * scores accumulated from [[BcSources]] deterministic source BFS
     * trees, the standard "who sits on the shortest paths" ranking for
-    * bridge detection. Forward phase: ONE level-synchronous BFS carries
-    * all sources at once (state keyed (source, node) — k× rows, same
-    * round count), per level one edge join + one aggregation to the
-    * fixed [[BcDepth]] horizon. Backward phase: Brandes' accumulation
-    * δ(v) = Σ_{w∈succ} σ(v)/σ(w)·(1+δ(w)) evaluated in EXACT INTEGER
-    * MICROS — each term is `(σ_v·(10⁶+δ_w)) div σ_w`, so per-node sums
-    * are order-free integer adds and the score is engine-portable
-    * bit-for-bit (the graph_hits femto convention; a double Σ here
-    * would be partitioning-dependent).
+    * bridge detection. Per source: a BFS to the fixed [[BcDepth]]
+    * horizon summing shortest-path counts σ, then Brandes' backward
+    * accumulation δ(v) = Σ_{w∈succ} σ(v)/σ(w)·(1+δ(w)) evaluated in
+    * EXACT INTEGER MICROS — each term is `(σ_v·(10⁶+δ_w)) div σ_w`, so
+    * per-node sums are order-free integer adds and the score is
+    * engine-portable bit-for-bit (the graph_hits femto convention; a
+    * double Σ here would be partitioning-dependent). Every node at
+    * level ≥ 1 scores, the zero-δ leaves included; the sources do not.
     *
-    * The per-level aggregation does three jobs at once. The edge set is
-    * symmetric, so a neighbour of a depth r−1 node sits at depth r−2,
-    * r−1 or r: levels r−1 and r−2 join the `groupBy(s, node)` as marker
-    * rows (`max(seen)`) and drop their keys, which is exactly the
-    * anti-join against every visited node without a visited set. The
-    * same fold sums σ and records each fresh node's shortest-path
-    * predecessors `(p, σ_p)` with `collect_list`, so a backward level
-    * explodes the deeper level's predecessor lists into Brandes terms
-    * and folds them with its own rows in one more `groupBy(s, node)` —
-    * no edge join and no join back to the level. Every level pins via
-    * one eager localCheckpoint (the fixpoint convention) whose row
-    * count, read by `observe` on that same action, drives the early
-    * exit.
-    *
-    * Scale: [[BcDepth]] edge-linear shuffles forward and one
-    * predecessor-linear shuffle per level backward, state ≤ sources ×
-    * nodes, no pair space; the sampled-sources design is exactly how
-    * betweenness is run on big graphs (exact all-pairs is O(nm)).
+    * Scale: Brandes is independent per source, so the sources become
+    * ONE Spark stage with one task each, and every task runs its whole
+    * BFS and accumulation over the broadcast [[Adjacency]] (O(nodes +
+    * edges) per source, bounded by [[MaxAdjacencyEdges]]), failing on
+    * long overflow as Spark's ANSI arithmetic would. Only the per-node
+    * sum over sources and the top-[[BcTopK]] ordering are Spark
+    * operators. The sampled-sources design is exactly how betweenness
+    * is run on big graphs (exact all-pairs is O(nm)).
     */
   def betweenness(t: Tables): DataFrame = {
     val spark = t.spark
     import spark.implicits._
-    val edges = edgesShared(t)
-    val srcs = edges.select(col("u")).distinct().orderBy("u")
-      .limit(BcSources).as[Long].collect().toSeq
-    if (srcs.isEmpty)
-      return Seq.empty[(Long, Long, Double)]
-        .toDF("p_partkey", "bc_micros", "bc")
-    val pred = "struct<p:bigint,sp:bigint>"
-    // level 0: the sources themselves (no predecessors — they never score)
-    val f0 = srcs.map(s => (s, s, 1L)).toDF("s", "node", "sigma").localCheckpoint(true)
-    var levels = Vector(f0)
-    // a level's marker rows: seen = 1, no σ, no predecessor
-    def seen(level: DataFrame): DataFrame =
-      level.select(col("s"), col("node"), lit(1).as("seen"),
-        lit(null).cast("long").as("sigma"), lit(null).cast(pred).as("pred"))
-    // early exit once every source's frontier drains — an empty level
-    // contributes nothing to either phase, so the result is identical
-    // to running the oracle's full fixed unroll, but a small-diameter
-    // graph skips the dead rounds' job latency (the dominant cost here)
-    var r = 1
-    var drained = false
-    while (r <= BcDepth && !drained) {
-      val expanded = levels.last
-        .join(edges, col("node") === col("u"))
-        .select(col("s"), col("v").as("node"), lit(0).as("seen"),
-          col("sigma"), struct(col("node").as("p"), col("sigma").as("sp")).as("pred"))
-      val markers = levels.takeRight(2).map(seen).reduce(_ unionByName _)
-      val rows = new Observation(s"bc_level_$r")
-      val fresh = expanded.unionByName(markers)
-        .groupBy(col("s"), col("node"))
-        .agg(max(col("seen")).as("seen"), sum(col("sigma")).as("sigma"),
-          collect_list(col("pred")).as("preds"))
-        .where(col("seen") === 0)
-        .select(col("s"), col("node"), col("sigma"), col("preds"))
-        .observe(rows, count(lit(1)).as("n"))
-        .localCheckpoint(true)
-      if (rows.get("n") == 0L) drained = true
-      else levels :+= fresh
-      r += 1
-    }
-    // backward: level l's deltas fold the Brandes terms of ONLY the
-    // immediately deeper level (successors of a dist-l node on a
-    // shortest path sit at dist l+1 by construction) — each deeper row
-    // sends one term to each of its recorded predecessors
-    val maxL = levels.size - 1
-    var deltas = levels(maxL)
-      .select(col("s"), col("node"), col("sigma"), col("preds"), lit(0L).as("delta"))
-    val acc = scala.collection.mutable.ArrayBuffer(deltas)
-    for (l <- maxL - 1 to 1 by -1) {
-      val terms = deltas
-        .select(col("s"), col("sigma").as("wsig"), col("delta").as("wdelta"),
-          explode(col("preds")).as("pr"))
-        .select(col("s"), col("pr.p").as("node"),
-          lit(null).cast("long").as("sigma"),
-          lit(null).cast(s"array<$pred>").as("preds"),
-          expr(s"(pr.sp * ($BcScale + wdelta)) div wsig").as("term"))
-      deltas = levels(l)
-        .select(col("s"), col("node"), col("sigma"), col("preds"), lit(0L).as("term"))
-        .unionByName(terms)
-        .groupBy(col("s"), col("node"))
-        .agg(max(col("sigma")).as("sigma"),
-          flatten(collect_list(col("preds"))).as("preds"),
-          sum(col("term")).as("delta"))
-        .localCheckpoint(true)
-      acc += deltas
-    }
-    // level 0 (the sources) never scores, so its deltas are not built;
-    // level 1 always exists (every source is an edge endpoint)
-    acc.map(_.select(col("node"), col("delta"))).reduce(_ union _)
+    val g = adjacencyShared(t)
+    // the node ids are sorted, so the sources are the first indices
+    val k = math.min(BcSources, g.value.size)
+    spark.sparkContext.parallelize(0 until k, math.max(k, 1))
+      .flatMap(s => brandes(g.value, s))
+      .toDF("node", "delta")
       .groupBy("node")
       .agg(sum(col("delta")).cast("long").as("bc_micros"))
       .select(col("node").as("p_partkey"), col("bc_micros"),
@@ -1174,8 +1140,38 @@ object Graph {
       .limit(BcTopK)
   }
 
-  /** Oracle: the identical level-synchronous forward rounds and
-    * integer-micro backward accumulation, unrolled as materialized
+  /** One source's Brandes pass for [[betweenness]]: (node id, δ) for
+    * every node at BFS level 1 to [[BcDepth]] from node index `s`.
+    */
+  private def brandes(g: Adjacency, s: Int): Iterator[(Long, Long)] = {
+    val dist = Array.fill(g.size)(-1)
+    val sigma = new Array[Long](g.size)
+    dist(s) = 0
+    sigma(s) = 1L
+    val levels = scala.collection.mutable.ArrayBuffer(Array(s))
+    // a drained frontier ends the BFS early: an empty level adds nothing
+    while (levels.size <= BcDepth && levels.last.nonEmpty) {
+      val d = levels.size
+      val next = scala.collection.mutable.ArrayBuilder.make[Int]
+      for (v <- levels.last; j <- g.offsets(v) until g.offsets(v + 1)) {
+        val w = g.nbrs(j)
+        if (dist(w) < 0) { dist(w) = d; next += w }
+        if (dist(w) == d) sigma(w) = Math.addExact(sigma(w), sigma(v))
+      }
+      levels += next.result()
+    }
+    val delta = new Array[Long](g.size)
+    for (l <- levels.size - 2 to 1 by -1; v <- levels(l);
+         j <- g.offsets(v) until g.offsets(v + 1)) {
+      val w = g.nbrs(j)
+      if (dist(w) == l + 1) delta(v) = Math.addExact(delta(v),
+        Math.multiplyExact(sigma(v), Math.addExact(BcScale, delta(w))) / sigma(w))
+    }
+    levels.iterator.drop(1).flatMap(_.iterator.map(v => (g.ids(v), delta(v))))
+  }
+
+  /** Oracle: the same BFS levels and integer-micro backward
+    * accumulation, unrolled level by level as materialized
     * CTEs ([[pageRankSql]] convention — every level is referenced
     * twice, so inlining would re-derive the chain exponentially).
     */

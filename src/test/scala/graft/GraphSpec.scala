@@ -254,6 +254,38 @@ class GraphSpec extends SparkSpec {
     assert(got.exists(_._2 > 0L))
   }
 
+  test("personal pagerank on the sf graph matches an in-memory integer replay") {
+    val items = sf.lineitem.select("l_orderkey", "l_partkey").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).distinct
+    val pairs = items.groupBy(_._1).values.toSeq
+      .flatMap(es => { val ps = es.map(_._2).toSet
+        for (a <- ps; b <- ps if a < b) yield (a, b) })
+      .groupBy(identity).view.mapValues(_.size).filter(_._2 >= 2).keys.toSeq
+    val edges = pairs ++ pairs.map(_.swap)
+    val deg = edges.groupBy(_._1).view.mapValues(_.size.toLong).toMap
+    // teleport: the customer with the most distinct graph-node parts,
+    // ties to the smallest custkey
+    val custOf = sf.orders.select("o_orderkey", "o_custkey").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val cparts = items.flatMap { case (o, p) => custOf.get(o).map(_ -> p) }
+      .filter(cp => deg.contains(cp._2)).distinct.groupBy(_._1)
+    val pick = cparts.keys.minBy(c => (-cparts(c).length, c))
+    val tele = cparts(pick).map(_._2).toSet
+    val tm = deg.keys.map(n => n -> (if (tele(n)) Mass / tele.size else 0L)).toMap
+    var rank = tm
+    for (_ <- 1 to 5) {
+      val inbox = scala.collection.mutable.Map[Long, Long]().withDefaultValue(0L)
+      edges.foreach { case (u, v) => inbox(v) += rank(u) / deg(u) }
+      rank = inbox.map { case (v, s) => v -> (15L * tm(v) / 100L + 85L * s / 100L) }.toMap
+    }
+    val exp = rank.toSeq.map { case (n, r) => (n, if (tm(n) > 0) 1L else 0L, r) }
+      .sortBy { case (n, _, r) => (-r, n) }
+    val got = Graph.personalPageRank(sf).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(got == exp, s"first diff: ${got.zip(exp).find(p => p._1 != p._2)}")
+    assert(tele.nonEmpty && got.exists(_._3 > 0L))
+  }
+
   test("components on the sf graph matches a union-find replay over the mined pairs") {
     val items = sf.lineitem.select("l_orderkey", "l_partkey").collect()
       .map(r => (r.getLong(0), r.getLong(1))).distinct
@@ -354,18 +386,23 @@ class GraphSpec extends SparkSpec {
     assert(got == (0L to 30L).map(h => (h + 1) -> h), s"got $got")
   }
 
-  test("bfs hops, kcore and ktruss return no rows when no pair reaches the edge support") {
+  test("bfs hops, kcore, ktruss, betweenness and personal pagerank return no rows when no pair reaches the edge support") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-empty-graph").toString
     // every pair is bought together in one order only: no mined edge
     Seq((10L, 1L), (10L, 2L), (11L, 2L), (11L, 3L), (12L, 1L), (12L, 3L))
       .toDF("l_orderkey", "l_partkey")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+    // personalised PageRank's teleport pick reads the orders too
+    Seq((10L, 100L), (11L, 100L), (12L, 101L)).toDF("o_orderkey", "o_custkey")
+      .write.mode("overwrite").parquet(s"$dir/orders.parquet")
     val t = Tables(spark, dir)
     Seq(
       Graph.bfsHops(t) -> Seq("p_partkey", "hops"),
       Graph.kcore(t) -> Seq("p_partkey", "core_degree"),
-      Graph.ktruss(t) -> Seq("a_part", "b_part", "truss_support"))
+      Graph.ktruss(t) -> Seq("a_part", "b_part", "truss_support"),
+      Graph.betweenness(t) -> Seq("p_partkey", "bc_micros", "bc"),
+      Graph.personalPageRank(t) -> Seq("p_partkey", "in_teleport", "rank_femto", "rank"))
       .foreach { case (df, cols) =>
         assert(df.columns.toSeq == cols)
         assert(df.collect().isEmpty, cols.mkString(","))

@@ -19,21 +19,21 @@ class JobBudgetSpec extends SparkSpec {
     * runs.
     */
   private val ceilings = Seq[(String, Tables => DataFrame, Int)](
-    ("graph_betweenness", Graph.betweenness, 21),
+    ("graph_betweenness", Graph.betweenness, 2),
     ("graph_bfs_hops", Graph.bfsHops, 17),
     ("graph_kcore", Graph.kcore, 10),
     ("graph_ktruss", Graph.ktruss, 19),
-    ("graph_personal_pagerank", Graph.personalPageRank, 30),
+    ("graph_personal_pagerank", Graph.personalPageRank, 8),
     ("q_abc_xyz", Relational7.abcXyz, 16),
     ("dedup_tier_eval", Dedup.tierEval, 16),
     ("dedup_capture_recapture", Dedup.captureRecapture, 11))
 
   /** Classes a warm run may still compile: a tenth of the ~200-class
     * working set, which Spark's default 100-entry cache recompiles in
-    * full on every run. AQE picks the broadcast side of a personalised-
-    * PageRank superstep join by which query stage finishes first, and
-    * each flip compiles one new stage class for the driver's and one for
-    * the executors' class loader; measured runs compiled 0 to 8.
+    * full on every run. AQE picks the broadcast side of a join by which
+    * query stage finishes first, and each flip compiles one new stage
+    * class for the driver's and one for the executors' class loader;
+    * measured runs compiled 0 to 8.
     */
   private val BuildSideFlipClasses = 20
 
